@@ -488,11 +488,12 @@ object Dedup {
                       maxBucket: Int = 1000): Unit = {
     require(buckets >= 1)
     val spark = corpus.sparkSession
-    portableBanded(corpus, nGram, nHashes, bands, maxBucket, carry = Nil)
-      .select(col("doc_id"), col("_sh"), col("_b"), col("_k"))
-      .withColumn("idx_b",
-        pmod(xxhash64(col("_b"), col("_k")), lit(buckets.toLong)).cast("int"))
-      .repartition(col("idx_b"))
+    LeafWrite.byLeaf(
+      portableBanded(corpus, nGram, nHashes, bands, maxBucket, carry = Nil)
+        .select(col("doc_id"), col("_sh"), col("_b"), col("_k"))
+        .withColumn("idx_b",
+          pmod(xxhash64(col("_b"), col("_k")), lit(buckets.toLong)).cast("int")),
+      "idx_b")
       .write.mode("overwrite")
       // STATIC pin: a dynamic-mode rebuild over a shrunk corpus would only
       // truncate touched buckets, resurrecting stale signatures
@@ -618,11 +619,12 @@ object Dedup {
   def appendToDedupIndex(accepted: DataFrame, indexPath: String): Unit = {
     val spark = accepted.sparkSession
     val (nGram, nHashes, bands, buckets) = readDedupIndexMeta(spark, indexPath)
-    portableBanded(accepted, nGram, nHashes, bands, maxBucket = 0, carry = Nil)
-      .select(col("doc_id"), col("_sh"), col("_b"), col("_k"))
-      .withColumn("idx_b",
-        pmod(xxhash64(col("_b"), col("_k")), lit(buckets.toLong)).cast("int"))
-      .repartition(col("idx_b"))
+    LeafWrite.byLeaf(
+      portableBanded(accepted, nGram, nHashes, bands, maxBucket = 0, carry = Nil)
+        .select(col("doc_id"), col("_sh"), col("_b"), col("_k"))
+        .withColumn("idx_b",
+          pmod(xxhash64(col("_b"), col("_k")), lit(buckets.toLong)).cast("int")),
+      "idx_b")
       .write.mode("append").partitionBy("idx_b").parquet(indexPath)
   }
 

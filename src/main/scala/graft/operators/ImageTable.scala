@@ -22,6 +22,14 @@ import graft.plans.SnapshotLog.PartitionLineage
  * (vex.c:25-27); p_salt spreads hot cells (AQE handles residual skew at
  * query time, explicit salt handles it at REST — file sizes stay bounded).
  *
+ * Write path: the write repartitions on (p_cell, p_salt) into an EXPLICIT
+ * `spark.sql.shuffle.partitions` count ([[LeafWrite.byLeaf]]). AQE would
+ * coalesce a plain key repartition by shuffle bytes — a small ingest then
+ * runs as one task writing every leaf file in turn — but write cost is per
+ * file, not per byte. Lineage is computed from the salted input (the same
+ * aggregate the commit would run over the written table, without the
+ * table's partition-discovery listing), so the commit reads nothing back.
+ *
  * Scale notes (100 TB): partition resolution `pRes` controls directory
  * fan-out (4^pRes cells); salting bounds the largest partition; queries
  * prune on p_cell ranges (Morton prefix property) and never mention salt,
@@ -57,22 +65,37 @@ object ImageTable {
    *   bucket count scales with the overage so no partition exceeds ~threshold.
    */
   def ingest(images: DataFrame, path: String, pRes: Int = DefaultPRes,
-             saltThreshold: Long = 500000, maxSalt: Int = 64): SnapshotLog.Snapshot = {
-    val spark = images.sparkSession
-    val derived = derive(images, pRes)
+             saltThreshold: Long = 500000, maxSalt: Int = 64): SnapshotLog.Snapshot =
+    writeAndCommit(saltHotCells(derive(images, pRes), saltThreshold, maxSalt), path,
+      Map.empty)
 
-    // skew census: tiny aggregate (one row per occupied coarse cell)
-    val census = derived.groupBy("p_cell").count()
-    val salts = census.select(col("p_cell").as("_pc"),
+  /** Skew census (a tiny aggregate, one row per occupied coarse cell) and
+    * hot-cell salting: p_salt = hash(image_id) mod the cell's bucket count. */
+  private def saltHotCells(derived: DataFrame, saltThreshold: Long,
+                           maxSalt: Int): DataFrame = {
+    val salts = derived.groupBy("p_cell").count().select(col("p_cell").as("_pc"),
       least(greatest(ceil(col("count") / saltThreshold), lit(1)), lit(maxSalt))
         .cast("int").as("_nsalt"))
-
-    val salted = derived
+    derived
       .join(broadcast(salts), col("p_cell") === col("_pc"), "left")
       .withColumn("p_salt",
         pmod(xxhash64(col("image_id")), coalesce(col("_nsalt"), lit(1))).cast("int"))
       .drop("_pc", "_nsalt")
+  }
 
+  /** The one write-and-commit path of [[ingest]] and [[ingestResume]]:
+    * write `salted` with one file per (p_cell, p_salt) leaf, drop the leaves
+    * of rewritten cells the write did not produce, commit the lineage of
+    * `salted` itself. The input is evaluated three times (census, write,
+    * lineage), so it must be deterministic — which the census already
+    * assumed. Metrics describe this write ("partitions" = leaves written). */
+  private def writeAndCommit(salted: DataFrame, path: String,
+                             extraMetrics: Map[String, Double]): SnapshotLog.Snapshot = {
+    val spark = salted.sparkSession
+    val hPath = new org.apache.hadoop.fs.Path(path)
+    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a path that does not exist yet holds no leaf the write could leave stale
+    val existed = fs.exists(hPath)
     // A2 analogue (vex.c:460-481 load counters): observed metrics ride the
     // write job itself — no extra pass
     val obs = new org.apache.spark.sql.Observation("ingest")
@@ -80,26 +103,44 @@ object ImageTable {
       count(lit(1)).as("rows_loaded"),
       count(when(col("phash").isNull, 1)).as("null_phash"),
       approx_count_distinct(col("cell")).as("approx_cells"))
-
     val t0 = System.nanoTime()
-    // repartition on the partition key: one file per (cell, salt) instead
-    // of #tasks x #dirs write amplification; the salt dimension already
-    // bounds per-file size for hot cells, so one file per leaf is right.
-    // Dynamic overwrite is a PER-WRITE option (not a session-conf mutation,
-    // which would silently leak into every later overwrite on the session)
-    observed.repartition(col("p_cell"), col("p_salt")).write.mode("overwrite")
+    // the salt dimension already bounds per-file size for hot cells, so one
+    // file per leaf is right. Dynamic overwrite is a PER-WRITE option (not a
+    // session-conf mutation, which would silently leak into every later
+    // overwrite on the session)
+    LeafWrite.byLeaf(observed, "p_cell", "p_salt").write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("p_cell", "p_salt").parquet(path)
     val writeSec = (System.nanoTime() - t0) / 1e9
     val loadMetrics = obs.get.map { case (k, v) =>
       s"observed_$k" -> v.toString.toDouble }
-
-    // a full re-ingest rewrites cells the diff-sync index may reference:
-    // drop the index (next diff batch rebuilds it in one scan) rather than
-    // let stale entries silently mis-target later deletes/moves
+    // a re-ingest rewrites cells the diff-sync index may reference: drop the
+    // index (next diff batch rebuilds it in one scan) rather than let stale
+    // entries silently mis-target later deletes/moves
     graft.streaming.StreamingIngest.invalidateCellIndex(spark, path)
-    commitFromTable(spark, path, writeSec, loadMetrics)
+    // lineage from the input, not a read-back of the table: the same
+    // aggregate without the table's partition-discovery listing
+    val lineage = lineageOf(salted, writeSec)
+    val written = lineage.map(_.partition).toSet
+    val removed =
+      if (!existed) Set.empty[String]
+      else dropStaleLeaves(fs, path, written.map(cellOf), written)
+    val rows = lineage.map(_.rows).sum
+    SnapshotLog.commit(path, "images", lineage, Map(
+      "total_rows" -> rows.toDouble,
+      "partitions" -> lineage.size.toDouble,
+      "write_sec" -> writeSec,
+      "rows_per_sec" -> (if (writeSec > 0) rows / writeSec else 0.0))
+      ++ loadMetrics ++ extraMetrics, removed)
   }
+
+  /** Lineage spec of one (p_cell, p_salt) leaf, e.g. "p_cell=12/p_salt=0" —
+    * the leaf's directory path under the table. */
+  private[graft] def leafSpec(cell: Long, salt: Long): String =
+    s"p_cell=$cell/p_salt=$salt"
+
+  private def cellOf(spec: String): Long =
+    spec.split("/")(0).stripPrefix("p_cell=").toLong
 
   /** Per-partition lineage records of `df`: row count, order-insensitive
     * content checksum (sum of per-row hashes mod 1e9+7), id range. THE
@@ -112,24 +153,40 @@ object ImageTable {
         min("image_id").as("min_id"), max("image_id").as("max_id"))
       .collect()
       .map(r => PartitionLineage(
-        s"p_cell=${r.getAs[Number](0).longValue}/p_salt=${r.getAs[Number](1).intValue}",
+        leafSpec(r.getAs[Number](0).longValue, r.getAs[Number](1).longValue),
         r.getLong(2), r.getLong(3), r.getString(4), r.getString(5), writeSec))
       .toSeq
 
-  /** Build lineage records by scanning the just-written table (one cheap
-    * aggregate over parquet) and commit the snapshot. */
-  private def commitFromTable(spark: SparkSession, path: String,
-                              writeSec: Double,
-                              extraMetrics: Map[String, Double] = Map.empty)
-      : SnapshotLog.Snapshot = {
-    val lineage = lineageOf(spark.read.parquet(path), writeSec)
-    val totalRows = lineage.map(_.rows).sum
-    SnapshotLog.commit(path, "images", lineage, Map(
-      "total_rows" -> totalRows.toDouble,
-      "partitions" -> lineage.size.toDouble,
-      "write_sec" -> writeSec,
-      "rows_per_sec" -> (if (writeSec > 0) totalRows / writeSec else 0.0))
-      ++ extraMetrics)
+  /** Leaf-level cleanup after a dynamic partition overwrite of `cells`: the
+    * overwrite replaces only the leaves the write produced, so a cell whose
+    * salt count shrank (or whose rows were all deleted) keeps its other
+    * p_salt directories, and their stale rows would resurrect. Deletes every
+    * on-disk leaf of `cells` not in `kept` (and a cell directory left
+    * empty), and returns the specs the next commit must drop: those leaves
+    * plus every latest-snapshot leaf of `cells` not in `kept`. FileSystem
+    * listing only — no Spark job. */
+  private[graft] def dropStaleLeaves(fs: org.apache.hadoop.fs.FileSystem,
+                                     path: String, cells: Iterable[Long],
+                                     kept: Set[String]): Set[String] = {
+    val cellSet = cells.toSet
+    val deleted = cellSet.toSeq.flatMap { cell =>
+      val cellDir = new org.apache.hadoop.fs.Path(s"$path/p_cell=$cell")
+      if (!fs.exists(cellDir)) Nil
+      else {
+        val gone = fs.listStatus(cellDir)
+          .filter(st => st.isDirectory && st.getPath.getName.startsWith("p_salt="))
+          .toSeq.flatMap { st =>
+            val spec = s"p_cell=$cell/${st.getPath.getName}"
+            if (kept(spec)) None
+            else { fs.delete(st.getPath, true); Some(spec) }
+          }
+        if (fs.listStatus(cellDir).isEmpty) fs.delete(cellDir, true)
+        gone
+      }
+    }
+    val logged = SnapshotLog.latest(path).toSeq.flatMap(_.partitions.map(_.partition))
+      .filter(p => cellSet(cellOf(p)) && !kept(p))
+    deleted.toSet ++ logged
   }
 
   /**
@@ -142,7 +199,7 @@ object ImageTable {
   def ingestResume(images: DataFrame, path: String, pRes: Int = DefaultPRes,
                    saltThreshold: Long = 500000): (SnapshotLog.Snapshot, Long) = {
     val committedCells = SnapshotLog.latest(path).toSeq
-      .flatMap(_.partitions.map(_.partition.split("/")(0).stripPrefix("p_cell=").toLong))
+      .flatMap(_.partitions.map(p => cellOf(p.partition)))
       .toSet
     val derived = derive(images, pRes)
     val remaining =
@@ -157,26 +214,9 @@ object ImageTable {
           Map("total_rows" -> 0.0, "resumed" -> 1.0, "write_sec" -> 0.0)))
       return (snap, 0L)
     }
-    val census = remaining.groupBy("p_cell").count()
-    val salts = census.select(col("p_cell").as("_pc"),
-      least(greatest(ceil(col("count") / saltThreshold), lit(1)), lit(64))
-        .cast("int").as("_nsalt"))
-    val salted = remaining
-      .join(broadcast(salts), col("p_cell") === col("_pc"), "left")
-      .withColumn("p_salt",
-        pmod(xxhash64(col("image_id")), coalesce(col("_nsalt"), lit(1))).cast("int"))
-      .drop("_pc", "_nsalt")
-    val t0 = System.nanoTime()
-    salted.repartition(col("p_cell"), col("p_salt"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("p_cell", "p_salt").parquet(path)
-    val writeSec = (System.nanoTime() - t0) / 1e9
-    graft.streaming.StreamingIngest.invalidateCellIndex(images.sparkSession, path)
-    val newLineage = lineageOf(salted, writeSec)
-    val snap = SnapshotLog.commit(path, "images", newLineage, Map(
-      "total_rows" -> newLineage.map(_.rows).sum.toDouble,
-      "resumed" -> 1.0, "write_sec" -> writeSec))
-    (snap, newLineage.size.toLong)
+    val snap = writeAndCommit(saltHotCells(remaining, saltThreshold, 64), path,
+      Map("resumed" -> 1.0))
+    (snap, snap.metrics("partitions").toLong)
   }
 
   /** Read only partitions committed in the latest snapshot (stragglers from
@@ -334,8 +374,7 @@ object ImageTable {
         pmod(xxhash64(col("image_id")), coalesce(col("_nf"), lit(1))).cast("int"))
       .drop("_pc", "_ps", "_nf")
     val (merged, handle) = org.apache.spark.sql.classic.GraftBridge
-      .persistedCopy(store
-        .repartition((partCols :+ "_fsplit").map(col): _*)
+      .persistedCopy(LeafWrite.byLeaf(store, partCols :+ "_fsplit": _*)
         .drop("_fsplit"))
     try {
       onCompactBeforeGuard()

@@ -273,28 +273,32 @@ object PlanetExtract {
     // task opens a writer in every output directory — #tasks x #dirs tiny
     // files (write amplification that dominates wall time even at sf0.1;
     // at planet scale it would also blow up the namenode/file listing)
-    def p(df: DataFrame): DataFrame = df.withColumn("p",
-      when(col("cell").isNull, lit(-1)).otherwise(
-        shiftright(col("xbin"), CellIndex.GridBits - pBits) * (1 << pBits) +
-          shiftright(col("ybin"), CellIndex.GridBits - pBits)))
-      .repartition(col("p"))
+    def write(df: DataFrame, table: String): Unit =
+      LeafWrite.byLeaf(df.withColumn("p",
+          when(col("cell").isNull, lit(-1)).otherwise(
+            shiftright(col("xbin"), CellIndex.GridBits - pBits) * (1 << pBits) +
+              shiftright(col("ybin"), CellIndex.GridBits - pBits))), "p")
+        .write.mode("overwrite").partitionBy("p").parquet(s"$path/$table")
     // the three writes are INDEPENDENT jobs: submit them concurrently so
     // each job's tail (the last few partition-writer tasks) is back-filled
     // by the next job's tasks instead of idling the executors (guide-§2.6
-    // overlap; FIFO scheduling gives exactly the back-fill behavior).
+    // overlap; FIFO scheduling gives exactly the back-fill behavior). They
+    // run on a pool of their own, not the global one: blocking Spark
+    // actions would otherwise hold global-pool threads other callers need.
     // Failures propagate: Await rethrows the first failed write.
-    import scala.concurrent.{Await, Future}
+    import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val writes = Seq(
-      Future(p(t.nodes).write.mode("overwrite")
-        .partitionBy("p").parquet(s"$path/nodes")),
-      Future(p(t.ways).write.mode("overwrite")
-        .partitionBy("p").parquet(s"$path/ways")),
-      Future(p(t.relations).write.mode("overwrite")
-        .partitionBy("p").parquet(s"$path/relations")))
-    writes.foreach(Await.result(_, Duration.Inf))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(3, { (r: Runnable) =>
+      val th = new Thread(r, "graft-write-tables")
+      th.setDaemon(true)
+      th
+    })
+    try {
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+      Seq(Future(write(t.nodes, "nodes")), Future(write(t.ways, "ways")),
+          Future(write(t.relations, "relations")))
+        .foreach(Await.result(_, Duration.Inf))
+    } finally pool.shutdown()
   }
 
   def readTables(spark: org.apache.spark.sql.SparkSession, path: String): PlanetTables =

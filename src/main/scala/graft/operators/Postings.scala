@@ -47,11 +47,12 @@ object Postings {
     * ranking (tf sums, df joins) never touches raw text. */
   private def postingsFrame(docs: DataFrame, buckets: Int,
                             textCol: String): DataFrame =
-    docs.select(col("doc_id").cast("long").as("doc_id"),
-        explode(Dedup.wsWords(col(textCol))).as("word"))
-      .groupBy("word", "doc_id").agg(count(lit(1)).as("tf"))
-      .withColumn("w_b", pmod(xxhash64(col("word")), lit(buckets.toLong)).cast("int"))
-      .repartition(col("w_b"))
+    LeafWrite.byLeaf(
+      docs.select(col("doc_id").cast("long").as("doc_id"),
+          explode(Dedup.wsWords(col(textCol))).as("word"))
+        .groupBy("word", "doc_id").agg(count(lit(1)).as("tf"))
+        .withColumn("w_b", pmod(xxhash64(col("word")), lit(buckets.toLong)).cast("int")),
+      "w_b")
 
   /** The `_doclen` rows for a batch, derived FROM its (persisted) postings
     * frame — dl = sum of the doc's term frequencies == its wsWords count,
@@ -68,7 +69,7 @@ object Postings {
         pmod(xxhash64(col("doc_id")), lit(buckets.toLong)).cast("int"))
 
   private def writeDoclen(dl: DataFrame, path: String): Unit =
-    dl.repartition(col("d_b")).write.mode("append")
+    LeafWrite.byLeaf(dl, "d_b").write.mode("append")
       .partitionBy("d_b").parquet(doclenPath(path))
 
   private def writeMeta(spark: SparkSession, path: String, buckets: Int,
@@ -183,9 +184,9 @@ object Postings {
       .persistedCopy(spark.read.schema(DoclenSchema).parquet(doclenPath(path))
         .dropDuplicates("doc_id"))    // physical replay repair
     try {
-      frozen
-        .dropDuplicates("word", "doc_id")  // physical replay repair
-        .repartition(col("w_b"))
+      LeafWrite.byLeaf(
+          frozen.dropDuplicates("word", "doc_id"),  // physical replay repair
+          "w_b")
         .sortWithinPartitions("w_b", "word", "doc_id")
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "static")
@@ -200,7 +201,7 @@ object Postings {
         .withColumn("d_b",
           pmod(xxhash64(col("doc_id")), lit(buckets.toLong)).cast("int"))
       val allDl = frozenDl.unionByName(orphans)
-      allDl.repartition(col("d_b"))
+      LeafWrite.byLeaf(allDl, "d_b")
         .sortWithinPartitions("d_b", "doc_id")
         .write.mode("append")   // root overwrite just removed the old dir
         .partitionBy("d_b").parquet(doclenPath(path))

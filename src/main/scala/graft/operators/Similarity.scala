@@ -195,7 +195,7 @@ object Similarity {
   def writeIvfIndex(assigned: DataFrame, centroids: Array[Array[Float]],
                     path: String): Unit = {
     // one file per list directory, not #tasks x #lists
-    assigned.repartition(col("list_id"))
+    LeafWrite.byLeaf(assigned, "list_id")
       .write.mode("overwrite")
         // STATIC pin: under a session-wide dynamic mode a rebuild over a
         // shrunk corpus would only truncate the lists the new build touches,
@@ -347,10 +347,11 @@ object Similarity {
     require(seeds.nonEmpty, "empty embeddings table")
     val cents = seeds.take(nLists)
     val cbs = pqCodebooks(seeds.take(ksub), m, dim / m)
-    pqEncode(assign(embs, cents), cbs)
-      .select((col("vec_id") +: (0 until m).map(s => col(s"code_$s"))) :+
-        col("list_id"): _*)
-      .repartition(col("list_id"))
+    LeafWrite.byLeaf(
+      pqEncode(assign(embs, cents), cbs)
+        .select((col("vec_id") +: (0 until m).map(s => col(s"code_$s"))) :+
+          col("list_id"): _*),
+      "list_id")
       .write.mode("overwrite")
         // STATIC pin: under a session-wide dynamic mode a rebuild over a
         // shrunk corpus would only truncate the lists the new build touches,
@@ -586,8 +587,11 @@ object Similarity {
     * `orderBy(md5(cast(vec_id AS string)), vec_id).limit(k)` order (the
     * driver MessageDigest md5 of the decimal string is byte-identical to
     * Spark's md5 of the same cast). Set semantics absorb at-least-once
-    * task retries (a retried row re-inserts its identical key). Bounded:
-    * every executor-side instance trims to k entries. */
+    * task retries (a retried row re-inserts its identical key). The set is
+    * keyed by (md5, vec_id) alone, so rows sharing a vec_id collapse to ONE
+    * seed candidate, whose vector is whichever duplicate was added first
+    * (task order) — unlike the orderBy/limit form, which returns each
+    * duplicate. Bounded: every executor-side instance trims to k entries. */
   private final class SeedAcc(k: Int)
       extends org.apache.spark.util.AccumulatorV2[
         (String, Long, Array[Long]),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.operators.ImageTable
+import graft.operators.{ImageTable, LeafWrite}
 
 /**
  * Structured-Streaming ingest: continuous geocode+tile of newly arriving
@@ -185,12 +185,13 @@ object StreamingIngest {
     * invisible to parquet reads of the main table. */
   def buildCellIndex(spark: SparkSession, tablePath: String,
                      buckets: Int = DefaultIdxBuckets): Unit =
-    spark.read.parquet(tablePath)
-      // explicit long: Hive partition-column inference would make the
-      // bootstrap's p_cell an int while per-batch updates write long
-      .select(col("image_id"), col("p_cell").cast("long").as("p_cell"))
-      .withColumn("idx_b", idxBucket(buckets))
-      .repartition(col("idx_b"))
+    LeafWrite.byLeaf(
+      spark.read.parquet(tablePath)
+        // explicit long: Hive partition-column inference would make the
+        // bootstrap's p_cell an int while per-batch updates write long
+        .select(col("image_id"), col("p_cell").cast("long").as("p_cell"))
+        .withColumn("idx_b", idxBucket(buckets)),
+      "idx_b")
       .write.mode("overwrite").partitionBy("idx_b").parquet(idxPath(tablePath))
 
   /** One micro-batch merge (also callable for batch diff application).
@@ -290,13 +291,12 @@ object StreamingIngest {
     // truncates the lineage so the write never re-reads the target.
     // Memory-bounded by the AFFECTED partitions only, i.e. by diff
     // locality, not table size.
-    val merged = (
+    val merged = LeafWrite.byLeaf(
       if (store == null) upserts
       else store.where(col("p_cell").isin(affected: _*))
         .join(ids, Seq("image_id"), "left_anti")   // drop deleted/superseded
-        .unionByName(upserts)
-      ).repartition(col("p_cell"), col("p_salt"))  // one file per leaf, not
-      .localCheckpoint(true)                       // #tasks x #dirs
+        .unionByName(upserts),
+      "p_cell", "p_salt").localCheckpoint(true)
 
     // index merge MATERIALIZED BEFORE the main overwrite (it reads both the
     // old index and — through the upserts' salt lookup — the old store):
@@ -305,14 +305,14 @@ object StreamingIngest {
     val upsertIdx = upserts
       .select(col("image_id"), col("p_cell").cast("long").as("p_cell"))
       .withColumn("idx_b", idxBucket(idxBuckets))
-    val idxMerged = (
+    val idxMerged = LeafWrite.byLeaf(
       if (!hasIdx) upsertIdx
       else spark.read.parquet(idxPath(tablePath))
         .where(col("idx_b").isin(idBuckets: _*))
         .join(ids, Seq("image_id"), "left_anti")
         .select(col("image_id"), col("p_cell").cast("long").as("p_cell"), col("idx_b"))
-        .unionByName(upsertIdx)
-      ).repartition(col("idx_b")).localCheckpoint(true)
+        .unionByName(upsertIdx),
+      "idx_b").localCheckpoint(true)
 
     // dynamic overwrite only rewrites LEAF partitions (p_cell, p_salt)
     // PRESENT in `merged`: any affected leaf whose rows were all deleted
@@ -322,7 +322,8 @@ object StreamingIngest {
     // bucket 1 empties, so the cleanup must compare LEAVES, not cells
     val remainingLeaves = merged.select("p_cell", "p_salt").distinct()
       .collect()
-      .map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue))
+      .map(r => ImageTable.leafSpec(r.getAs[Number](0).longValue,
+        r.getAs[Number](1).longValue))
       .toSet
     // CRASH GUARD: the store overwrite below and the index rewrite further
     // down are two non-atomic writes. Drop the index META first — a caller
@@ -340,19 +341,7 @@ object StreamingIngest {
       .option("partitionOverwriteMode", "dynamic")   // per-write, no session leak
       .partitionBy("p_cell", "p_salt").parquet(tablePath)
     val writeSec = (System.nanoTime() - t0) / 1e9
-    affected.foreach { cell =>
-      val cellDir = new org.apache.hadoop.fs.Path(s"$tablePath/p_cell=$cell")
-      if (fs.exists(cellDir)) {
-        fs.listStatus(cellDir)
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("p_salt="))
-          .foreach { st =>
-            val salt = st.getPath.getName.stripPrefix("p_salt=").toLong
-            if (!remainingLeaves.contains((cell, salt))) fs.delete(st.getPath, true)
-          }
-        // drop the cell dir itself once no salt buckets remain
-        if (fs.listStatus(cellDir).isEmpty) fs.delete(cellDir, true)
-      }
-    }
+    val staleSpecs = ImageTable.dropStaleLeaves(fs, tablePath, affected, remainingLeaves)
 
     // ---- index maintenance: rewrite ONLY the ids' hash buckets ---------------
     // (idxMerged was checkpointed above, before the store files changed);
@@ -374,16 +363,12 @@ object StreamingIngest {
 
     // ---- snapshot lineage patch (only when the table HAS a log) --------------
     // rewritten leaves get fresh lineage; every parent leaf under an
-    // affected cell that was not rewritten is dropped — readCommitted then
-    // agrees with the on-disk state after the merge. Cost: one aggregate
-    // over the (localCheckpointed) affected partitions, not the table.
+    // affected cell that was not rewritten is dropped (staleSpecs, from the
+    // leaf cleanup above) — readCommitted then agrees with the on-disk state
+    // after the merge. Cost: one aggregate over the (localCheckpointed)
+    // affected partitions, not the table.
     if (graft.plans.SnapshotLog.latestId(tablePath).isDefined) {
       val newLineage = ImageTable.lineageOf(merged, writeSec)
-      val affectedSet = affected.toSet
-      val staleSpecs = graft.plans.SnapshotLog.latest(tablePath).toSeq
-        .flatMap(_.partitions.map(_.partition))
-        .filter(p => affectedSet(p.split("/")(0).stripPrefix("p_cell=").toLong))
-        .toSet
       graft.plans.SnapshotLog.commit(tablePath, "images", newLineage, Map(
         "diff_batch" -> 1.0,
         "affected_cells" -> affected.size.toDouble,

@@ -97,6 +97,44 @@ class ImageTableSpec extends SparkFunSuite {
     assert(w3 == 0 && s3.id == s2.id)
   }
 
+  test("write path: one write task per shuffle partition, no partition " +
+       "discovery, one file per lineage leaf") {
+    val dir = s"$tmp/write_path"
+    val (s, run) = WriteProbe.record(spark) {
+      ImageTable.ingest(imagesDF, dir, saltThreshold = 500, maxSalt = 8)
+    }
+    val leaves = s.partitions.map(_.partition).toSet
+    val slots = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(leaves.size > slots, "weak fixture: fewer leaves than write tasks")
+    // AQE coalescing the write's shuffle by bytes would fold it into one task
+    assert(run.writeStageTasks == Seq(math.min(leaves.size, slots)),
+      s"write stages ran ${run.writeStageTasks} tasks")
+    // lineage comes from the input: the table is never listed back
+    val listings = run.jobDescriptions.filter(_.startsWith("Listing leaf files"))
+    assert(listings.isEmpty, s"partition discovery inside ingest: $listings")
+    val files = WriteProbe.dataFilesPerLeaf(dir)
+    assert(files.keySet == leaves)
+    assert(files.values.forall(_ == 1), s"leaves with several files: ${files.filter(_._2 > 1)}")
+  }
+
+  test("re-ingest over fewer salt buckets drops the stale leaves: ids stay " +
+       "unique and lineage matches the committed table") {
+    val dir = s"$tmp/reingest"
+    val all = Fixtures.localImages(4000, withBytes = false).toDF()
+    ImageTable.ingest(all, dir, saltThreshold = 200, maxSalt = 8)
+    val s2 = ImageTable.ingest(all.limit(1000), dir, saltThreshold = 200, maxSalt = 8)
+    val t = ImageTable.readCommitted(spark, dir)
+    val n = t.count()
+    assert(t.select("image_id").distinct().count() == n, "duplicated image ids")
+    val recomputed = t.groupBy("p_cell", "p_salt").agg(count(lit(1)).as("n"),
+        sum(pmod(xxhash64(col("image_id"), col("phash")), lit(1000000007L))).as("ck"))
+      .collect().map(r => s"p_cell=${r.getAs[Number](0).longValue}/p_salt=" +
+        s"${r.getAs[Number](1).intValue}" -> (r.getLong(2), r.getLong(3))).toMap
+    assert(s2.partitions.map(p => p.partition -> (p.rows, p.checksum)).toMap == recomputed)
+    // nothing on disk outside the committed lineage
+    assert(WriteProbe.dataFilesPerLeaf(dir).keySet == recomputed.keySet)
+  }
+
   test("bbox extracts: cell-granular matches per-row binning; exact matches coordinates") {
     val c = Fixtures.cityCenters(Fixtures.DefaultSeed)(0)
     val b = BBox(c._1 - 0.7, c._2 - 0.5, c._1 + 0.7, c._2 + 0.5)

@@ -1008,6 +1008,23 @@ class PipelineOpsSpec extends SparkFunSuite {
       "a vector too short for a subspace must NULL that code")
     assert(cg(5L)._1 === null && cg(5L)._2 != null)
     assert(cg(6L) === ((null, null)))
+    // the interpreted surface (nullSafeEval, what Spark falls back to when
+    // codegen fails) returns the same codes: no whole-stage codegen, and
+    // every projection built by the interpreted factory
+    val interpreted = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val saved = interpreted.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val ip = try {
+      interpreted.foreach { case (k, v) => spark.conf.set(k, v) }
+      val out = Similarity.pqEncode(df, cbs)
+      assert(!out.queryExecution.executedPlan.toString.contains("*("),
+        "whole-stage codegen still on")
+      dump(out)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    assert(ip === cg, s"interpreted vs codegen: $ip vs $cg")
   }
 
   test("axisTopK (oracle-checkable probe): finds self and planted partner; recall vs brute") {

@@ -47,5 +47,15 @@ class StoredPlanetSpec extends SparkFunSuite {
     assert(PlanetExtract.bboxStored(stored, wrap, strictCompat = true).count() == 0)
     val wrapRows = rows(PlanetExtract.bboxStored(stored, wrap))
     assert(wrapRows == rows(PlanetExtract.bbox(t, wrap)))
+
+    // each stored table holds exactly one file per p directory, and a
+    // directory for every p value it holds
+    for (table <- Seq("nodes", "ways", "relations")) {
+      val files = WriteProbe.dataFilesPerLeaf(s"$dir/$table")
+      val ps = spark.read.parquet(s"$dir/$table").select("p").distinct()
+        .collect().map(r => s"p=${r.getAs[Number](0).longValue}").toSet
+      assert(files.keySet == ps, table)
+      assert(files.values.forall(_ == 1), s"$table: ${files.filter(_._2 > 1)}")
+    }
   }
 }
