@@ -105,7 +105,7 @@ object DevProbe {
       t(s"cc consume #$rep") { cc.count() }
     }
     // CC with a precomputed tiny edge list (isolates CC overhead from the
-    // pair recompute inside edges' persistedCopy)
+    // pair recompute inside the edges' materialization)
     import spark.implicits._
     val tinyPairs = (0 until 300).map(i => (i.toLong * 2, i.toLong * 2 + 1))
       .toDF("a_id", "b_id")
@@ -212,7 +212,7 @@ object DevProbe {
           .select("vec_id", "cluster", "d2").count()
       }
       t(s"assign large (count) #$rep") {
-        Similarity.kmeansPredictLarge(e, cents4).count()
+        Similarity.kmeansPredict(e, cents4).count()
       }
       // force full evaluation (count prunes): noop write
       t(s"assign literal (noop) #$rep") {
@@ -222,7 +222,7 @@ object DevProbe {
           .write.format("noop").mode("overwrite").save()
       }
       t(s"assign large (noop) #$rep") {
-        Similarity.kmeansPredictLarge(e, cents4)
+        Similarity.kmeansPredict(e, cents4)
           .write.format("noop").mode("overwrite").save()
       }
     }
@@ -236,7 +236,7 @@ object DevProbe {
           .write.format("noop").mode("overwrite").save()
       }
       t(s"BIG assign large (noop) #$rep") {
-        Similarity.kmeansPredictLarge(big, cents4)
+        Similarity.kmeansPredict(big, cents4)
           .write.format("noop").mode("overwrite").save()
       }
     }

@@ -805,13 +805,12 @@ object SparkEntry {
       assigned.orderBy("vec_id")
     }),
     "q_embed_kmeans_large" -> ((s, dir) => {  // the LARGE-k assignment
-      // twin (centroids as ONE array-of-arrays data literal + higher-
-      // order transform/zip_with distances — plan size independent of
-      // k) — bit-identical to the literal-codegen path by construction:
-      // shares q_embed_kmeans's oracle VERBATIM
+      // (kmeansPredict: one codegen argmin projection whose plan size is
+      // independent of k) — bit-identical to the literal-codegen path by
+      // construction: shares q_embed_kmeans's oracle VERBATIM
       val e = tbl(s, dir, "embeddings")
       val (_, cents) = Similarity.kmeansFitPortable(e, k = 4, iters = 2)
-      Similarity.kmeansPredictLarge(e, cents).orderBy("vec_id")
+      Similarity.kmeansPredict(e, cents).orderBy("vec_id")
     }),
     "q_embed_kmeans_predict" -> ((s, dir) => {  // fit-once / apply-many:
       // fit on the 1/3 sample, round-trip the centroids through the

@@ -1,10 +1,14 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.vec
+import graft.operators.Materialized.materialize
 
 /**
  * Deduplication suite for the documents table (doc_id, text, ...) and the
@@ -22,13 +26,35 @@ import graft.functions.vec
 object Dedup {
 
   /** THE scratch-dir resolution (`spark.graft.scratchDir`, default JVM
-    * tmp) — one definition shared by clustering, the dedup-index probe,
-    * the kNN table join and [[purgeClusterScratch]]; a second copy that
-    * drifted would silently split scratch output across directories and
-    * hide strays from the purge. */
+    * tmp) — one definition shared by [[scratchResult]] and
+    * [[purgeClusterScratch]]; a second copy that drifted would silently
+    * split scratch output across directories and hide strays from the
+    * purge. */
   private[graft] def scratchDir(spark: org.apache.spark.sql.SparkSession): String =
     spark.conf.get("spark.graft.scratchDir",
       System.getProperty("java.io.tmpdir") + "/graft_scratch")
+
+  /** The producers of scratch results, by dir-name prefix: clustering,
+    * the dedup-index probe's drop list, the kNN table join and SemDeDup.
+    * [[purgeClusterScratch]] deletes exactly these. */
+  private val ScratchPrefixes = Seq("cc", "cc_drop", "knn", "cc_sem")
+
+  /** THE scratch round trip: write `df` to a fresh
+    * `<scratchDir>/<prefix>_<uuid>` parquet, mark it delete-on-exit and
+    * return a frame reading it — a result that no longer depends on the
+    * persisted blocks or the lineage it was computed from. One dir remains
+    * per call until FileSystem shutdown or [[purgeClusterScratch]]. Point
+    * `spark.graft.scratchDir` at shared storage (HDFS/S3) on a multi-node
+    * cluster. */
+  private[graft] def scratchResult(df: DataFrame, prefix: String): DataFrame = {
+    require(ScratchPrefixes.contains(prefix), s"unknown scratch prefix $prefix")
+    val spark = df.sparkSession
+    val dir = new org.apache.hadoop.fs.Path(
+      scratchDir(spark) + s"/${prefix}_${java.util.UUID.randomUUID()}")
+    df.write.parquet(dir.toString)
+    dir.getFileSystem(spark.sparkContext.hadoopConfiguration).deleteOnExit(dir)
+    spark.read.parquet(dir.toString)
+  }
 
   /**
    * Hot-bucket cap: drop every bucket whose population exceeds `maxBucket`
@@ -307,51 +333,37 @@ object Dedup {
    * propagation: every node adopts the minimum label among itself and its
    * neighbors until fixpoint. Converges in O(component diameter) rounds —
    * near-dup clusters are dense and shallow, so few rounds in practice;
-   * each round is ONE shuffle keyed on id (join + groupBy), and labels are
-   * localCheckpointed so the plan does not grow with iterations. Documents
-   * with no pair at all are not emitted (they are their own cluster).
-   * Returns (id, label).
+   * each round is ONE shuffle keyed on id (join + groupBy), and each
+   * round's labels are materialized so the plan does not grow with
+   * iterations. Documents with no pair at all are not emitted (they are
+   * their own cluster). Returns (id, label).
    *
-   * Cache hygiene: iteration state is persisted through
-   * `GraftBridge.persistedCopy`, which (unlike `localCheckpoint`) returns
-   * the backing RDD handle — each superseded round is released
-   * DETERMINISTICALLY the moment its successor materializes, and the final
-   * labels are written to a scratch parquet and read back before the last
-   * handle is dropped, so repeated clustering calls leave ZERO blocks
-   * pinned (localCheckpoint blocks answer only to the GC-driven
-   * ContextCleaner — the round-3 session-storage accumulation defect).
-   * Scratch location: `spark.graft.scratchDir` (default: the JVM temp dir;
-   * point it at shared storage — HDFS/S3 — on a multi-node cluster). One
-   * `cc_<uuid>` result dir remains per call (the returned frame reads it);
-   * deleted at FileSystem shutdown, or earlier via
-   * [[purgeClusterScratch]] once returned frames are consumed.
+   * Cache hygiene: iteration state is held in [[Materialized]] handles —
+   * each superseded round is released DETERMINISTICALLY the moment its
+   * successor materializes, and the final labels go through
+   * [[scratchResult]] (`cc_` prefix) before the remaining handles close,
+   * so repeated clustering calls leave ZERO blocks pinned on every exit
+   * path, a failed or non-converging call included.
    */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
-    import org.apache.spark.sql.classic.GraftBridge.{persistedCopy, persistedCopyFlagCount}
-    val (edges, edgesRdd) = persistedCopy(      // the pair list may be
-      pairs.select(col("a_id").as("src"), col("b_id").as("dst"))   // expensive;
-        .unionByName(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
-        .distinct())                            // compute once
-    // seed labels with the FIRST neighbor-min round for free: label0 =
-    // min(id, direct neighbors) is one aggregation over the symmetrized
-    // edges — the same single exchange the plain id-distinct seed pays,
-    // but star/pair components (the common near-dup shape) arrive at
-    // their fixpoint immediately and the loop's first round is the
-    // convergence CONFIRMATION instead of real work (round 6: one full
-    // join+aggregate round removed from every shallow clustering call)
-    var (labels, labelsRdd) = persistedCopy(
-      edges.groupBy("src").agg(min("dst").as("_nmin"))
-        .select(col("src").as("id"), least(col("src"), col("_nmin")).as("label")))
-    var changed = 1L
-    var i = 0
-    val spark = pairs.sparkSession
-    val scratch = scratchDir(spark) + s"/cc_${java.util.UUID.randomUUID()}"
-    // try/finally around the WHOLE iteration + scratch write: a mid-round
-    // failure (OOM, job cancellation, scratch-write error) must release the
-    // edges/labels blocks too — a long-lived service that catches the
-    // exception and keeps going relies on the zero-pinned-blocks contract
-    // holding on EVERY exit path, not just success and non-convergence
-    try {
+  def connectedComponents(pairs: DataFrame, maxIters: Int = 20): DataFrame =
+    Using.Manager { use =>
+      val edges = use(materialize(                 // the pair list may be
+        pairs.select(col("a_id").as("src"), col("b_id").as("dst"))   // expensive;
+          .unionByName(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
+          .distinct())).df                         // compute once
+      // seed labels with the FIRST neighbor-min round for free: label0 =
+      // min(id, direct neighbors) is one aggregation over the symmetrized
+      // edges — the same single exchange the plain id-distinct seed pays,
+      // but star/pair components (the common near-dup shape) arrive at
+      // their fixpoint immediately and the loop's first round is the
+      // convergence CONFIRMATION instead of real work (round 6: one full
+      // join+aggregate round removed from every shallow clustering call)
+      var round = use(materialize(
+        edges.groupBy("src").agg(min("dst").as("_nmin"))
+          .select(col("src").as("id"), least(col("src"), col("_nmin")).as("label"))))
+      var labels = round.df
+      var changed = 1L
+      var i = 0
       while (changed > 0 && i < maxIters) {
         // neighbor-min and the self label in ONE aggregation: neighbor
         // label messages union the self rows (flagged), then a grouped
@@ -375,16 +387,17 @@ object Dedup {
         // double-count), so the loop can never terminate early or throw
         // spuriously on a converged round.
         val jumped = least(col("_m"), coalesce(col("_llab"), col("_m")))
-        val (updated, updatedRdd, nChanged) = persistedCopyFlagCount(cand
+        val nChanged = pairs.sparkSession.sparkContext.longAccumulator
+        val updated = use(materialize(cand
           .join(labels.select(col("id").as("_lid"), col("label").as("_llab")),
             cand("_m") === col("_lid"), "left")
           .select(col("id"), jumped.as("_new"),
             (jumped < col("label")).as("_chg")),
-          flagIdx = 2)
-        labelsRdd.unpersist(false)   // superseded; successor is materialized
-        labelsRdd = updatedRdd
-        changed = nChanged
-        labels = updated.select(col("id"), col("_new").as("label"))
+          tap = r => if (!r.isNullAt(2) && r.getBoolean(2)) nChanged.add(1L)))
+        round.release()   // superseded; successor is materialized
+        round = updated
+        changed = nChanged.value
+        labels = updated.df.select(col("id"), col("_new").as("label"))
         i += 1
       }
       // truncated propagation would silently ship WRONG clusters (two
@@ -393,18 +406,9 @@ object Dedup {
         throw new IllegalStateException(
           s"connectedComponents did not converge in $maxIters rounds " +
             "(pathological component diameter); raise maxIters")
-      // materialize the result OFF the persisted blocks, then release them
-      labels.select(col("id"), col("label")).write.parquet(scratch)
-    } finally {
-      // blocking + idempotent: the post-call cache state is part of the
-      // contract (zero pinned blocks) on every exit path
-      edgesRdd.unpersist(true)
-      labelsRdd.unpersist(true)
-    }
-    val p = new org.apache.hadoop.fs.Path(scratch)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).deleteOnExit(p)
-    spark.read.parquet(scratch)
-  }
+      // the result OFF the persisted blocks, before they are released
+      scratchResult(labels.select(col("id"), col("label")), "cc")
+    }.get
 
   /**
    * Incremental (online) near-dup dedup — the corpus-maintenance shape: a
@@ -540,69 +544,70 @@ object Dedup {
   def dedupBatchAgainstIndex(batch: DataFrame, indexPath: String,
                              threshold: Double = 0.5,
                              maxBucket: Int = 1000): DataFrame = {
-    import org.apache.spark.sql.classic.GraftBridge.{persistedCopyCounted, persistedCopyCountedIntSet}
     val spark = batch.sparkSession
     val (nGram, nHashes, bands, buckets) = readDedupIndexMeta(spark, indexPath)
     // band the batch ONCE: the bucket-list collect, the index probe and
-    // the within-batch self-join all read the persisted copy, so the
+    // the within-batch self-join all read the materialized copy, so the
     // batch text is md5-minhashed exactly once per call (this path runs
     // per incoming batch — recompute here multiplies the very cost the
     // stored index exists to avoid). The emptiness short-circuit AND the
     // probe-bucket id set both ride the materialization pass (round 6:
     // no separate isEmpty job, no separate distinct+collect job — the
     // bucket ids are a <= `buckets`-element set by construction, exactly
-    // the driver-small collect the old job performed).
-    val (batchBanded, bandedRdd, nBanded, probeBuckets) = persistedCopyCountedIntSet(
+    // the driver-small collect the old job performed; a retried task's
+    // duplicates collapse in the set)
+    val probeBuckets = spark.sparkContext.collectionAccumulator[Int]
+    Using.resource(materialize(
       portableBanded(batch, nGram, nHashes, bands, maxBucket, carry = Nil)
         .select(col("doc_id"), col("_sh"), col("_b"), col("_k"),
           pmod(xxhash64(col("_b"), col("_k")), lit(buckets.toLong))
             .cast("int").as("_ib")),
-      intIdx = 4)
-    val dropScratch = scratchDir(spark) + s"/cc_drop_${java.util.UUID.randomUUID()}"
-    try {
-      if (nBanded == 0) return batch   // nothing to probe or drop
-      val ba = batchBanded.select(col("_b"), col("_k"),
-        col("doc_id").as("a_id"), col("_sh").as("_sha"))
-      val bb = batchBanded.select(col("_b"), col("_k"),
-        col("doc_id").as("b_id"), col("_sh").as("_shb"))
-      // cross pairs keep (corpus, batch) orientation; batch-batch pairs
-      // canonicalize a < b — exactly the recompute path's candidate set.
-      // ONE persisted pair frame carries the orientation flag: the
-      // closure's edge union and the corpus-membership test both read it
-      // without re-probing the index or re-verifying Jaccard.
-      val (pairsAll, pairsRdd, nPairs) = persistedCopyCounted(
-        verifyJaccard(crossCandidates(batchBanded, indexPath,
-            probeBuckets.toSeq.sorted), threshold)
-          .select("a_id", "b_id").withColumn("_cross", lit(true))
-          .unionByName(verifyJaccard(
-              ba.join(bb, Seq("_b", "_k")).where(col("a_id") < col("b_id"))
-                .dropDuplicates("a_id", "b_id"), threshold)
-            .select("a_id", "b_id").withColumn("_cross", lit(false))))
-      try {
-        // the common online case is a CLEAN batch (zero verified pairs):
-        // skip the clustering machinery and both scratch files entirely
-        if (nPairs == 0) return batch
-        val labels = connectedComponents(pairsAll.select("a_id", "b_id"))
-        // corpus ids occur in pairs ONLY as the a side of cross pairs, so
-        // the infected-component membership test needs no corpus table
-        val infected = labels
-          .join(pairsAll.where(col("_cross"))
-            .select(col("a_id").as("id")).distinct(), "id")
-          .select(col("label")).distinct()
-        val dropIds = labels.join(infected, Seq("label"), "left_semi").select("id")
-          .unionByName(labels.where(col("id") =!= col("label")).select("id"))
-          .distinct()
-          .withColumnRenamed("id", "doc_id")
-        // materialize the (small) drop list OFF the persisted blocks so
-        // the RETURNED frame is self-contained — consuming it later never
-        // re-runs the probe (same scratch discipline as the clustering;
-        // the cc_ prefix keeps it under purgeClusterScratch)
-        dropIds.write.parquet(dropScratch)
-      } finally pairsRdd.unpersist(true)
-    } finally bandedRdd.unpersist(true)
-    val p = new org.apache.hadoop.fs.Path(dropScratch)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).deleteOnExit(p)
-    batch.join(spark.read.parquet(dropScratch), Seq("doc_id"), "left_anti")
+      tap = r => if (!r.isNullAt(4)) probeBuckets.add(r.getInt(4)))) { banded =>
+      if (banded.count == 0) batch   // nothing to probe or drop
+      else {
+        val batchBanded = banded.df
+        val ba = batchBanded.select(col("_b"), col("_k"),
+          col("doc_id").as("a_id"), col("_sh").as("_sha"))
+        val bb = batchBanded.select(col("_b"), col("_k"),
+          col("doc_id").as("b_id"), col("_sh").as("_shb"))
+        // cross pairs keep (corpus, batch) orientation; batch-batch pairs
+        // canonicalize a < b — exactly the recompute path's candidate set.
+        // ONE materialized pair frame carries the orientation flag: the
+        // closure's edge union and the corpus-membership test both read it
+        // without re-probing the index or re-verifying Jaccard.
+        Using.resource(materialize(
+          verifyJaccard(crossCandidates(batchBanded, indexPath,
+              probeBuckets.value.asScala.toSet.toSeq.sorted), threshold)
+            .select("a_id", "b_id").withColumn("_cross", lit(true))
+            .unionByName(verifyJaccard(
+                ba.join(bb, Seq("_b", "_k")).where(col("a_id") < col("b_id"))
+                  .dropDuplicates("a_id", "b_id"), threshold)
+              .select("a_id", "b_id").withColumn("_cross", lit(false))))) { pairs =>
+          // the common online case is a CLEAN batch (zero verified pairs):
+          // skip the clustering machinery and both scratch files entirely
+          if (pairs.count == 0) batch
+          else {
+            val pairsAll = pairs.df
+            val labels = connectedComponents(pairsAll.select("a_id", "b_id"))
+            // corpus ids occur in pairs ONLY as the a side of cross pairs,
+            // so the infected-component membership test needs no corpus
+            // table
+            val infected = labels
+              .join(pairsAll.where(col("_cross"))
+                .select(col("a_id").as("id")).distinct(), "id")
+              .select(col("label")).distinct()
+            val dropIds = labels.join(infected, Seq("label"), "left_semi").select("id")
+              .unionByName(labels.where(col("id") =!= col("label")).select("id"))
+              .distinct()
+              .withColumnRenamed("id", "doc_id")
+            // the (small) drop list goes to scratch OFF the materialized
+            // blocks so the RETURNED frame is self-contained — consuming
+            // it later never re-runs the probe
+            batch.join(scratchResult(dropIds, "cc_drop"), Seq("doc_id"), "left_anti")
+          }
+        }
+      }
+    }
   }
 
   /**
@@ -682,17 +687,19 @@ object Dedup {
   }
 
   /** Delete every scratch result under the configured scratch dir.
-    * [[connectedComponents]] leaves one `cc_<uuid>` parquet per call (and
-    * [[Knn.knnJoinTable]] one `knn_<uuid>`) — the RETURNED frame reads it,
-    * and deleteOnExit only cleans at JVM shutdown, so a long-lived service
-    * clustering per batch accumulates result files. Call this once no
-    * previously returned frame is still being consumed. */
+    * Each [[scratchResult]] call ([[connectedComponents]],
+    * [[dedupBatchAgainstIndex]], [[Knn.knnJoinTable]],
+    * [[Similarity.semanticDedup]]) leaves one `<prefix>_<uuid>` parquet —
+    * the RETURNED frame reads it, and deleteOnExit only cleans at JVM
+    * shutdown, so a long-lived service clustering per batch accumulates
+    * result files. Call this once no previously returned frame is still
+    * being consumed. */
   def purgeClusterScratch(spark: org.apache.spark.sql.SparkSession): Unit = {
     val base = new org.apache.hadoop.fs.Path(scratchDir(spark))
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(base))
-      fs.listStatus(base).filter(st => st.getPath.getName.startsWith("cc_") ||
-          st.getPath.getName.startsWith("knn_"))
+      fs.listStatus(base)
+        .filter(st => ScratchPrefixes.exists(p => st.getPath.getName.startsWith(p + "_")))
         .foreach(st => fs.delete(st.getPath, true))
   }
 

@@ -1,11 +1,14 @@
 package graft.operators
 
+import scala.util.Using
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.cells.CellIndex
 import graft.cells.CellIndex.BBox
 import graft.functions.geo
+import graft.operators.Materialized.materialize
 import graft.plans.SnapshotLog
 import graft.plans.SnapshotLog.PartitionLineage
 
@@ -373,10 +376,10 @@ object ImageTable {
       .withColumn("_fsplit",
         pmod(xxhash64(col("image_id")), coalesce(col("_nf"), lit(1))).cast("int"))
       .drop("_pc", "_ps", "_nf")
-    val (merged, handle) = org.apache.spark.sql.classic.GraftBridge
-      .persistedCopy(LeafWrite.byLeaf(store, partCols :+ "_fsplit": _*)
-        .drop("_fsplit"))
-    try {
+    // released even on a failed write — a retrying service must not pin
+    Using.resource(materialize(LeafWrite.byLeaf(store, partCols :+ "_fsplit": _*)
+        .drop("_fsplit"))) { m =>
+      val merged = m.df
       onCompactBeforeGuard()
       // concurrent-append guard: a file landing in a guarded cell between
       // the snapshot read and this commit would be destroyed (affected
@@ -411,8 +414,7 @@ object ImageTable {
       }
       merged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
         .partitionBy(partCols: _*).parquet(path)
-    } finally handle.unpersist(true)   // released even on a failed write —
-                                       // a retrying service must not pin
+    }
     affectedCells.size.toLong
   }
 

@@ -1,10 +1,13 @@
 package graft.operators
 
+import scala.util.Using
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.cells.CellIndex
+import graft.operators.Materialized.materialize
 
 /**
  * k-nearest-neighbor join: cell-disk expansion + distance-bounded top-k
@@ -203,9 +206,9 @@ object Knn {
    * one exact pass — query side broadcast while broadcast-sized, a
    * partitioned cartesian beyond that (bounded rarity by construction).
    *
-   * Round results accumulate in a scratch parquet
-   * (`spark.graft.scratchDir`) and every per-round persisted block is
-   * released deterministically (the connectedComponents discipline).
+   * Round results land in one scratch parquet ([[Dedup.scratchResult]],
+   * `knn_` prefix) and every per-round materialized block is released
+   * deterministically (the connectedComponents discipline).
    * Returns (qid, id, dist, rank) — exactly k rows per query (fewer iff
    * the whole table has < k rows).
    *
@@ -218,41 +221,34 @@ object Knn {
   def knnJoinTable(points: DataFrame, queries: DataFrame, k: Int,
                    pRes: Int = 5,
                    maxBroadcastQueries: Long = 1000000L): DataFrame = {
-    import org.apache.spark.sql.classic.GraftBridge.{persistedCopy, persistedCopyCounted}
     require(k >= 1)
     val spark = points.sparkSession
     val w = Window.partitionBy("qid").orderBy(col("dist"), col("id"))
-    val scratch = Dedup.scratchDir(spark) + s"/knn_${java.util.UUID.randomUUID()}"
     val norm = (df: DataFrame) => df
       .select(col("qid").cast("long"), col("id").cast("long"),
         col("dist").cast("double"), col("rank").cast("int"))
 
-    // persistedCopyCounted: the unresolved-set size rides the
-    // materialization the copy pays anyway — no separate count job per
-    // round. Per-round results are NOT written per round: each round's
-    // topk stays persisted (Q x k rows, bounded) and ONE union write
-    // lands everything — rounds-1 parquet write jobs saved; every block
-    // is still released deterministically in the finally (round 6).
-    val roundResults = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val roundRdds = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]]
-    var (un, unRdd, unCount) = persistedCopyCounted(
-      queries.select(col("qid"), col("qlon"), col("qlat")))
-    try {
-      for (r <- Seq(1, 4, 16, 64) if unCount > 0) {
-        val (topk, topkRdd) = persistedCopy(roundTopK(points, un, r, k, pRes))
-        roundRdds += topkRdd
+    // the unresolved-set size is the count the materialization pays
+    // anyway — no separate count job per round. Per-round results are NOT
+    // written per round: each round's topk stays materialized (Q x k rows,
+    // bounded) and ONE union write lands everything — rounds-1 parquet
+    // write jobs saved; every block is still released deterministically
+    // when the call returns or fails (round 6).
+    Using.Manager { use =>
+      val roundResults = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      var un = use(materialize(queries.select(col("qid"), col("qlon"), col("qlat"))))
+      for (r <- Seq(1, 4, 16, 64) if un.count > 0) {
+        val topk = use(materialize(roundTopK(points, un.df, r, k, pRes))).df
         val resolved = topk.groupBy("qid", "qlat")
           .agg(count(lit(1)).as("_n"), max("dist").as("_maxd"))
           .where(col("_n") === k && col("_maxd") <= boundCol(col("qlat"), r))
           .select("qid")
         roundResults += norm(topk.join(resolved, "qid"))
-        val (unNext, unNextRdd, unNextCount) = persistedCopyCounted(
-          un.join(resolved, Seq("qid"), "left_anti"))
-        unRdd.unpersist(false)
-        un = unNext; unRdd = unNextRdd; unCount = unNextCount
+        val unNext = use(materialize(un.df.join(resolved, Seq("qid"), "left_anti")))
+        un.release()
+        un = unNext
       }
-      if (unCount > 0) {
+      if (un.count > 0) {
         // stragglers: exact top-k. Broadcast the query side only while it
         // is genuinely broadcast-sized — a HUGE straggler set is possible
         // (k > |points| means NO query ever resolves), and an unbounded
@@ -260,8 +256,8 @@ object Knn {
         // the cap the pass degrades to a partitioned cartesian (slow but
         // memory-bounded, matching the contract that stragglers are the
         // exception, not the plan)
-        val qside = un.select(col("qid"), col("qlon"), col("qlat"))
-        val qb = if (unCount <= maxBroadcastQueries) broadcast(qside) else qside
+        val qside = un.df.select(col("qid"), col("qlon"), col("qlat"))
+        val qb = if (un.count <= maxBroadcastQueries) broadcast(qside) else qside
         roundResults += norm(points.crossJoin(qb)
           .withColumn("dist", distCol)
           .withColumn("rank", row_number().over(w))
@@ -269,19 +265,11 @@ object Knn {
           .select("qid", "id", "dist", "rank"))
       }
       if (roundResults.nonEmpty)
-        roundResults.reduce(_ unionByName _)
-          .write.mode("overwrite").parquet(scratch)
-    } finally {
-      unRdd.unpersist(true)
-      roundRdds.foreach(_.unpersist(true))
-    }
-    val p = new org.apache.hadoop.fs.Path(scratch)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p))   // empty query table: nothing was ever written
-      return spark.range(0).select(col("id").as("qid"), col("id"),
-        lit(0.0).as("dist"), lit(0).as("rank"))
-    fs.deleteOnExit(p)
-    spark.read.parquet(scratch)
+        Dedup.scratchResult(roundResults.reduce(_ unionByName _), "knn")
+      else   // empty query table: nothing to write
+        spark.range(0).select(col("id").as("qid"), col("id"),
+          lit(0.0).as("dist"), lit(0).as("rank"))
+    }.get
   }
 
   /** One [[knnJoinTable]] round's candidate top-k frame (lazy): the

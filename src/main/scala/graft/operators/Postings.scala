@@ -1,9 +1,13 @@
 package graft.operators
 
+import scala.util.Using
+
 import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.operators.Materialized.materialize
 
 /**
  * Stored inverted (postings) index over a document corpus — the
@@ -100,7 +104,7 @@ object Postings {
     val spark = docs.sparkSession
     // the postings write IS the materialization: the one tokenize pass
     // lands directly in the store, and doclen derives from reading the
-    // just-written files back PRUNED to (doc_id, tf) — no persistedCopy
+    // just-written files back PRUNED to (doc_id, tf) — no materialized copy
     // (no second full pass + no memory copy), and the corpus counters
     // ride the doclen write as observe() metrics instead of a separate
     // aggregation job (round 6: build cost drops from 4 jobs to 2)
@@ -137,9 +141,8 @@ object Postings {
     val spark = docs.sparkSession
     val Seq(buckets, n0, tot0) = IndexMeta.readL(spark, metaPath(path),
       "postings meta", "writePostingsIndex", Seq("buckets", "n_docs", "total_len"))
-    val (pf, handle) = org.apache.spark.sql.classic.GraftBridge
-      .persistedCopy(postingsFrame(docs, buckets.toInt, textCol))
-    try {
+    Using.resource(materialize(postingsFrame(docs, buckets.toInt, textCol))) { batchPf =>
+      val pf = batchPf.df
       pf.write.mode("append").partitionBy("w_b").parquet(path)
       // batch counters ride the doclen write as observe() metrics — no
       // second materialization of the doclen frame (round 6)
@@ -150,7 +153,7 @@ object Postings {
       val m = obs.get
       writeMeta(spark, path, buckets.toInt, n0 + m("n").asInstanceOf[Long],
         tot0 + m("tot").asInstanceOf[Long])
-    } finally { handle.unpersist(true); () }
+    }
   }
 
   /** True iff `path` holds a [[writePostingsIndex]] store (the parameter
@@ -168,7 +171,7 @@ object Postings {
     * lands as ONE file, word-sorted for row-group min/max skipping. Row
     * set, bucket layout, and meta are unchanged (query results identical,
     * spec-proven). The current rows are eagerly materialized off the
-    * store (persistedCopy) BEFORE the overwrite: a lazy self-overwrite
+    * store ([[Materialized]]) BEFORE the overwrite: a lazy self-overwrite
     * lineage would read files the write is deleting; the block handle is
     * released deterministically. */
   def compactPostingsIndex(spark: SparkSession, path: String): Unit = {
@@ -176,14 +179,13 @@ object Postings {
     // about to delete — it is re-written after the data lands
     val buckets = readMetaBuckets(spark, path)
     val cur = spark.read.schema(PostingsSchema).parquet(path)
-    val (frozen, handle) = org.apache.spark.sql.classic.GraftBridge
-      .persistedCopy(cur)
-    // doclen must freeze too: the root overwrite deletes the _doclen
-    // subdirectory along with everything else under the index path
-    val (frozenDl, dlHandle) = org.apache.spark.sql.classic.GraftBridge
-      .persistedCopy(spark.read.schema(DoclenSchema).parquet(doclenPath(path))
-        .dropDuplicates("doc_id"))    // physical replay repair
-    try {
+    Using.Manager { use =>
+      val frozen = use(materialize(cur)).df
+      // doclen must freeze too: the root overwrite deletes the _doclen
+      // subdirectory along with everything else under the index path
+      val frozenDl = use(materialize(
+        spark.read.schema(DoclenSchema).parquet(doclenPath(path))
+          .dropDuplicates("doc_id"))).df    // physical replay repair
       LeafWrite.byLeaf(
           frozen.dropDuplicates("word", "doc_id"),  // physical replay repair
           "w_b")
@@ -210,7 +212,7 @@ object Postings {
       // compaction resynchronizes
       val (n, tot) = doclenStats(allDl)
       writeMeta(spark, path, buckets, n, tot)
-    } finally { dlHandle.unpersist(true); handle.unpersist(true); () }
+    }.get
   }
 
   /** The pruned postings scan for `terms`: buckets derive from the meta

@@ -1,10 +1,13 @@
 package graft.operators
 
+import scala.util.Using
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.vec
+import graft.operators.Materialized.materialize
 
 /**
  * Approximate-nearest-neighbor search over an embedding column
@@ -562,7 +565,7 @@ object Similarity {
    *    only the k x dim integer centroid table ever reaches the driver.
    *    Empty clusters keep their previous centroid.
    *
-   * The quantized frame is materialized ONCE via persistedCopy for the
+   * The quantized frame is materialized ONCE ([[Materialized]]) for the
    * seed collect + iteration passes and released deterministically
    * before returning (zero pinned blocks — the clustering-gate
    * contract); the RETURNED assignment re-derives its lineage from the
@@ -628,42 +631,36 @@ object Similarity {
     * before returning the final integer centroids (zero pinned blocks —
     * the clustering-gate contract). */
   private def lloyd(embs: DataFrame, k: Int, iters: Int,
-                    dim: Int): Array[Array[Long]] = {
-    val (cents, _, handle) = lloydKeep(embs, k, iters, dim)
-    handle.unpersist(true)
-    cents
-  }
+                    dim: Int): Array[Array[Long]] =
+    lloydWith(embs, k, iters, dim)((cents, _) => cents)
 
-  /** [[lloyd]] that additionally RETURNS the persisted quantized frame
-    * `(vec_id, _q)` and its block handle, so a caller that immediately
-    * needs the final assignment (SemDeDup) derives it from the persisted
-    * blocks instead of re-reading + re-quantizing the source — one fewer
-    * full corpus pass. The caller owns the handle and MUST release it
-    * (`handle.unpersist(true)`) once its derived frames are
-    * materialized. */
-  private def lloydKeep(embs: DataFrame, k: Int, iters: Int, dim: Int)
-      : (Array[Array[Long]], DataFrame,
-         org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]) = {
+  /** [[lloyd]] that also hands the materialized quantized frame
+    * `(vec_id, _q)` to `use` with the final centroids, so a caller that
+    * immediately needs the final assignment (SemDeDup) derives it from
+    * the materialized blocks instead of re-reading + re-quantizing the
+    * source — one fewer full corpus pass. The blocks are released when
+    * `use` returns or throws, so `use` must materialize whatever it keeps
+    * of the frame. */
+  private def lloydWith[A](embs: DataFrame, k: Int, iters: Int, dim: Int)
+                          (use: (Array[Array[Long]], DataFrame) => A): A = {
     require(k >= 1 && iters >= 0, "k >= 1, iters >= 0")
     val src = embs.select(col("vec_id"), quantized.as("_q"))
     val acc = new SeedAcc(k)
     src.sparkSession.sparkContext.register(acc, "kmeans-seed-topk")
-    val (q, handle) = org.apache.spark.sql.classic.GraftBridge
-      .persistedCopyTapped(src, r => {
-        // NULL ids sort FIRST under Spark's ascending nulls-first order;
-        // "" sorts before every md5 hex, replicating that placement
-        val key = if (r.isNullAt(0)) "" else md5Hex(r.getLong(0).toString)
-        val id = if (r.isNullAt(0)) Long.MinValue else r.getLong(0)
-        val vec = if (r.isNullAt(1)) null else r.getArray(1).toLongArray()
-        acc.add((key, id, vec))
-      })
-    try {
+    Using.resource(materialize(src, tap = r => {
+      // NULL ids sort FIRST under Spark's ascending nulls-first order;
+      // "" sorts before every md5 hex, replicating that placement
+      val key = if (r.isNullAt(0)) "" else md5Hex(r.getLong(0).toString)
+      val id = if (r.isNullAt(0)) Long.MinValue else r.getLong(0)
+      val vec = if (r.isNullAt(1)) null else r.getArray(1).toLongArray()
+      acc.add((key, id, vec))
+    })) { q =>
       var cents: Array[Array[Long]] = acc.value.sortBy(t => (t._1, t._2))
         .take(k).map(_._3).toArray
       require(cents.length == k, s"need >= $k vectors, got ${cents.length}")
       require(cents.forall(_.length == dim), "dim mismatch")
       for (_ <- 0 until iters) {
-        val sums = assignLarge(q, cents)
+        val sums = assignLarge(q.df, cents)
           .select(col("cluster"), posexplode(col("_q")).as(Seq("d", "v")))
           .groupBy("cluster", "d").agg(sum("v").as("s"), count(lit(1)).as("n"))
           .collect()                      // k x dim rows — driver-small
@@ -673,11 +670,7 @@ object Similarity {
         }
         cents = next
       }
-      (cents, q, handle)
-    } catch {
-      // a failed fit must not leave blocks pinned; success hands the
-      // handle to the caller
-      case t: Throwable => handle.unpersist(true); throw t
+      use(cents, q.df)
     }
   }
 
@@ -692,42 +685,36 @@ object Similarity {
    *
    * Scale shape: the candidate join is an equi-join ON the cluster id —
    * never all-pairs. The quadratic term is n^2/k in expectation, so the
-   * caller sizes k large (the [[assignLarge]] data-literal assignment is
-   * k-independent in plan cost; the bound is the centroid literal's
-   * broadcast size, see [[kmeansPredictLarge]]); clusters that still
+   * caller sizes k large (the [[assignLarge]] assignment is
+   * k-independent in plan cost; the bound is the centroid array's
+   * broadcast size, see [[kmeansPredict]]); clusters that still
    * exceed `maxCluster` rows opt OUT of pair
    * generation entirely (all rows kept — the capBuckets discipline: a
    * degenerate cluster is quadratic and a cluster that big carries no
    * near-dup signal worth n^2 work), which the oracle replicates as a
-   * HAVING count filter. The assignment frame is materialized ONCE via
-   * persistedCopy and serves the size census, both pair sides, and the
-   * output join; the result lands in `cc_sem_*` scratch
-   * (`spark.graft.scratchDir`, purge via [[Dedup.purgeClusterScratch]])
-   * so the returned frame is self-contained and zero blocks stay pinned.
+   * HAVING count filter. The assignment frame is materialized ONCE
+   * ([[Materialized]]) and serves the size census, both pair sides, and
+   * the output join; the result goes through [[Dedup.scratchResult]]
+   * (`cc_sem_` prefix, purge via [[Dedup.purgeClusterScratch]]) so the
+   * returned frame is self-contained and zero blocks stay pinned.
    */
   def semanticDedup(embs: DataFrame, k: Int, iters: Int, d2Max: Long,
                     maxCluster: Long = 100000L, dim: Int = 64): DataFrame = {
     require(d2Max >= 0L, "d2Max must be >= 0")
-    val spark = embs.sparkSession
-    // the fit's persisted quantized frame feeds the assignment persist
-    // directly (lloydKeep): no second source read + quantize pass
-    val (cents, qFit, qFitHandle) = lloydKeep(embs, k, iters, dim)
-    val (qa, qaHandle) =
-      try org.apache.spark.sql.classic.GraftBridge.persistedCopy(
-        assignLarge(qFit, cents)
-          .select(col("vec_id"), col("cluster"), col("_q")))
-      finally qFitHandle.unpersist(true)
-    try {
-      val dropped = semanticDedupDropped(qa, maxCluster, d2Max)
-      val out = qa.select("vec_id", "cluster")
+    // the fit's materialized quantized frame feeds the assignment
+    // materialization directly: no second source read + quantize pass
+    val assigned = lloydWith(embs, k, iters, dim) { (cents, qFit) =>
+      materialize(assignLarge(qFit, cents)
+        .select(col("vec_id"), col("cluster"), col("_q")))
+    }
+    Using.resource(assigned) { qa =>
+      val dropped = semanticDedupDropped(qa.df, maxCluster, d2Max)
+      val out = qa.df.select("vec_id", "cluster")
         .join(dropped, Seq("vec_id"), "left")
         .select(col("vec_id"), col("cluster"),
           when(col("_drop").isNotNull, lit(0L)).otherwise(lit(1L)).as("kept"))
-      val scratch = Dedup.scratchDir(spark) +
-        s"/cc_sem_${java.util.UUID.randomUUID()}"
-      out.write.parquet(scratch)
-      spark.read.parquet(scratch)
-    } finally { qaHandle.unpersist(true); () }
+      Dedup.scratchResult(out, "cc_sem")
+    }
   }
 
   /** The candidate pass shared by [[semanticDedup]] and the PLANS.md
@@ -763,26 +750,13 @@ object Similarity {
     * half of the fit-once/apply-many pipeline — at 100 TB the model is
     * fit on a sample ([[kmeansFitPortable]]) and this one codegen
     * projection (centroid literals broadcast inside the expression, no
-    * join, no shuffle) labels the full corpus. */
+    * join, no shuffle) labels the full corpus. Row-preserving: duplicate
+    * vec_ids emit every copy and a NULL embedding keeps its row with a
+    * NULL cluster/d2. Bound: the k x dim centroid array ships with the
+    * task binary (~8 bytes per entry — k=100k at dim 64 is ~50 MB); past
+    * that a broadcast centroid TABLE join with an explicit row key is the
+    * next tier. */
   def kmeansPredict(embs: DataFrame, cents: Array[Array[Long]]): DataFrame =
-    assignLarge(embs.select(col("vec_id"), quantized.as("_q")), cents)
-      .select("vec_id", "cluster", "d2")
-
-  /** Large-k assignment twin of [[kmeansPredict]] — since round 6 BOTH
-    * ride [[assignLarge]] (centroids as ONE array<array<long>> data
-    * literal + higher-order zip_with/aggregate distances: plan size is
-    * the DATA, not k x dim expression nodes, and `_q` is projected once
-    * so each row quantizes once, not k times). Still a single
-    * row-preserving projection: bit-identical to the unrolled-literal
-    * path BY CONSTRUCTION on every input, including duplicate vec_ids
-    * (both copies emitted) and NULL embeddings (NULL cluster/d2), which
-    * an explode+groupBy formulation would silently collapse or drop.
-    * Bound: the k x dim long literal ships with the task binary (~8
-    * bytes per entry — k=100k at dim 64 is ~50 MB); past THAT a
-    * broadcast centroid TABLE join with an explicit row key is the next
-    * tier. The gate shares q_embed_kmeans's oracle VERBATIM. */
-  def kmeansPredictLarge(embs: DataFrame,
-                         cents: Array[Array[Long]]): DataFrame =
     assignLarge(embs.select(col("vec_id"), quantized.as("_q")), cents)
       .select("vec_id", "cluster", "d2")
 
@@ -914,8 +888,8 @@ object Similarity {
    * quotas keep the tails). Exact integer ranking — fully oracle-
    * checkable. The window partitions on the cluster id, never a global
    * sort; per-partition load is n/k, and the [[assignLarge]] assignment
-   * keeps plan cost k-independent (bound: the centroid literal's
-   * broadcast size, see [[kmeansPredictLarge]]).
+   * keeps plan cost k-independent (bound: the centroid array's
+   * broadcast size, see [[kmeansPredict]]).
    */
   def clusterCoreset(embs: DataFrame, k: Int, iters: Int, m: Int,
                      dim: Int = 64): DataFrame = {

@@ -1,11 +1,14 @@
 package graft.streaming
 
+import scala.util.Using
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.operators.{ImageTable, LeafWrite}
+import graft.operators.Materialized.materialize
 
 /**
  * Structured-Streaming ingest: continuous geocode+tile of newly arriving
@@ -472,9 +475,8 @@ object StreamingIngest {
         // persist the micro-batch: the dedup probe, the corpus write and
         // the index append each consume it — unpersisted, every consumer
         // re-reads the source files and re-minhashes the text
-        val (docs, docsRdd) = org.apache.spark.sql.classic.GraftBridge
-          .persistedCopy(batch.select(col("doc_id"), col("text")))
-        try {
+        Using.resource(materialize(batch.select(col("doc_id"), col("text")))) { copy =>
+          val docs = copy.df
           val hasIdx = Dedup.hasDedupIndex(spark, indexDir)
           val kept =
             if (hasIdx) Dedup.dedupBatchAgainstIndex(docs, indexDir,
@@ -486,7 +488,7 @@ object StreamingIngest {
           if (hasIdx) Dedup.appendToDedupIndex(kept, indexDir)
           else Dedup.writeDedupIndex(kept, indexDir, nGram, nHashes, bands,
             buckets, maxBucket)
-        } finally docsRdd.unpersist(true)
+        }
       }
       .trigger(Trigger.AvailableNow())
       .start()

@@ -4,7 +4,6 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.storage.StorageLevel
 
 /** Minimal accessor for the package-private Column <-> Expression bridge
   * (Spark 4 moved the conversions into the classic package). */
@@ -12,93 +11,10 @@ object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Eagerly materialize a DataFrame into persisted storage and return
-    * BOTH the persisted-plan frame and the backing RDD handle.
-    * `Dataset.localCheckpoint(eager = true)` exposes no handle: its blocks
-    * respond to neither `Dataset.unpersist` (the CacheManager does not
-    * track checkpoint RDDs) nor any deterministic release — only the
-    * GC-driven ContextCleaner frees them eventually. Iterative operators
-    * (connected components) need per-round release NOW, not at the next
-    * GC: `handle.unpersist(blocking)` is that release. */
-  def persistedCopy(df: DataFrame,
-                    level: StorageLevel = StorageLevel.MEMORY_AND_DISK)
-      : (DataFrame, RDD[InternalRow]) = {
+  /** A DataFrame over `rows`, which hold `df`'s rows in `df`'s schema —
+    * the package-private step behind `graft.operators.Materialized`. */
+  def frameOver(df: DataFrame, rows: RDD[InternalRow]): DataFrame = {
     val ds = df.asInstanceOf[Dataset[Row]]
-    val rdd = ds.queryExecution.toRdd.map(_.copy()).persist(level)
-    rdd.count()   // eager: materialized here, plan truncated below
-    (ds.sparkSession.internalCreateDataFrame(rdd, ds.schema), rdd)
-  }
-
-  /** [[persistedCopy]] that additionally returns the materialized row
-    * count — the count is the eager-materialization action the copy pays
-    * anyway, so callers that need |df| (iterative loops deciding whether
-    * to continue) get it without a second job. */
-  def persistedCopyCounted(df: DataFrame,
-                           level: StorageLevel = StorageLevel.MEMORY_AND_DISK)
-      : (DataFrame, RDD[InternalRow], Long) = {
-    val ds = df.asInstanceOf[Dataset[Row]]
-    val rdd = ds.queryExecution.toRdd.map(_.copy()).persist(level)
-    val n = rdd.count()   // eager: materialized here, plan truncated below
-    (ds.sparkSession.internalCreateDataFrame(rdd, ds.schema), rdd, n)
-  }
-
-  /** [[persistedCopyCounted]] that additionally collects the DISTINCT
-    * values of the INT column at `intIdx` via a set-semantics accumulator
-    * riding the materialization pass — for driver-small id sets (partition
-    * bucket lists) that would otherwise cost a separate distinct+collect
-    * job. At-least-once duplicates from task retries are absorbed by the
-    * set; no value can be missed (every partition runs at least once).
-    * The caller guarantees the column's distinct cardinality is
-    * driver-small. */
-  def persistedCopyCountedIntSet(df: DataFrame, intIdx: Int,
-                                 level: StorageLevel = StorageLevel.MEMORY_AND_DISK)
-      : (DataFrame, RDD[InternalRow], Long, Set[Int]) = {
-    val ds = df.asInstanceOf[Dataset[Row]]
-    val acc = ds.sparkSession.sparkContext.collectionAccumulator[Int]
-    val rdd = ds.queryExecution.toRdd.map { r =>
-      if (!r.isNullAt(intIdx)) acc.add(r.getInt(intIdx))
-      r.copy()
-    }.persist(level)
-    val n = rdd.count()
-    import scala.jdk.CollectionConverters._
-    (ds.sparkSession.internalCreateDataFrame(rdd, ds.schema), rdd, n,
-      acc.value.asScala.toSet)
-  }
-
-  /** [[persistedCopy]] with a caller-supplied TAP invoked on every
-    * internal row during the materialization pass (before the defensive
-    * copy) — the generic "ride the persist job" hook behind bounded
-    * accumulator collections (e.g. the k-means seed top-k). The tap runs
-    * on executors: it must be serializable and must only talk back
-    * through registered accumulators; at-least-once semantics under task
-    * retries are the caller's contract. */
-  def persistedCopyTapped(df: DataFrame, tap: InternalRow => Unit,
-                          level: StorageLevel = StorageLevel.MEMORY_AND_DISK)
-      : (DataFrame, RDD[InternalRow]) = {
-    val ds = df.asInstanceOf[Dataset[Row]]
-    val rdd = ds.queryExecution.toRdd.map { r => tap(r); r.copy() }
-      .persist(level)
-    rdd.count()
-    (ds.sparkSession.internalCreateDataFrame(rdd, ds.schema), rdd)
-  }
-
-  /** [[persistedCopy]] that additionally counts rows whose BOOLEAN column
-    * at `flagIdx` is true, via an accumulator riding the materialization
-    * pass — one job instead of persist + count. The count is
-    * AT-LEAST-ONCE under task retries (accumulators in transformations
-    * are not exactly-once): a retry can only inflate a genuinely nonzero
-    * count, never turn zero into nonzero, so it is safe exactly for
-    * "did anything change" convergence checks — not for exact censuses. */
-  def persistedCopyFlagCount(df: DataFrame, flagIdx: Int,
-                             level: StorageLevel = StorageLevel.MEMORY_AND_DISK)
-      : (DataFrame, RDD[InternalRow], Long) = {
-    val ds = df.asInstanceOf[Dataset[Row]]
-    val acc = ds.sparkSession.sparkContext.longAccumulator
-    val rdd = ds.queryExecution.toRdd.map { r =>
-      if (!r.isNullAt(flagIdx) && r.getBoolean(flagIdx)) acc.add(1L)
-      r.copy()
-    }.persist(level)
-    rdd.count()   // eager: materialized here, plan truncated below
-    (ds.sparkSession.internalCreateDataFrame(rdd, ds.schema), rdd, acc.value)
+    ds.sparkSession.internalCreateDataFrame(rows, ds.schema)
   }
 }

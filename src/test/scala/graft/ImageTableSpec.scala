@@ -378,6 +378,16 @@ class ImageTableSpec extends SparkFunSuite {
       == got, "knnJoinTable over the stored p_cell table diverged")
   }
 
+  test("knnJoinTable runs a fixed number of Spark jobs") {
+    val cs = Fixtures.cityCenters(Fixtures.DefaultSeed)
+    val qdf = Seq((1L, cs(0)._1, cs(0)._2), (2L, cs(3)._1 + 0.2, cs(3)._2),
+      (3L, 170.0, 85.0), (4L, 90.0, 45.0)).toDF("qid", "qlon", "qlat")
+    val pts = table.select(col("image_id"), col("lon"), col("lat"), col("cell"))
+      .withColumn("id", expr("cast(substring(image_id, 5) as long)"))
+    pts.count()   // the fixture's cache is built outside the probe
+    assert(WriteProbe.jobCount(spark)(Knn.knnJoinTable(pts, qdf, k = 10)) == 16)
+  }
+
   test("knnJoinTable equals knn on a randomized 40-query cloud (seeded)") {
     val pts = table.select(col("image_id"), col("lon"), col("lat"), col("cell"))
       .withColumn("id", expr("cast(substring(image_id, 5) as long)"))

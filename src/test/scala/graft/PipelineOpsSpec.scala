@@ -353,8 +353,12 @@ class PipelineOpsSpec extends SparkFunSuite {
   test("semanticDedup drops exactly the smaller-id-neighbor rows the " +
        "driver reference computes; planted near-dup partners all drop") {
     val k = 5; val iters = 2; val d2Max = 10000L   // ~cos 0.995 on unit vecs
+    embs.count()   // register the fixture's own cache before the baseline
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val got = Similarity.semanticDedup(embs, k, iters, d2Max).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"pinned by semanticDedup: $leaked")
     // driver reference: refKmeans assignment, then greedy min-id survivor
     // over exact integer pair distances within each cluster
     val (asg, _) = refKmeans(vecRows, k, iters)
@@ -440,13 +444,15 @@ class PipelineOpsSpec extends SparkFunSuite {
         df.select(col("vec_id"), Similarity.quantized.as("_q")), cents)
       .select("vec_id", "cluster", "d2")
 
+  // the large-k path (q_embed_kmeans_large) is kmeansPredict itself; the
+  // test keeps the name of the twin it replaced
   test("kmeansPredictLarge is bit-identical to the literal-codegen " +
        "predict: ties, duplicate vec_ids, NULL embeddings") {
     Seq(3, 7).foreach { k =>
       val (_, cents) = Similarity.kmeansFitPortable(embs, k, iters = 2)
       val lit = predictLiteral(embs, cents).collect()
         .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-      val large = Similarity.kmeansPredictLarge(embs, cents).collect()
+      val large = Similarity.kmeansPredict(embs, cents).collect()
         .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
       assert(large == lit, s"k=$k")
     }
@@ -469,7 +475,7 @@ class PipelineOpsSpec extends SparkFunSuite {
           if (r.isNullAt(2)) None else Some(r.getLong(2)))
       }.toSeq.sorted
     val lit = dump(predictLiteral(dirty, cents))
-    val large = dump(Similarity.kmeansPredictLarge(dirty, cents))
+    val large = dump(Similarity.kmeansPredict(dirty, cents))
     assert(large == lit)
     assert(lit.count(_._1 == 2L) == 2, "duplicate id must emit twice")
     assert(lit.filter(_._1 == 9L) == Seq((9L, None, None)),
@@ -1310,14 +1316,102 @@ class PipelineOpsSpec extends SparkFunSuite {
     // no NEW blocks pinned by the call (the suite itself caches fixtures)
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"pinned by connectedComponents: $leaked")
-    // resolve the scratch dir the same way Dedup does (conf first)
-    val base = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.graft.scratchDir",
-        System.getProperty("java.io.tmpdir") + "/graft_scratch"))
+    val base = new org.apache.hadoop.fs.Path(Dedup.scratchDir(spark))
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.listStatus(base).exists(_.getPath.getName.startsWith("cc_")))
     Dedup.purgeClusterScratch(spark)
     assert(!fs.listStatus(base).exists(_.getPath.getName.startsWith("cc_")))
+  }
+
+  test("connectedComponents that cannot converge in maxIters throws and " +
+       "pins nothing") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val chain = (0L to 40L).sliding(2).map(s => (s(1), s(0))).toSeq
+      .toDF("a_id", "b_id")
+    intercept[IllegalStateException] {
+      Dedup.connectedComponents(chain, maxIters = 1)
+    }
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"pinned by a failed connectedComponents: $leaked")
+  }
+
+  // index probe fixture: the corpus is the planted ids < 100; the clean
+  // batch shares no near-dup with it or within itself, the dirty batch is
+  // the copies and near-dups plus a batch-only near-dup pair
+  private lazy val probeIdx = {
+    val d = java.nio.file.Files.createTempDirectory("graft_idx_probe_").toString
+    Dedup.writeDedupIndex(docs.where(col("doc_id") < 100), d, nGram = 3,
+      nHashes = 4, bands = 4, buckets = 8, maxBucket = 0)
+    d
+  }
+  private lazy val cleanBatch = Seq(
+    (300L, "totally fresh unrelated content words here today indeed"),
+    (301L, "red green blue cyan magenta yellow black white pink brown"))
+    .toDF("doc_id", "text")
+  private lazy val dirtyBatch = docs.where(col("doc_id") >= 100)
+    .unionByName(Seq(
+      (301L, "red green blue cyan magenta yellow black white pink brown"),
+      (302L, "red green blue cyan magenta yellow black white pink olive"))
+      .toDF("doc_id", "text"))
+
+  test("dedupBatchAgainstIndex pins nothing on its early exits (empty " +
+       "banding, clean batch) nor on a dirty batch") {
+    docs.count()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    def probe(batch: org.apache.spark.sql.DataFrame) =
+      Dedup.dedupBatchAgainstIndex(batch, probeIdx, threshold = 0.5,
+        maxBucket = 0)
+    val empty = cleanBatch.limit(0)
+    assert(probe(empty) eq empty, "an empty batch must return unchanged")
+    assert(probe(cleanBatch) eq cleanBatch, "a clean batch must return unchanged")
+    val kept = probe(dirtyBatch).select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(kept == Set(301L), s"kept $kept")
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"pinned by dedupBatchAgainstIndex: $leaked")
+  }
+
+  test("every scratch result a call returns is marked delete-on-exit") {
+    val fs = new org.apache.hadoop.fs.Path(Dedup.scratchDir(spark))
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val points = Seq((1L, 10.0, 20.0), (2L, 10.5, 20.5), (3L, -40.0, 60.0))
+      .toDF("id", "lon", "lat")
+      .withColumn("cell", graft.functions.geo.grid_cell(col("lon"), col("lat")))
+    val queries = Seq((1L, 10.1, 20.1)).toDF("qid", "qlon", "qlat")
+    val results = Seq(
+      "cc_" -> Dedup.connectedComponents(
+        Seq((1L, 2L), (2L, 3L)).toDF("a_id", "b_id")),
+      "cc_drop_" -> Dedup.dedupBatchAgainstIndex(dirtyBatch, probeIdx,
+        threshold = 0.5, maxBucket = 0),
+      "knn_" -> graft.operators.Knn.knnJoinTable(points, queries, k = 2),
+      "cc_sem_" -> Similarity.semanticDedup(embs, k = 5, iters = 2,
+        d2Max = 10000L))
+    results.foreach { case (prefix, df) =>
+      val names = df.inputFiles.map(f =>
+        new org.apache.hadoop.fs.Path(f).getParent.getName).distinct.toSeq
+      assert(names.size == 1 && names.head.startsWith(prefix),
+        s"$prefix result reads $names")
+      // the path as the engine registers it: the resolved dir + the name
+      val dir = new org.apache.hadoop.fs.Path(
+        Dedup.scratchDir(spark) + "/" + names.head)
+      assert(fs.cancelDeleteOnExit(dir), s"$dir is not marked delete-on-exit")
+      fs.deleteOnExit(dir)
+    }
+  }
+
+  test("job counts: connectedComponents, a clean-batch index probe and " +
+       "kmeansFitPortable run a fixed number of Spark jobs") {
+    docs.count(); embs.count(); probeIdx   // fixtures are built outside
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a_id", "b_id")
+    val counts = Map(
+      "connectedComponents" ->
+        WriteProbe.jobCount(spark)(Dedup.connectedComponents(pairs)),
+      "clean probe" -> WriteProbe.jobCount(spark)(
+        Dedup.dedupBatchAgainstIndex(cleanBatch, probeIdx, threshold = 0.5,
+          maxBucket = 0)),
+      "kmeansFitPortable" -> WriteProbe.jobCount(spark)(
+        Similarity.kmeansFitPortable(embs, k = 5, iters = 3)))
+    assert(counts == Map("connectedComponents" -> 6, "clean probe" -> 4,
+      "kmeansFitPortable" -> 4))
   }
 
   test("duplicatePassages finds exactly the brute-force shared windows with " +

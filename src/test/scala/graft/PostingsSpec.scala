@@ -83,7 +83,10 @@ class PostingsSpec extends SparkFunSuite {
     val later = docs.where(col("doc_id") > 3L)
       .unionByName(Seq((6L, "alpha beta")).toDF("doc_id", "text"))
     Postings.writePostingsIndex(first, d1, buckets = 8)
+    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
     Postings.appendToPostingsIndex(later, d1)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- pinnedBefore
+    assert(leaked.isEmpty, s"appendToPostingsIndex pinned: $leaked")
     Postings.writePostingsIndex(docs.unionByName(
       Seq((6L, "alpha beta")).toDF("doc_id", "text")), d2, buckets = 8)
     def dump(d: String) = spark.read.parquet(d)

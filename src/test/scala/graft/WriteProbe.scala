@@ -45,6 +45,20 @@ object WriteProbe {
     (res, Run(descriptions.asScala.toSeq, writeStages.map(stageTasks.get)))
   }
 
+  /** Spark jobs `body` runs, counted with adaptive execution off. AQE runs
+    * every shuffle and broadcast stage as a job of its own, and how many
+    * of those a plan takes can change with the order in which concurrent
+    * stages finish (connected components on a 3-pair fixture: 17 or 18
+    * jobs from the same code). With AQE off the count is the actions the
+    * code runs, which is what a job-count spec pins. */
+  def jobCount(spark: SparkSession)(body: => Any): Int = {
+    val key = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try record(spark)(body)._2.jobDescriptions.size
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   /** Data files (names not starting with `_` or `.`) per leaf directory
     * under `root`, keyed by the leaf's path relative to `root`
     * (e.g. "p_cell=12/p_salt=0"). Directories starting with `_` are not
