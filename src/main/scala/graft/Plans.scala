@@ -36,7 +36,8 @@ object Plans {
 
     val sections = Seq(
       "bbox extract over the salted partitioned images table " +
-        "(expect: PartitionFilters on p_cell, PushedFilters on xbin/ybin, " +
+        "(expect: PartitionFilters on p_cell, the bin rectangles as one " +
+        "bin_rects filter whose code is the same for every box, " +
         "WholeStageCodegen throughout)" ->
         fmt(ImageTable.extractBBox(table, b)),
       "polygon extract (cell prune + codegen ray-casting refinement)" ->
@@ -45,7 +46,8 @@ object Plans {
       "tile histogram (encoder inside WSCG, partial+final hash agg)" ->
         fmt(ImageTable.derive(images).groupBy("cell").count()),
       "stored planet-DB extract (expect: PartitionFilters on the coarse p " +
-        "column for nodes/ways/relations scans + PushedFilters on xbin/ybin)" -> {
+        "column for the ways/relations scans, pBits read from the store's " +
+        "sidecar, + a bin_rects filter on xbin/ybin)" -> {
         import spark.implicits._
         val planet = Fixtures.localPlanet(20000, 6000, 1000)
         val t = PlanetExtract.ingest(planet.nodes.toDF(), planet.ways.toDF(),
@@ -53,7 +55,7 @@ object Plans {
         val pdir = s"$dir/planet_store"
         PlanetExtract.writeTables(t, pdir)
         val stored = PlanetExtract.readTables(spark, pdir)
-        fmt(PlanetExtract.bboxStored(stored, b))
+        fmt(PlanetExtract.bbox(stored, b))
       },
       "ANN LSH probe (ONE scan: all 8 table signatures computed in a single " +
         "projection, OR-combined filter — no per-table scan+union)" -> {
@@ -239,9 +241,10 @@ object Plans {
         fmt(graft.operators.Postings.searchAll(spark, pdir, Seq("w3", "w17")))
       },
       "refined bbox extract over the stored planet (expect the per-way bin " +
-        "BOUNDS ranges as PushedFilters on the ways scan — only ways whose " +
-        "bound rects touch the bbox are exploded, never the whole table; " +
-        "the reference's vex.c:883 single-cell-index TODO, fixed)" -> {
+        "BOUNDS overlap as a bin_rects filter on the ways scan below the " +
+        "refs explode — only ways whose bound rects touch the bbox are " +
+        "exploded, never the whole table; the reference's vex.c:883 " +
+        "single-cell-index TODO, fixed)" -> {
         val stored = PlanetExtract.readTables(spark, s"$dir/planet_store")
         fmt(PlanetExtract.bboxRefined(stored, b))
       },

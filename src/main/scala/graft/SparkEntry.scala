@@ -319,7 +319,7 @@ object SparkEntry {
       // count is a knob, not a constant — at planet scale it grows
       PlanetExtract.writeTables(t, tmp, pBits = 3)
       val stored = PlanetExtract.readTables(s, tmp)
-      PlanetExtract.bboxStored(stored, qBox, pBits = 3)   // directory-pruned
+      PlanetExtract.bbox(stored, qBox)   // directory-pruned (pBits from the store)
         .select(col("kind"), col("id"), col("cell").cast("long").as("cell"))
         .orderBy("kind", "id")
     }),

@@ -2,8 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.classic.GraftBridge
 import org.apache.spark.sql.types._
 
@@ -222,6 +224,114 @@ object PointInPolygon {
 }
 
 /**
+ * Rectangle-cover test with the rectangles as a reference object: true iff
+ * the interval box [xlo, xhi] x [ylo, yhi] overlaps one of `rects`, the
+ * flattened (x0, x1, y0, y1) quads of a cover (inclusive bounds). A point
+ * passes the same column as lo and hi. This is the OR over rectangles of
+ * `xlo <= x1 && xhi >= x0 && ylo <= y1 && yhi >= y0` — with SQL's
+ * three-valued logic: a null child leaves a rectangle unknown unless
+ * another of its comparisons is false, and unknown without a hit is null.
+ *
+ * Why not that literal OR tree: primitive literals are inlined into
+ * generated Java, so every new query box would be a new class to compile.
+ * Here the box rides in the reference array and the generated code is the
+ * same for every box. The price is that the test does not push down as a
+ * parquet filter; partition-column ranges, which prune directories at
+ * planning, stay plain literals at the call sites.
+ *
+ * Children must be int (cell bins) or double (coordinates); rects are
+ * doubles, which hold every int exactly. Double comparisons follow
+ * Spark's: NaN sorts above every number.
+ */
+case class BinRects(first: Expression, second: Expression, third: Expression,
+                    fourth: Expression, rects: Array[Double])
+    extends QuaternaryExpression {
+  require(rects.length % 4 == 0, "rects are flattened (x0, x1, y0, y1) quads")
+  override def dataType: DataType = BooleanType
+  override def nullable: Boolean = children.exists(_.nullable)
+  override def prettyName: String = "bin_rects"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    children.find(c => c.dataType != IntegerType && c.dataType != DoubleType) match {
+      case None => TypeCheckResult.TypeCheckSuccess
+      case Some(c) => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires int or double inputs, got ${c.dataType.sql}")
+    }
+
+  override def eval(input: InternalRow): Any = {
+    def num(e: Expression): java.lang.Double = e.eval(input) match {
+      case null => null
+      case v => v.asInstanceOf[Number].doubleValue
+    }
+    BinRects.test(rects, num(first), num(second), num(third), num(fourth))
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val r = ctx.addReferenceObj("rects", rects, "double[]")
+    val evs = children.map(_.genCode(ctx))
+    val Seq(xlo, xhi, ylo, yhi) = evs.map(_.value)
+    val Seq(nxlo, nxhi, nylo, nyhi) = evs.map(_.isNull)
+    val i = ctx.freshName("i"); val unknown = ctx.freshName("unknown")
+    // a rectangle is missed when a known comparison is false: `!(lo <= x1)`
+    // is Spark's `lo <= x1` false (NaN misses), `hi < x0` its `hi >= x0`
+    // false (NaN never misses: Spark sorts it above every number)
+    ev.copy(code = code"""
+      |${evs.map(_.code).mkString("\n")}
+      |boolean ${ev.value} = false;
+      |boolean $unknown = false;
+      |for (int $i = 0; $i < $r.length && !${ev.value}; $i += 4) {
+      |  if ((!$nxlo && !($xlo <= $r[$i + 1])) || (!$nxhi && $xhi < $r[$i]) ||
+      |      (!$nylo && !($ylo <= $r[$i + 3])) || (!$nyhi && $yhi < $r[$i + 2])) {
+      |    continue;
+      |  }
+      |  if ($nxlo || $nxhi || $nylo || $nyhi) $unknown = true;
+      |  else ${ev.value} = true;
+      |}
+      |boolean ${ev.isNull} = !${ev.value} && $unknown;
+      |""".stripMargin)
+  }
+
+  override protected def withNewChildrenInternal(f: Expression, s: Expression,
+                                                 t: Expression, q: Expression) =
+    copy(first = f, second = s, third = t, fourth = q)
+
+  override def toString: String =
+    s"$prettyName(${children.mkString(", ")}, " +
+      rects.grouped(4).map(q => s"[${q(0)}..${q(1)}]x[${q(2)}..${q(3)}]").mkString(" ") + ")"
+  // the Array field would break case-class equality/canonicalization;
+  // compare on content (as PointInPolygon does)
+  override def equals(o: Any): Boolean = o match {
+    case b: BinRects => b.children == children && java.util.Arrays.equals(b.rects, rects)
+    case _ => false
+  }
+  override def hashCode(): Int = children.hashCode * 31 + java.util.Arrays.hashCode(rects)
+}
+
+object BinRects {
+  /** Flattened quads of a level-0 bin cover ([[CellIndex.coverRects]]). */
+  def of(cover: Seq[((Int, Int), (Int, Int))]): Array[Double] =
+    cover.flatMap { case ((x0, x1), (y0, y1)) => Seq(x0, x1, y0, y1) }.map(_.toDouble).toArray
+
+  /** The one coordinate rectangle of a bbox. */
+  def of(b: CellIndex.BBox): Array[Double] = Array(b.minLon, b.maxLon, b.minLat, b.maxLat)
+
+  /** Interpreted twin of the generated loop (null = SQL null). */
+  def test(rects: Array[Double], xlo: java.lang.Double, xhi: java.lang.Double,
+           ylo: java.lang.Double, yhi: java.lang.Double): java.lang.Boolean = {
+    val anyNull = xlo == null || xhi == null || ylo == null || yhi == null
+    var unknown = false
+    var i = 0
+    while (i < rects.length) {
+      val miss = (xlo != null && !(xlo <= rects(i + 1))) || (xhi != null && xhi < rects(i)) ||
+        (ylo != null && !(ylo <= rects(i + 3))) || (yhi != null && yhi < rects(i + 2))
+      if (!miss) { if (anyNull) unknown = true else return true }
+      i += 4
+    }
+    if (unknown) null else false
+  }
+}
+
+/**
  * [[PointInPolygon]] with the polygon as COLUMNS (array<double> lon/lat
  * vertex rings) instead of a query-time constant — the form a polygon-SET
  * spatial join needs, where each candidate row carries its own ring. Same
@@ -301,6 +411,14 @@ object geo {
     val py = poly.indices.collect { case i if i % 2 == 1 => poly(i) }.toArray
     col(PointInPolygon(ex(lon), ex(lat), px, py))
   }
+  /** (x, y) inside one of `rects` ([[BinRects]] quads); no rects: false. */
+  def in_rects(x: Column, y: Column, rects: Array[Double]): Column =
+    overlaps_rects(x, x, y, y, rects)
+  /** Box [xlo, xhi] x [ylo, yhi] overlaps one of `rects`; no rects: false. */
+  def overlaps_rects(xlo: Column, xhi: Column, ylo: Column, yhi: Column,
+                     rects: Array[Double]): Column =
+    if (rects.isEmpty) org.apache.spark.sql.functions.lit(false)
+    else col(BinRects(ex(xlo), ex(xhi), ex(ylo), ex(yhi), rects))
   /** Ring as columns (array<double> lons / lats) — the polygon-join refine. */
   def point_in_poly_cols(lon: Column, lat: Column,
                          px: Column, py: Column): Column =

@@ -53,7 +53,9 @@ object Dedup {
       scratchDir(spark) + s"/${prefix}_${java.util.UUID.randomUUID()}")
     df.write.parquet(dir.toString)
     dir.getFileSystem(spark.sparkContext.hadoopConfiguration).deleteOnExit(dir)
-    spark.read.parquet(dir.toString)
+    // read back with the written schema: inferring it would run a
+    // footer-reading job on a dir whose schema is already known
+    spark.read.schema(df.schema).parquet(dir.toString)
   }
 
   /**

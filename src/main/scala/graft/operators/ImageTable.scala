@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.cells.CellIndex
 import graft.cells.CellIndex.BBox
-import graft.functions.geo
+import graft.functions.{BinRects, geo}
 import graft.operators.Materialized.materialize
 import graft.plans.SnapshotLog
 import graft.plans.SnapshotLog.PartitionLineage
@@ -421,16 +421,17 @@ object ImageTable {
   // ---- queries over the images table ---------------------------------------
 
   /** bbox predicate: Morton-prefix ranges on the PARTITION column (directory
-    * pruning) AND the exact bin rectangle (row-group pruning + row filter). */
+    * pruning, evaluated at planning, so they stay plain literals) AND the
+    * exact bin rectangles as a [[graft.functions.BinRects]] reference
+    * object — the row filter's generated code is the same for every box,
+    * so a new box compiles nothing. On a cached or in-memory frame p_cell
+    * is an ordinary column: its ranges then run in the row filter and a
+    * new box compiles that filter anew. */
   def bboxPredicate(b: BBox, pRes: Int = DefaultPRes): Column = {
     val prefixPred = CellIndex.coverMortonRanges(b, pRes)
       .map { case (lo, hi) => col("p_cell").between(lo, hi) }
       .reduceOption(_ || _).getOrElse(lit(false))
-    val rectPred = CellIndex.coverRects(b)
-      .map { case ((x0, x1), (y0, y1)) =>
-        col("xbin").between(x0, x1) && col("ybin").between(y0, y1) }
-      .reduceOption(_ || _).getOrElse(lit(false))
-    prefixPred && rectPred
+    prefixPred && geo.in_rects(col("xbin"), col("ybin"), BinRects.of(CellIndex.coverRects(b)))
   }
 
   /** Cell-granular bbox extract (reference Q2 semantics: whole covered
@@ -438,11 +439,10 @@ object ImageTable {
   def extractBBox(images: DataFrame, b: BBox): DataFrame =
     images.where(bboxPredicate(b))
 
-  /** Exact bbox extract: cell pruning then coordinate refinement. */
+  /** Exact bbox extract: cell pruning then coordinate refinement (the
+    * coordinate box is a reference object too). */
   def extractBBoxExact(images: DataFrame, b: BBox): DataFrame =
-    extractBBox(images, b).where(
-      col("lon") >= b.minLon && col("lon") <= b.maxLon &&
-      col("lat") >= b.minLat && col("lat") <= b.maxLat)
+    extractBBox(images, b).where(geo.in_rects(col("lon"), col("lat"), BinRects.of(b)))
 
   /** Web-Mercator (slippy) tile assignment at zoom z — the industry tile
     * scheme alongside the reference-compatible grid cells. Standard

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.cells.CellIndex
 import graft.cells.CellIndex.BBox
-import graft.functions.geo
+import graft.functions.{BinRects, geo}
 
 /**
  * Planet-clone ingest + bbox extract — the Spark-native restatement of the
@@ -24,9 +24,13 @@ import graft.functions.geo
 object PlanetExtract {
 
   /** Ingested tables: each carries (xbin, ybin, cell); relations' bins are
-    * null when unindexed (single-member / relation-type first member). */
+    * null when unindexed (single-member / relation-type first member).
+    * `pBits` is set on tables read back by [[readTables]] from a store whose
+    * sidecar records the write's partition prefix bits: extracts then add
+    * the stored `p` ranges and prune directories. None (in-memory tables,
+    * stores without a sidecar): no directory pruning, same rows. */
   final case class PlanetTables(nodes: DataFrame, ways: DataFrame,
-                                relations: DataFrame)
+                                relations: DataFrame, pBits: Option[Int] = None)
 
   private def withBins(df: DataFrame, cell: Column): DataFrame =
     df.withColumn("cell", cell)
@@ -118,13 +122,32 @@ object PlanetExtract {
     PlanetTables(nodes, ways, rels)
   }
 
-  /** Rectangle predicate over (xbin, ybin) — two range filters per wrap
-    * rectangle, OR-combined. Plain column ranges: parquet row-group stats
-    * and partition pruning both apply (SURVEY.md §4 row 1). */
+  /** Rectangle predicate over (xbin, ybin): the bin cover of `b` (1, 2 or
+    * 4 rectangles after the wrap split, none for a wrapped strict box —
+    * then `false`). The rectangles ride as a [[BinRects]] reference object,
+    * so the generated code is the same for every box and a new box
+    * compiles nothing; in exchange the test is not a parquet pushed
+    * filter. Stored tables prune directories through the `p` ranges that
+    * [[selectedEntityFrames]] adds instead. */
   def bboxPredicate(b: BBox, strictCompat: Boolean = false): Column =
-    CellIndex.coverRects(b, strictCompat).map { case ((x0, x1), (y0, y1)) =>
-      col("xbin").between(x0, x1) && col("ybin").between(y0, y1)
-    }.reduceOption(_ || _).getOrElse(lit(false))
+    geo.in_rects(col("xbin"), col("ybin"), BinRects.of(CellIndex.coverRects(b, strictCompat)))
+
+  /** [[bboxPredicate]] plus, on stored tables with a known `pBits`, the
+    * coarse partition-column ranges that directory-prune the scan. The `p`
+    * ranges stay plain literals: they are partition filters, evaluated at
+    * planning and never compiled. Only valid on frames filtered by their
+    * OWN cell (a node fetched by way ref may sit in any directory). */
+  private def cellPredicate(t: PlanetTables, b: BBox, strictCompat: Boolean): Column =
+    t.pBits.fold(bboxPredicate(b, strictCompat)) { pBits =>
+      val shift = CellIndex.GridBits - pBits
+      val pPred = CellIndex.coverRects(b, strictCompat).map {
+        case ((x0, x1), (y0, y1)) =>
+          col("p").between((x0 >> shift) * (1 << pBits) + (y0 >> shift),
+                           (x1 >> shift) * (1 << pBits) + (y1 >> shift)) &&
+          (col("p") % (1 << pBits)).between(y0 >> shift, y1 >> shift)
+      }.reduceOption(_ || _).getOrElse(lit(false))
+      pPred && bboxPredicate(b, strictCompat)
+    }
 
   /**
    * Staged bbox extract (J1 ∘ J2 ∘ J3 + J4): returns (kind, id, cell) rows —
@@ -155,11 +178,17 @@ object PlanetExtract {
     * columns: (nodes, ways, relations) frames for the covered cells —
     * shared with the serving layer so the HTTP surface can never drift
     * from the extract semantics. Strict mode narrows nodes to (id, cell)
-    * with cell-0 phantoms (see [[selectNodes]]). */
+    * with cell-0 phantoms (see [[selectNodes]]).
+    *
+    * On stored tables with a known `pBits` (see [[PlanetTables]]) the ways
+    * and relations scans read only the `p` directories the cover touches;
+    * nodes are fetched by the selected ways' refs, which may lie in any
+    * directory, so their scan is not pruned. The generated code is the
+    * same for every box ([[bboxPredicate]]). */
   private[graft] def selectedEntityFrames(t: PlanetTables, b: BBox,
                                           strictCompat: Boolean = false)
       : (DataFrame, DataFrame, DataFrame) = {
-    val pred = bboxPredicate(b, strictCompat)
+    val pred = cellPredicate(t, b, strictCompat)
     val selWays = t.ways.where(pred)
     // J2 prep + J3: union of selected ways' refs, emit-once
     val wayNodeIds = selWays.select(explode(col("refs")).as("id")).distinct()
@@ -201,7 +230,7 @@ object PlanetExtract {
    */
   def bboxOrdered(t: PlanetTables, b: BBox,
                   strictCompat: Boolean = false): DataFrame = {
-    val pred = bboxPredicate(b, strictCompat)
+    val pred = cellPredicate(t, b, strictCompat)
     // way emission rank: cell-major, block LIFO, slot FIFO
     val slotW = Window.partitionBy("cell").orderBy("id")
     val rankW = Window.orderBy(col("xbin"), col("ybin"),
@@ -245,7 +274,7 @@ object PlanetExtract {
     * members (matches the reference's own TODO scope). */
   def bboxWithRelationClosure(t: PlanetTables, b: BBox): DataFrame = {
     val base = bbox(t, b)
-    val rels = t.relations.where(bboxPredicate(b))
+    val rels = t.relations.where(cellPredicate(t, b, strictCompat = false))
     val members = rels.select(explode(col("members")).as("m"))
       .select(col("m.mtype").as("mtype"), col("m.ref").as("ref")).distinct()
     val memberWays = t.ways.join(
@@ -264,8 +293,16 @@ object PlanetExtract {
     * LOAD -> mmap-DB step, vex.c:806-831): Hive-partitioned parquet on a
     * coarse cell prefix so stored extracts directory-prune. Unindexed
     * relations land in partition p=-1 (still scanned only when relations
-    * are requested un-pruned). */
+    * are requested un-pruned). `pBits` is recorded in a sidecar
+    * (`_planet_meta.json`, through the shared [[IndexMeta]]) that
+    * [[readTables]] reads back, so extracts prune with the write's own
+    * value. The sidecar is removed before the writes and written after all
+    * three succeed: a failed write leaves a store that reads unpruned, never
+    * one pruned with a stale value. */
   def writeTables(t: PlanetTables, path: String, pBits: Int = 5): Unit = {
+    val spark = t.nodes.sparkSession
+    val meta = metaPath(path)
+    meta.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(meta, false)
     // coarse prefix of the packed cell: top pBits of each axis interleaved
     // would be Morton; for pruning purposes plain (xbin >> (14-pBits)) <<
     // pBits | (ybin >> (14-pBits)) works identically with range predicates
@@ -299,39 +336,24 @@ object PlanetExtract {
           Future(write(t.relations, "relations")))
         .foreach(Await.result(_, Duration.Inf))
     } finally pool.shutdown()
+    IndexMeta.write(spark, meta, Seq("pBits" -> pBits))
   }
 
-  def readTables(spark: org.apache.spark.sql.SparkSession, path: String): PlanetTables =
+  private def metaPath(path: String) = new org.apache.hadoop.fs.Path(path, "_planet_meta.json")
+
+  /** Tables of a store written by [[writeTables]], with the write's `pBits`
+    * from its sidecar: [[bbox]] and the serving layer then prune `p`
+    * directories. A store without the sidecar reads with `pBits = None`
+    * and extracts unpruned. */
+  def readTables(spark: org.apache.spark.sql.SparkSession, path: String): PlanetTables = {
+    val meta = metaPath(path)
     PlanetTables(
       spark.read.parquet(s"$path/nodes"),
       spark.read.parquet(s"$path/ways"),
-      spark.read.parquet(s"$path/relations"))
-
-  /** bbox predicate including the coarse partition-column ranges (directory
-    * pruning on stored tables) AND the exact bin rectangle. */
-  def bboxPredicateStored(b: BBox, pBits: Int = 5,
-                          strictCompat: Boolean = false): Column = {
-    val shift = CellIndex.GridBits - pBits
-    val pPred = CellIndex.coverRects(b, strictCompat).map {
-      case ((x0, x1), (y0, y1)) =>
-        col("p").between((x0 >> shift) * (1 << pBits) + (y0 >> shift),
-                         (x1 >> shift) * (1 << pBits) + (y1 >> shift)) &&
-        (col("p") % (1 << pBits)).between(y0 >> shift, y1 >> shift)
-    }.reduceOption(_ || _).getOrElse(lit(false))
-    pPred && bboxPredicate(b, strictCompat)
-  }
-
-  /** Extract over stored tables with directory pruning. */
-  def bboxStored(t: PlanetTables, b: BBox, pBits: Int = 5,
-                 strictCompat: Boolean = false): DataFrame = {
-    val pred = bboxPredicateStored(b, pBits, strictCompat)
-    val selWays = t.ways.where(pred)
-    val wayNodeIds = selWays.select(explode(col("refs")).as("id")).distinct()
-    val selNodes = selectNodes(t.nodes, wayNodeIds, strictCompat)
-    selNodes.select(lit("node").as("kind"), col("id"), col("cell"))
-      .unionByName(selWays.select(lit("way").as("kind"), col("id"), col("cell")))
-      .unionByName(t.relations.where(pred)
-        .select(lit("relation").as("kind"), col("id"), col("cell")))
+      spark.read.parquet(s"$path/relations"),
+      if (IndexMeta.exists(spark, meta))
+        Some(IndexMeta.read(spark, meta, "planet meta", "planet", Seq("pBits")).head)
+      else None)
   }
 
   /** A1 fill-factor report (vex.c:588-597): occupied cells and ratio.
@@ -353,29 +375,28 @@ object PlanetExtract {
     * [[ingest]] — true iff the way's bound rectangle intersects any cover
     * rect of `b`. Conservative by construction: a way with a node inside
     * the bbox has that node's bins inside its bounds, so it always
-    * overlaps. Null bounds (no resolvable refs) fail the comparison and
-    * are dropped — such ways have no geometry to match. */
+    * overlaps. Null bounds (no resolvable refs) test null and are
+    * dropped — such ways have no geometry to match. */
   def wayBoundsOverlap(b: BBox): Column =
-    CellIndex.coverRects(b).map { case ((x0, x1), (y0, y1)) =>
-      col("xbin_min") <= x1 && col("xbin_max") >= x0 &&
-        col("ybin_min") <= y1 && col("ybin_max") >= y0
-    }.reduceOption(_ || _).getOrElse(lit(false))
+    geo.overlaps_rects(col("xbin_min"), col("xbin_max"), col("ybin_min"), col("ybin_max"),
+      BinRects.of(CellIndex.coverRects(b)))
 
   /** Engine-extension extract: cell pruning THEN exact refinement — nodes
     * strictly inside the bbox, ways intersecting it via any node.
     *
     * Scale path: ways are PRE-FILTERED on the stored per-way bin bounds
-    * ([[wayBoundsOverlap]]) before their refs are exploded — plain column
-    * range predicates that push to the parquet scan (row-group min/max
-    * skipping), so a planet-scale refined extract explodes only the ways
-    * whose bound rectangles touch the bbox, never the whole table. The
-    * exact semi-join against the in-box nodes remains the decider; the
-    * bound filter only shrinks its input. Tables ingested before bounds
-    * existed (no xbin_min column) fall back to the full explode. */
+    * ([[wayBoundsOverlap]]) before their refs are exploded, so a
+    * planet-scale refined extract explodes only the ways whose bound
+    * rectangles touch the bbox, never the whole table. The exact semi-join
+    * against the in-box nodes remains the decider; the bound filter only
+    * shrinks its input. Tables ingested before bounds existed (no xbin_min
+    * column) fall back to the full explode. Every rectangle here (bound
+    * overlap, bin cover, coordinate box) is a [[BinRects]] reference
+    * object, so a new box compiles nothing; stored nodes with a known
+    * `pBits` also prune `p` directories. */
   def bboxRefined(t: PlanetTables, b: BBox): DataFrame = {
-    val inBox = col("lon") >= b.minLon && col("lon") <= b.maxLon &&
-                col("lat") >= b.minLat && col("lat") <= b.maxLat
-    val nodesIn = t.nodes.where(bboxPredicate(b)).where(inBox)
+    val nodesIn = t.nodes.where(cellPredicate(t, b, strictCompat = false))
+      .where(geo.in_rects(col("lon"), col("lat"), BinRects.of(b)))
     val nodeIds = nodesIn.select(col("id").as("_nid"))
     val waysPruned =
       if (t.ways.columns.contains("xbin_min")) t.ways.where(wayBoundsOverlap(b))

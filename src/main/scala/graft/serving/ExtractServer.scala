@@ -1,6 +1,7 @@
 package graft.serving
 
 import java.net.InetSocketAddress
+import java.nio.file.Files
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
@@ -32,12 +33,18 @@ import graft.sources.{PbfCodec, VexSink}
  *  - extension: `&format=vex` serves the VEX encoding instead (the
  *    reference selects VEX by output-file extension, vex.c:866-869 —
  *    a server query param is the HTTP analogue), with the entity counts
- *    the format itself lacks in `X-Vex-Nodes` / `X-Vex-Ways` headers.
+ *    the format itself lacks in `X-Vex-Nodes` / `X-Vex-Ways` headers
+ *    (spooled to a temp file while counting, then streamed).
  *
  * Extract semantics = [[PlanetExtract.bbox]] fixed mode (cell-granular,
- * emit-once nodes), materialized driver-side like every bounded-extract
- * sink (writePbfFileLocal contract) — serving is a small-result surface;
- * planet-scale output goes through the distributed sinks instead.
+ * emit-once nodes), pulled to the driver one result partition at a time —
+ * serving is a small-result surface; planet-scale output goes through the
+ * distributed sinks instead. Over tables from
+ * [[PlanetExtract.readTables]] whose store carries the `pBits` sidecar,
+ * each request reads only the ways and relations `p` directories its box
+ * touches; a store without the sidecar is served unpruned. The box rides
+ * in the generated code as a reference object, so a new box compiles no
+ * new classes.
  */
 final class ExtractServer(t: PlanetTables, host: String = "0.0.0.0",
                           port: Int = 8282) {
@@ -68,48 +75,33 @@ final class ExtractServer(t: PlanetTables, host: String = "0.0.0.0",
         catch { case _: Throwable => ex.close() }
     }
 
-  private def handleInner(ex: HttpExchange): Unit = {
-    val q = Option(ex.getRequestURI.getRawQuery).getOrElse("")
-      .split("&").filter(_.contains("=")).map { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        java.net.URLDecoder.decode(k, "UTF-8") ->
-          java.net.URLDecoder.decode(v, "UTF-8")
-      }.toMap
-    def num(full: String, short: String): Double =
-      q.get(full).orElse(q.get(short)).map(s =>
-        try s.toDouble catch { case _: NumberFormatException => Double.NaN })
-        .getOrElse(Double.NaN)
-    val north = num("north", "n"); val south = num("south", "s")
-    val east = num("east", "e"); val west = num("west", "w")
-    if (north.isNaN || south.isNaN || east.isNaN || west.isNaN)
-      return bad(ex,
-        "Usage: ?north=<lat>&south=<lat>&east=<lon>&west=<lon>\n" +
-          "   or: ?n=<lat>&s=<lat>&e=<lon>&w=<lon>\norder is not important")
-    if (north <= south || east <= west)
-      return bad(ex, "North must be north of south; east must be east of west")
-    if (north < -90 || north > 90 || south < -90 || south > 90)
-      return bad(ex, "Latitudes must be between -90 and 90")
-    if (west < -180 || west > 180 || east < -180 || east > 180)
-      return bad(ex, "Longitudes must be between -180 and 180")
+  private def handleInner(ex: HttpExchange): Unit =
+    ExtractServer.parse(Option(ex.getRequestURI.getRawQuery).getOrElse("")) match {
+      case Left(msg) => bad(ex, msg)
+      case Right((b, vexFormat)) => serve(ex, b, vexFormat)
+    }
 
-    val (nodes, ways, rels) = extractEntityIters(BBox(west, south, east, north))
-    val vexFormat = q.get("format").contains("vex")
+  private def serve(ex: HttpExchange, b: BBox, vexFormat: Boolean): Unit = {
+    val (nodes, ways, rels) = extractEntityIters(b)
     val suffix = if (vexFormat) "vex" else "pbf"
     val disposition =
-      s"attachment;filename=osm_export_${jsNum((north + south) / 2)}_" +
-        s"${jsNum((east + west) / 2)}.$suffix"
+      s"attachment;filename=osm_export_${jsNum((b.maxLat + b.minLat) / 2)}_" +
+        s"${jsNum((b.maxLon + b.minLon) / 2)}.$suffix"
     if (vexFormat) {
-      // VEX stays buffered: its entity COUNTS ride in response headers
-      // (the format itself has none), and headers must be committed
-      // before the first body byte — counting requires encoding first.
-      // Bounded-extract-by-contract covers it; the PBF path below is the
-      // reference-parity surface and streams.
-      val bos = new java.io.ByteArrayOutputStream()
-      val (nn, nw) = VexSink.write(bos, nodes.toSeq, ways.toSeq)
-      ex.getResponseHeaders.set("X-Vex-Nodes", nn.toString)
-      ex.getResponseHeaders.set("X-Vex-Ways", nw.toString)
-      ex.getResponseHeaders.set("Content-Disposition", disposition)
-      respond(ex, 200, "application/octet-stream", bos.toByteArray)
+      // VEX entity COUNTS ride in response headers (the format itself has
+      // none), and headers must be committed before the first body byte:
+      // the encoder spools to a temp file while counting, then the file
+      // streams with its length. Driver memory holds one result partition
+      // and one entity, never the body; a failed encode is still a 500.
+      val (file, nn, nw) = VexSink.spool(nodes, ways)
+      try {
+        ex.getResponseHeaders.set("X-Vex-Nodes", nn.toString)
+        ex.getResponseHeaders.set("X-Vex-Ways", nw.toString)
+        ex.getResponseHeaders.set("Content-Disposition", disposition)
+        ex.getResponseHeaders.set("Content-Type", "application/octet-stream")
+        ex.sendResponseHeaders(200, Files.size(file))
+        try Files.copy(file, ex.getResponseBody) finally ex.close()
+      } finally Files.deleteIfExists(file)
     } else {
       // STREAMED response (vexserver.js:65-68 pipes the child's stdout
       // the same way): chunked transfer, the encoder pulls lazily from
@@ -171,5 +163,41 @@ final class ExtractServer(t: PlanetTables, host: String = "0.0.0.0",
             m.getAs[Long]("ref"))).toArray,
         mapOf(r, "tags")))
     (nodes, ways, rels)
+  }
+}
+
+object ExtractServer {
+
+  /** The reference's query contract (vexserver.js:23-52): the box and
+    * whether VEX was asked for, or the exact 400 message. A malformed
+    * percent-escape (`%zz`, a trailing `%`) makes URLDecoder throw; such a
+    * value decodes to None, which no parameter accepts (a number reads as
+    * non-numeric, so the usage text). The JDK server already answers 400
+    * to a request line whose URI holds one; this keeps the parser total
+    * on its own. */
+  private[graft] def parse(rawQuery: String): Either[String, (BBox, Boolean)] = {
+    def decoded(s: String): Option[String] =
+      try Some(java.net.URLDecoder.decode(s, "UTF-8"))
+      catch { case _: IllegalArgumentException => None }
+    val q = rawQuery.split("&").filter(_.contains("=")).flatMap { kv =>
+      val Array(k, v) = kv.split("=", 2)
+      decoded(k).map(_ -> decoded(v))
+    }.toMap
+    def num(full: String, short: String): Double =
+      q.get(full).orElse(q.get(short)).flatten.map(s =>
+        try s.toDouble catch { case _: NumberFormatException => Double.NaN })
+        .getOrElse(Double.NaN)
+    val north = num("north", "n"); val south = num("south", "s")
+    val east = num("east", "e"); val west = num("west", "w")
+    if (north.isNaN || south.isNaN || east.isNaN || west.isNaN)
+      Left("Usage: ?north=<lat>&south=<lat>&east=<lon>&west=<lon>\n" +
+        "   or: ?n=<lat>&s=<lat>&e=<lon>&w=<lon>\norder is not important")
+    else if (north <= south || east <= west)
+      Left("North must be north of south; east must be east of west")
+    else if (north < -90 || north > 90 || south < -90 || south > 90)
+      Left("Latitudes must be between -90 and 90")
+    else if (west < -180 || west > 180 || east < -180 || east > 180)
+      Left("Longitudes must be between -180 and 180")
+    else Right((BBox(west, south, east, north), q.get("format").flatten.contains("vex")))
   }
 }

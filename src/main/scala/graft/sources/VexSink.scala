@@ -1,6 +1,7 @@
 package graft.sources
 
-import java.io.{EOFException, InputStream, OutputStream}
+import java.io.{BufferedOutputStream, EOFException, InputStream, OutputStream}
+import java.nio.file.{Files, Path}
 
 import graft.cells.CellIndex
 import graft.fixtures.Fixtures.{NodeRow, WayRow}
@@ -150,6 +151,23 @@ object VexSink {
       i += 1
     }
     (nodes.result(), ways.result())
+  }
+
+  /** Encode nodes then ways into a fresh temp file (`graft_vex_*.vex` in
+    * the JVM temp dir), counting as it goes: memory holds one entity, not
+    * the body. Returns (file, nNodes, nWays); the caller streams the file
+    * and deletes it. On failure the file is deleted before the exception
+    * propagates. */
+  def spool(nodes: IterableOnce[NodeRow], ways: IterableOnce[WayRow])
+      : (Path, Long, Long) = {
+    val file = Files.createTempFile("graft_vex_", ".vex")
+    try {
+      val os = new BufferedOutputStream(Files.newOutputStream(file))
+      val (nn, nw) = try write(os, nodes, ways) finally os.close()
+      (file, nn, nw)
+    } catch {
+      case e: Throwable => Files.deleteIfExists(file); throw e
+    }
   }
 
   /** Single-file VEX sink for bounded extracts (the reference's

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.cells.CellIndex
-import graft.functions.{geo, PointInPolygon}
+import graft.functions.{geo, BinRects, PointInPolygon}
 
 /** The Catalyst expressions must agree bit-for-bit with the pure-Scala
   * CellIndex on random points, through the CODEGEN path (DataFrame eval),
@@ -171,5 +171,83 @@ class CellExpressionsSpec extends SparkFunSuite {
     known.foreach { case (x, y, e) =>
       assert(PointInPolygon.contains(px, py, x, y) == e, s"known ($x,$y)")
     }
+  }
+
+  test("bin_rects equals the literal between/OR tree it replaces, nulls and " +
+       "wrapped covers included, under codegen and NO_CODEGEN") {
+    val rnd = new scala.util.Random(20261019)
+    // centres near the sign lines too, so covers split in 2 or 4 (the
+    // unsigned-bin wrap) and strict covers come out empty
+    val boxes = Seq.fill(40) {
+      val near0 = rnd.nextInt(3) == 0
+      val cx = if (near0) rnd.nextDouble() * 0.4 - 0.2 else rnd.nextDouble() * 340 - 170
+      val cy = if (near0) rnd.nextDouble() * 0.4 - 0.2 else rnd.nextDouble() * 160 - 80
+      val h = 0.01 + rnd.nextDouble() * 0.5
+      (CellIndex.BBox(cx - h, cy - h, cx + h, cy + h), rnd.nextBoolean())
+    }
+    val covers = boxes.map { case (b, strict) => CellIndex.coverRects(b, strict) }
+    assert(Set(0, 1, 2, 4).subsetOf(covers.map(_.size).toSet), covers.map(_.size))
+    // points around every box (bins, coordinates, and bin intervals for the
+    // overlap form), with nulls, NaN and -0.0 sprinkled in
+    def maybe[A](v: A): Option[A] = if (rnd.nextInt(8) == 0) None else Some(v)
+    val rows = boxes.flatMap { case (b, _) =>
+      Seq.fill(60) {
+        val lon = b.minLon - 0.05 + rnd.nextDouble() * (b.maxLon - b.minLon + 0.1)
+        val lat = b.minLat - 0.05 + rnd.nextDouble() * (b.maxLat - b.minLat + 0.1)
+        val (xb, yb) = (CellIndex.xBin(lon), CellIndex.yBin(lat))
+        (maybe(xb), maybe(yb), maybe(xb + rnd.nextInt(3)), maybe(yb + rnd.nextInt(3)),
+          maybe(rnd.nextInt(40) match { case 0 => Double.NaN case 1 => -0.0 case _ => lon }),
+          maybe(lat))
+      }
+    }
+    val df = rows.toDF("x", "y", "x2", "y2", "lon", "lat")
+    val x = $"x"; val y = $"y"
+    val cols = boxes.zip(covers).zipWithIndex.flatMap { case (((b, _), cover), i) =>
+      def orTree(f: (((Int, Int), (Int, Int))) => org.apache.spark.sql.Column) =
+        cover.map(f).reduceOption(_ || _).getOrElse(lit(false))
+      val rects = BinRects.of(cover)
+      Seq(
+        geo.in_rects(x, y, rects).as(s"p$i"),
+        orTree { case ((x0, x1), (y0, y1)) => x.between(x0, x1) && y.between(y0, y1) }
+          .as(s"pl$i"),
+        geo.overlaps_rects(x, $"x2", y, $"y2", rects).as(s"o$i"),
+        orTree { case ((x0, x1), (y0, y1)) =>
+          x <= x1 && $"x2" >= x0 && y <= y1 && $"y2" >= y0 }.as(s"ol$i"),
+        geo.in_rects($"lon", $"lat", BinRects.of(b)).as(s"c$i"),
+        ($"lon" >= b.minLon && $"lon" <= b.maxLon && $"lat" >= b.minLat &&
+          $"lat" <= b.maxLat).as(s"cl$i"))
+    }
+    // 8 boxes (48 columns) a select: whole-stage codegen stays on below
+    // spark.sql.codegen.maxFields. Fresh frames per mode: a frame keeps
+    // the physical plan it was first planned with.
+    def dump(wholeStage: Boolean): Seq[Seq[Any]] = cols.grouped(48).toSeq.flatMap { cs =>
+      val out = df.select(cs: _*)
+      assert(out.queryExecution.executedPlan.toString.contains("*(") == wholeStage,
+        s"whole-stage codegen ${if (wholeStage) "off" else "still on"}")
+      out.collect().map(_.toSeq).toSeq
+    }
+    def check(got: Seq[Seq[Any]], mode: String): Unit = {
+      got.zipWithIndex.foreach { case (r, j) =>
+        r.grouped(2).zipWithIndex.foreach { case (Seq(a, b), k) =>
+          assert(a == b, s"$mode row $j column pair $k: bin_rects $a vs literal $b")
+        }
+      }
+      // the sample exercises every outcome
+      assert(Set[Any](true, false, null).subsetOf(got.flatten.toSet), mode)
+    }
+    val cg = dump(wholeStage = true)
+    check(cg, "codegen")
+    val interpreted = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val saved = interpreted.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val ip = try {
+      interpreted.foreach { case (k, v) => spark.conf.set(k, v) }
+      dump(wholeStage = false)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    check(ip, "NO_CODEGEN")
+    assert(ip == cg)
   }
 }

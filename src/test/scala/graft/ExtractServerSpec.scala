@@ -2,6 +2,8 @@ package graft
 
 import java.net.{HttpURLConnection, URL}
 
+import org.apache.spark.sql.functions._
+
 import graft.cells.CellIndex.BBox
 import graft.fixtures.Fixtures
 import graft.operators.PlanetExtract
@@ -89,6 +91,77 @@ class ExtractServerSpec extends SparkFunSuite {
         h7("X-Vex-Nodes").toLong, h7("X-Vex-Ways").toLong)
       assert(vn.map(_.id) == d.nodes.map(_.id).sorted)
       assert(vw.map(_.id) == d.ways.map(_.id).sorted)
+    } finally srv.stop()
+  }
+
+  private def spools(): Set[String] = WriteProbe.tempFiles("graft_vex_")
+
+  test("a malformed percent-escape gets the usage 400, not a 500") {
+    val usage = "Usage: ?north=<lat>&south=<lat>&east=<lon>&west=<lon>\n" +
+      "   or: ?n=<lat>&s=<lat>&e=<lon>&w=<lon>\norder is not important"
+    val malformed = Seq("north=%zz&south=1&east=2&west=1",
+      "north=5&south=1&east=2&west=1%", "n=5&s=1%2&e=2&w=1")
+    for (q <- malformed) assert(ExtractServer.parse(q) == Left(usage), q)
+    // an undecodable parameter the box does not need is ignored
+    assert(ExtractServer.parse("north=30&south=20&east=40&west=20&x%zz=1&format=%v") ==
+      Right((BBox(20.0, 20.0, 40.0, 30.0), false)))
+    // over HTTP the JDK server rejects such a request line itself: a 400,
+    // never the handler's 500
+    val srv = new ExtractServer(tables, "127.0.0.1", 0)
+    val port = srv.start()
+    try for (q <- malformed) assert(get(port, s"/?$q")._1 == 400, q)
+    finally srv.stop()
+  }
+
+  test("VEX is spooled: the body is byte-identical to the buffered encoding " +
+       "and no spool file is left after success or failure") {
+    val b = BBox(40.0, 20.0, 60.0, 35.0)
+    val query = s"/?west=${b.minLon}&south=${b.minLat}&east=${b.maxLon}&north=${b.maxLat}" +
+      "&format=vex"
+    val before = spools()
+    val srv = new ExtractServer(tables, "127.0.0.1", 0)
+    val port = srv.start()
+    val (code, body, h) = try get(port, query) finally srv.stop()
+    assert(code == 200)
+    val ids = PlanetExtract.bbox(tables, b).collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet
+    val bos = new java.io.ByteArrayOutputStream()
+    val (nn, nw) = VexSink.write(bos,
+      planet.nodes.filter(n => ids(("node", n.id))).sortBy(_.id),
+      planet.ways.filter(w => ids(("way", w.id))).sortBy(_.id))
+    assert(nn > 0 && nw > 0)
+    assert(h("X-Vex-Nodes") == nn.toString && h("X-Vex-Ways") == nw.toString)
+    assert(body.toSeq == bos.toByteArray.toSeq)
+    assert(spools() == before)
+
+    // an encode that fails mid-stream: a 500, and the spool is gone
+    val broken = tables.copy(nodes = tables.nodes.withColumn("lon",
+      when(col("id") % 2 === 0, raise_error(lit("boom"))).otherwise(col("lon"))))
+    val bad = new ExtractServer(broken, "127.0.0.1", 0)
+    val badPort = bad.start()
+    val (c2, _, _) = try get(badPort, query) finally bad.stop()
+    assert(c2 == 500)
+    assert(spools() == before)
+  }
+
+  test("a PBF or VEX extract over a box in other cells compiles no new classes") {
+    val srv = new ExtractServer(tables, "127.0.0.1", 0)
+    val port = srv.start()
+    def query(b: BBox, vex: Boolean) =
+      s"/?west=${b.minLon}&south=${b.minLat}&east=${b.maxLon}&north=${b.maxLat}" +
+        (if (vex) "&format=vex" else "")
+    val cs = Fixtures.cityCenters(Fixtures.DefaultSeed)
+    def box(c: (Double, Double)) = BBox(c._1 - 3.0, c._2 - 2.0, c._1 + 3.0, c._2 + 2.0)
+    try WriteProbe.withoutAqe(spark) {
+      for (vex <- Seq(false, true)) {
+        val (c1, b1, _) = get(port, query(box(cs(0)), vex))
+        assert(c1 == 200 && b1.nonEmpty)
+        var second = (0, Array.empty[Byte], Map.empty[String, String])
+        assert(WriteProbe.compileCount {
+          second = get(port, query(box(cs(1)), vex))
+        } == 0, s"vex=$vex")
+        assert(second._1 == 200 && second._2.nonEmpty && !second._2.sameElements(b1))
+      }
     } finally srv.stop()
   }
 }

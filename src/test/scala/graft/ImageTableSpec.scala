@@ -179,6 +179,32 @@ class ImageTableSpec extends SparkFunSuite {
     assert(got.nonEmpty, "weak fixture: empty polygon extract")
   }
 
+  test("bbox, exact and polygon extracts over a box in other cells compile " +
+       "no new classes") {
+    // a table of its own: a read of the fixture's path would be answered
+    // by the fixture's cache, where p_cell is a row filter, not a
+    // partition filter, and its ranges compile
+    ImageTable.ingest(imagesDF, s"$tmp/images_cg", saltThreshold = 500, maxSalt = 8)
+    val stored = ImageTable.readCommitted(spark, s"$tmp/images_cg")
+    val cs = Fixtures.cityCenters(Fixtures.DefaultSeed)
+    def box(c: (Double, Double)) = BBox(c._1 - 0.7, c._2 - 0.5, c._1 + 0.7, c._2 + 0.5)
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("image_id").collect().map(_.getString(0)).toSet
+    def extracts(c: (Double, Double)) = Seq(
+      ids(ImageTable.extractBBox(stored, box(c))),
+      ids(ImageTable.extractBBoxExact(stored, box(c))),
+      ids(ImageTable.extractPolygon(stored, Array(
+        c._1 - 1.0, c._2 - 1.0, c._1 + 1.0, c._2 - 1.0, c._1, c._2 + 1.0))))
+    assert(CellIndex.coverCells(box(cs(0))).toSet
+      .intersect(CellIndex.coverCells(box(cs(1))).toSet).isEmpty)
+    var second = Seq.empty[Set[String]]
+    WriteProbe.withoutAqe(spark) {
+      assert(extracts(cs(0)).forall(_.nonEmpty))
+      assert(WriteProbe.compileCount { second = extracts(cs(1)) } == 0)
+    }
+    assert(second.forall(_.nonEmpty))
+  }
+
   test("compact merges multi-file append leaves to one file per dir, " +
        "preserves rows, and is a no-op when already compact") {
     val dir = s"$tmp/append_store"
@@ -385,7 +411,7 @@ class ImageTableSpec extends SparkFunSuite {
     val pts = table.select(col("image_id"), col("lon"), col("lat"), col("cell"))
       .withColumn("id", expr("cast(substring(image_id, 5) as long)"))
     pts.count()   // the fixture's cache is built outside the probe
-    assert(WriteProbe.jobCount(spark)(Knn.knnJoinTable(pts, qdf, k = 10)) == 16)
+    assert(WriteProbe.jobCount(spark)(Knn.knnJoinTable(pts, qdf, k = 10)) == 15)
   }
 
   test("knnJoinTable equals knn on a randomized 40-query cloud (seeded)") {

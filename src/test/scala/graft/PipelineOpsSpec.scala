@@ -1410,7 +1410,7 @@ class PipelineOpsSpec extends SparkFunSuite {
           maxBucket = 0)),
       "kmeansFitPortable" -> WriteProbe.jobCount(spark)(
         Similarity.kmeansFitPortable(embs, k = 5, iters = 3)))
-    assert(counts == Map("connectedComponents" -> 6, "clean probe" -> 4,
+    assert(counts == Map("connectedComponents" -> 5, "clean probe" -> 4,
       "kmeansFitPortable" -> 4))
   }
 

@@ -205,4 +205,22 @@ class PlanetExtractSpec extends SparkFunSuite {
     assert(kept < tFixed.ways.count(), s"prefilter kept all $kept ways")
     assert(kept >= pruned.count(_._1 == "way"))
   }
+
+  test("bbox and refined extracts over a box in other cells compile no new " +
+       "classes: the box rides as a reference object") {
+    def box(c: (Double, Double)) = BBox(c._1 - 0.6, c._2 - 0.5, c._1 + 0.6, c._2 + 0.5)
+    val (b1, b2) = (box(centers(0)), box(centers(1)))
+    assert(CellIndex.coverCells(b1).toSet.intersect(CellIndex.coverCells(b2).toSet).isEmpty)
+    var second, refined = Set.empty[(String, Long, Int)]
+    val compiled = WriteProbe.withoutAqe(spark) {
+      assert(rowSet(PlanetExtract.bbox(tFixed, b1)).nonEmpty)
+      assert(rowSet(PlanetExtract.bboxRefined(tFixed, b1)).nonEmpty)
+      WriteProbe.compileCount {
+        second = rowSet(PlanetExtract.bbox(tFixed, b2))
+        refined = rowSet(PlanetExtract.bboxRefined(tFixed, b2))
+      }
+    }
+    assert(compiled == 0)
+    assert(second == oracleSet(oFixed.extract(b2)) && refined.nonEmpty)
+  }
 }

@@ -81,4 +81,28 @@ class VexSinkSpec extends AnyFunSuite {
       VexSink.read(new ByteArrayInputStream(bytes), 1L, 0L)
     }
   }
+
+  test("spool: one-shot iterators give a file byte-identical to the buffered " +
+       "form; no temp file is left after a failure") {
+    val planet = Fixtures.localPlanet(800, 200, 0)
+    val bos = new ByteArrayOutputStream()
+    val counts = VexSink.write(bos, planet.nodes, planet.ways)
+    // each element may be pulled once: a second pass would find nothing
+    var pulled = 0
+    def once[A](xs: Seq[A]): Iterator[A] = xs.iterator.map { x => pulled += 1; x }
+    val (file, nn, nw) = VexSink.spool(once(planet.nodes), once(planet.ways))
+    try {
+      assert(pulled == planet.nodes.size + planet.ways.size)
+      assert((nn, nw) == counts)
+      assert(java.nio.file.Files.readAllBytes(file).toSeq == bos.toByteArray.toSeq)
+    } finally java.nio.file.Files.delete(file)
+
+    def spools() = WriteProbe.tempFiles("graft_vex_")
+    val before = spools()
+    val failing = planet.ways.iterator.map { w =>
+      if (w.id == planet.ways(100).id) throw new IllegalStateException("boom") else w }
+    val e = intercept[IllegalStateException](VexSink.spool(planet.nodes, failing))
+    assert(e.getMessage == "boom")
+    assert(spools() == before)
+  }
 }

@@ -9,8 +9,9 @@ import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
-/** Probes for the partitioned write path: what Spark ran for a block of
-  * code, and the data files under each partition leaf of a written table. */
+/** Probes for specs: what Spark ran or compiled for a block of code, the
+  * data files under each partition leaf of a written table, and the
+  * temp files a call left behind. */
 object WriteProbe {
 
   /** Jobs a block ran: their descriptions, and the task count of every
@@ -51,12 +52,37 @@ object WriteProbe {
     * stages finish (connected components on a 3-pair fixture: 17 or 18
     * jobs from the same code). With AQE off the count is the actions the
     * code runs, which is what a job-count spec pins. */
-  def jobCount(spark: SparkSession)(body: => Any): Int = {
+  def jobCount(spark: SparkSession)(body: => Any): Int =
+    withoutAqe(spark)(record(spark)(body)._2.jobDescriptions.size)
+
+  /** Run `body` with adaptive execution off (see [[jobCount]]). */
+  def withoutAqe[A](spark: SparkSession)(body: => A): A = {
     val key = "spark.sql.adaptive.enabled"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "false")
-    try record(spark)(body)._2.jobDescriptions.size
+    try body
     finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Classes Spark's code generator compiled while `body` ran (cache
+    * misses of the codegen cache; a cached class counts nothing). Specs
+    * that pin 0 run warm-up and measured calls under [[withoutAqe]]: AQE
+    * re-plans a query from its runtime statistics (an empty stage, a small
+    * side, the order in which concurrent stages finish), and another plan
+    * is other code whatever the query's constants — a served extract over
+    * a second box compiled 4 classes with AQE on and 0 with it off. */
+  def compileCount(body: => Any): Long = {
+    val h = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val c0 = h.getCount
+    body
+    h.getCount - c0
+  }
+
+  /** Names of the entries in the JVM temp dir that start with `prefix`. */
+  def tempFiles(prefix: String): Set[String] = {
+    val ls = java.nio.file.Files.list(java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))
+    try ls.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith(prefix)).toSet
+    finally ls.close()
   }
 
   /** Data files (names not starting with `_` or `.`) per leaf directory
