@@ -12,7 +12,8 @@ import graft.operators._
 /** Dumps `explain("formatted")` of the core operators to PLANS.md — the
   * evidence artifact that predicates reach the scan (PartitionFilters /
   * PushedFilters), joins broadcast where intended, and the encoder stays
-  * inside WholeStageCodegen. Run: `sbt "runMain graft.Plans"`. */
+  * inside WholeStageCodegen. Run from the repository root:
+  * `sbt "runMain graft.Plans [out.md]"` (default `PLANS.md`). */
 object Plans {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[8]")
@@ -28,10 +29,25 @@ object Plans {
     val c = Fixtures.cityCenters(Fixtures.DefaultSeed)(0)
     val b = BBox(c._1 - 1.0, c._2 - 1.0, c._1 + 1.0, c._2 + 1.0)
 
+    // expression and plan ids, object identity hashes, lambda class names
+    // and the scratch directory differ run to run: normalize them so a
+    // regenerated PLANS.md differs only where a plan did
+    val runSpecific = Seq("#\\d+" -> "#n", "plan_id=\\d+" -> "plan_id=n",
+      "\\$Lambda\\$\\d+/0x[0-9a-f]+" -> "\\$Lambda", "@[0-9a-f]{4,}\\b" -> "@h")
     def fmt(df: DataFrame): String = {
       val out = new java.io.ByteArrayOutputStream()
       Console.withOut(new java.io.PrintStream(out)) { df.explain("formatted") }
-      out.toString
+      runSpecific.foldLeft(out.toString.replace(dir, "<scratch>")) {
+        case (text, (re, to)) => text.replaceAll(re, to) }
+    }
+
+    lazy val storedPlanet = {
+      import spark.implicits._
+      val planet = Fixtures.localPlanet(20000, 6000, 1000)
+      val t = PlanetExtract.ingest(planet.nodes.toDF(), planet.ways.toDF(),
+        planet.relations.toDF())
+      PlanetExtract.writeTables(t, s"$dir/planet_store")
+      PlanetExtract.readTables(spark, s"$dir/planet_store")
     }
 
     val sections = Seq(
@@ -47,16 +63,15 @@ object Plans {
         fmt(ImageTable.derive(images).groupBy("cell").count()),
       "stored planet-DB extract (expect: PartitionFilters on the coarse p " +
         "column for the ways/relations scans, pBits read from the store's " +
-        "sidecar, + a bin_rects filter on xbin/ybin)" -> {
-        import spark.implicits._
-        val planet = Fixtures.localPlanet(20000, 6000, 1000)
-        val t = PlanetExtract.ingest(planet.nodes.toDF(), planet.ways.toDF(),
-          planet.relations.toDF())
-        val pdir = s"$dir/planet_store"
-        PlanetExtract.writeTables(t, pdir)
-        val stored = PlanetExtract.readTables(spark, pdir)
-        fmt(PlanetExtract.bbox(stored, b))
-      },
+        "sidecar, + a bin_rects filter on xbin/ybin)" ->
+        fmt(PlanetExtract.bbox(storedPlanet, b)),
+      "served extract (one tagged plan: the nodes, ways and relations " +
+        "branches of the stored extract unioned with kind tags and their " +
+        "payload columns, under ONE range-partitioned sort on (kind, id) — " +
+        "the order ExtractServer streams through one toLocalIterator; " +
+        "expect the same pruned scans as the stored extract and one " +
+        "Exchange rangepartitioning)" ->
+        fmt(PlanetExtract.taggedEntities(storedPlanet, b)),
       "ANN LSH probe (ONE scan: all 8 table signatures computed in a single " +
         "projection, OR-combined filter — no per-table scan+union)" -> {
         val embs = spark.range(20000).selectExpr("id AS vec_id",
@@ -245,8 +260,7 @@ object Plans {
         "refs explode — only ways whose bound rects touch the bbox are " +
         "exploded, never the whole table; the reference's vex.c:883 " +
         "single-cell-index TODO, fixed)" -> {
-        val stored = PlanetExtract.readTables(spark, s"$dir/planet_store")
-        fmt(PlanetExtract.bboxRefined(stored, b))
+        fmt(PlanetExtract.bboxRefined(storedPlanet, b))
       },
       "budget-capped mixing (expect: the raw-docs side carries NO " +
         "stratum-wide window — one partial+final hash aggregate builds the " +
@@ -391,7 +405,7 @@ object Plans {
     sections.foreach { case (title, plan) =>
       md.append(s"\n## $title\n\n```\n$plan```\n")
     }
-    val pw = new PrintWriter(new File("/root/repo/PLANS.md"), "UTF-8")
+    val pw = new PrintWriter(new File(args.headOption.getOrElse("PLANS.md")), "UTF-8")
     pw.write(md.toString); pw.close()
     System.err.println("[plans] wrote PLANS.md")
     spark.stop()

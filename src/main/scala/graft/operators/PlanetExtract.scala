@@ -196,6 +196,41 @@ object PlanetExtract {
       t.relations.where(pred))
   }
 
+  /** The selection of [[selectedEntityFrames]] (fixed mode) as ONE frame in
+    * the order a served extract streams it: `kind` (0 node, 1 way,
+    * 2 relation — the reference's stage order, vex.c:884-951), `id`, and the
+    * payload columns `lon`, `lat`, `tags`, `refs` and `members`; each kind
+    * leaves the other kinds' columns null. `relations = false` (VEX, which
+    * carries none) leaves the relations branch out but keeps its columns,
+    * so the node and way branches compile to the same code either way. A
+    * payload column no table has (`tags`) is left out.
+    *
+    * One `orderBy("kind", "id")` range-partitions the union, so walking its
+    * partitions in index order (`toLocalIterator`) yields every node, then
+    * every way, then every relation, each kind id-ascending — one plan per
+    * request where per-kind frames would plan and run three. In a session
+    * with adaptive execution on, a non-empty box runs at most 5 jobs (the
+    * ways' refs `distinct`, the node broadcast, the range sample, the
+    * sort's shuffle, one result stage), and a box with no ways fewer.
+    * `toLocalIterator` holds one result partition on the driver at a time,
+    * never the extract. */
+  private[graft] def taggedEntities(t: PlanetTables, b: BBox,
+                                    relations: Boolean = true): DataFrame = {
+    val (selNodes, selWays, selRels) = selectedEntityFrames(t, b)
+    // each payload column with its type, from the first table that has it
+    def typed(c: String, owners: DataFrame*) =
+      owners.find(_.columns.contains(c)).map(df => c -> df.schema(c).dataType)
+    val payload = Seq(typed("lon", t.nodes), typed("lat", t.nodes),
+      typed("tags", t.nodes, t.ways, t.relations), typed("refs", t.ways),
+      typed("members", t.relations)).flatten
+    def tagged(kind: Int, df: DataFrame): DataFrame =
+      df.select(lit(kind).as("kind") +: col("id") +: payload.map { case (c, tpe) =>
+        if (df.columns.contains(c)) col(c) else lit(null).cast(tpe).as(c) }: _*)
+    val kinds = Seq(tagged(0, selNodes), tagged(1, selWays)) ++
+      (if (relations) Seq(tagged(2, selRels)) else Nil)
+    kinds.reduce(_.unionByName(_)).orderBy("kind", "id")
+  }
+
   /** J2 node fetch for a set of selected way refs — shared by the in-memory
     * and stored extract paths so strict mode behaves identically on both.
     * strictCompat: LEFT join + cell-0 phantom for dangling refs (the

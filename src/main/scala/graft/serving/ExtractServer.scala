@@ -6,7 +6,6 @@ import java.nio.file.Files
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions._
 
 import graft.cells.CellIndex.BBox
 import graft.fixtures.Fixtures.{NodeRow, RelMemberRow, RelationRow, WayRow}
@@ -37,14 +36,19 @@ import graft.sources.{PbfCodec, VexSink}
  *    (spooled to a temp file while counting, then streamed).
  *
  * Extract semantics = [[PlanetExtract.bbox]] fixed mode (cell-granular,
- * emit-once nodes), pulled to the driver one result partition at a time —
- * serving is a small-result surface; planet-scale output goes through the
- * distributed sinks instead. Over tables from
- * [[PlanetExtract.readTables]] whose store carries the `pBits` sidecar,
- * each request reads only the ways and relations `p` directories its box
- * touches; a store without the sidecar is served unpruned. The box rides
- * in the generated code as a reference object, so a new box compiles no
- * new classes.
+ * emit-once nodes). Each request is ONE plan, [[PlanetExtract.taggedEntities]]:
+ * the selected nodes, ways and relations as one frame ordered by
+ * `(kind, id)`, pulled to the driver by one `toLocalIterator` and split
+ * into the encoders' per-kind streams — nodes, then ways, then relations,
+ * each id-ascending, the reference's single pass (vex.c:884-951). With
+ * adaptive execution on, a request runs at most 5 Spark jobs. The driver
+ * holds one result partition at a time: serving is a small-result
+ * surface; planet-scale output goes through the distributed sinks instead.
+ * Over tables from [[PlanetExtract.readTables]] whose store carries the
+ * `pBits` sidecar, each request reads only the ways and relations `p`
+ * directories its box touches; a store without the sidecar is served
+ * unpruned. The box rides in the generated code as a reference object, so
+ * a new box compiles no new classes.
  */
 final class ExtractServer(t: PlanetTables, host: String = "0.0.0.0",
                           port: Int = 8282) {
@@ -82,7 +86,7 @@ final class ExtractServer(t: PlanetTables, host: String = "0.0.0.0",
     }
 
   private def serve(ex: HttpExchange, b: BBox, vexFormat: Boolean): Unit = {
-    val (nodes, ways, rels) = extractEntityIters(b)
+    val (nodes, ways, rels) = extractEntityIters(b, relations = !vexFormat)
     val suffix = if (vexFormat) "vex" else "pbf"
     val disposition =
       s"attachment;filename=osm_export_${jsNum((b.maxLat + b.minLat) / 2)}_" +
@@ -105,7 +109,7 @@ final class ExtractServer(t: PlanetTables, host: String = "0.0.0.0",
     } else {
       // STREAMED response (vexserver.js:65-68 pipes the child's stdout
       // the same way): chunked transfer, the encoder pulls lazily from
-      // the per-kind toLocalIterator, so driver memory holds one result
+      // the request's one toLocalIterator, so driver memory holds one result
       // partition + one 8k entity block — never the whole extract
       // (round 6; the buffered form materialized all three entity sets
       // AND the full PBF byte array). A mid-stream failure can no longer
@@ -125,43 +129,39 @@ final class ExtractServer(t: PlanetTables, host: String = "0.0.0.0",
   private def jsNum(d: Double): String =
     if (d == d.toLong.toDouble) d.toLong.toString else d.toString
 
-  private def mapOf(r: Row, field: String): Map[String, String] =
-    if (r.schema.fieldNames.contains(field))
-      Option(r.getAs[Map[String, String]](field)).getOrElse(Map.empty)
-    else Map.empty
-
   /** Entity-level bbox extract — exactly [[PlanetExtract.bbox]]'s row set
-    * (fixed mode, via the SHARED PlanetExtract.selectedEntityFrames
-    * selection so the HTTP surface cannot drift from the extract
-    * semantics) with full payloads, as LAZY per-kind iterators:
-    * `toLocalIterator` fetches one result partition at a time, so the
-    * driver never holds a whole entity set (round 6 — the collect() form
-    * was the one scale-unsafe driver materialization left in the repo).
-    * Emission order inside each kind is id-ascending: orderBy produces
-    * range-partitioned output, and toLocalIterator walks partitions in
-    * order, so the streamed order equals the collected order
-    * (deterministic responses; byte-golden reference order is
-    * [[PlanetExtract.bboxOrdered]]'s job). */
-  private def extractEntityIters(b: BBox)
+    * with full payloads, as LAZY per-kind iterators over ONE stream: the
+    * single `(kind, id)`-ordered plan of [[PlanetExtract.taggedEntities]]
+    * (which reuses the extract's own selection, so the HTTP surface cannot
+    * drift from its semantics), pulled by one `toLocalIterator` — one
+    * result partition on the driver at a time, never the extract. The
+    * stream holds every node, then every way, then every relation, each
+    * id-ascending; each kind's iterator is the run of rows of that kind at
+    * the head of the stream, so it must be read after the kinds before it
+    * are drained — the order both encoders read in — and nothing is
+    * buffered. `relations = false` (VEX) plans no relations branch. */
+  private def extractEntityIters(b: BBox, relations: Boolean)
       : (Iterator[NodeRow], Iterator[WayRow], Iterator[RelationRow]) = {
     import scala.jdk.CollectionConverters._
-    val (selNodes, selWays, selRels) =
-      PlanetExtract.selectedEntityFrames(t, b)
-    val nodes = selNodes
-      .select(t.nodes.columns.map(col): _*).orderBy("id")
-      .toLocalIterator().asScala
-      .map(r => NodeRow(r.getAs[Long]("id"), r.getAs[Double]("lon"),
-        r.getAs[Double]("lat"), mapOf(r, "tags")))
-    val ways = selWays.orderBy("id").toLocalIterator().asScala
-      .map(r => WayRow(r.getAs[Long]("id"),
-        r.getAs[scala.collection.Seq[Long]]("refs").toArray,
-        mapOf(r, "tags")))
-    val rels = selRels.orderBy("id").toLocalIterator().asScala
-      .map(r => RelationRow(r.getAs[Long]("id"),
-        r.getAs[scala.collection.Seq[Row]]("members").map(m =>
-          RelMemberRow(m.getAs[String]("role"), m.getAs[Byte]("mtype"),
-            m.getAs[Long]("ref"))).toArray,
-        mapOf(r, "tags")))
+    val frame = PlanetExtract.taggedEntities(t, b, relations)
+    val field = frame.schema.fieldNames.indexOf(_: String)
+    val (lon, lat, tags, refs, members) =
+      (field("lon"), field("lat"), field("tags"), field("refs"), field("members"))
+    def tagsOf(r: Row): Map[String, String] =
+      if (tags < 0 || r.isNullAt(tags)) Map.empty else r.getAs[Map[String, String]](tags)
+    val rows = frame.toLocalIterator().asScala.buffered
+    def ofKind(k: Int): Iterator[Row] = new Iterator[Row] {
+      def hasNext: Boolean = rows.hasNext && rows.head.getInt(0) == k
+      def next(): Row = if (hasNext) rows.next() else Iterator.empty.next()
+    }
+    val nodes = ofKind(0).map(r =>
+      NodeRow(r.getLong(1), r.getDouble(lon), r.getDouble(lat), tagsOf(r)))
+    val ways = ofKind(1).map(r =>
+      WayRow(r.getLong(1), r.getAs[scala.collection.Seq[Long]](refs).toArray, tagsOf(r)))
+    val rels = ofKind(2).map(r =>
+      RelationRow(r.getLong(1), r.getAs[scala.collection.Seq[Row]](members).map(m =>
+        RelMemberRow(m.getAs[String]("role"), m.getAs[Byte]("mtype"),
+          m.getAs[Long]("ref"))).toArray, tagsOf(r)))
     (nodes, ways, rels)
   }
 }

@@ -1,6 +1,9 @@
 package graft
 
 import java.net.{HttpURLConnection, URL}
+import java.nio.file.Files
+
+import org.scalatest.BeforeAndAfterAll
 
 import org.apache.spark.sql.functions._
 
@@ -14,12 +17,26 @@ import graft.sources.{PbfCodec, VexSink}
   * reference's exact 400 messages, octet-stream + attachment headers)
   * over a live ephemeral-port server, with the PBF body decoded back and
   * compared against the engine's own bbox extract row set. */
-class ExtractServerSpec extends SparkFunSuite {
+class ExtractServerSpec extends SparkFunSuite with BeforeAndAfterAll {
   import spark.implicits._
 
   private lazy val planet = Fixtures.localPlanet(1500, 400, 80)
   private lazy val tables = PlanetExtract.ingest(
     planet.nodes.toDF(), planet.ways.toDF(), planet.relations.toDF())
+
+  /** [[tables]] written and read back as a store: what a deployment serves. */
+  private val storeDir = Files.createTempDirectory("graft_serve_store_")
+  private lazy val stored = {
+    PlanetExtract.writeTables(tables, storeDir.toString)
+    PlanetExtract.readTables(spark, storeDir.toString)
+  }
+
+  override def afterAll(): Unit =
+    try {
+      val all = Files.walk(storeDir)
+      try all.sorted(java.util.Comparator.reverseOrder()).forEach(Files.delete(_))
+      finally all.close()
+    } finally super.afterAll()
 
   private def get(port: Int, path: String): (Int, Array[Byte], Map[String, String]) = {
     val conn = new URL(s"http://127.0.0.1:$port$path")
@@ -32,6 +49,53 @@ class ExtractServerSpec extends SparkFunSuite {
       "X-Vex-Ways").flatMap(h =>
         Option(conn.getHeaderField(h)).map(h -> _)).toMap
     (code, body, headers)
+  }
+
+  private def query(b: BBox, vex: Boolean = false): String =
+    s"/?west=${b.minLon}&south=${b.minLat}&east=${b.maxLon}&north=${b.maxLat}" +
+      (if (vex) "&format=vex" else "")
+
+  /** Serve `t` from a fresh server on an ephemeral port, then stop it. */
+  private def served[A](t: PlanetExtract.PlanetTables = tables)(body: Int => A): A = {
+    val srv = new ExtractServer(t, "127.0.0.1", 0)
+    val port = srv.start()
+    try body(port) finally srv.stop()
+  }
+
+  /** Driver-side encodes of the fixture entities whose ids
+    * [[PlanetExtract.bbox]] selects for `b`, sorted by id per kind: the PBF
+    * body, the VEX body, and the VEX (nodes, ways) counts. */
+  private def driverEncodes(b: BBox): (Array[Byte], Array[Byte], (Long, Long)) = {
+    val ids = PlanetExtract.bbox(tables, b).collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet
+    val nodes = planet.nodes.filter(n => ids(("node", n.id))).sortBy(_.id)
+    val ways = planet.ways.filter(w => ids(("way", w.id))).sortBy(_.id)
+    val rels = planet.relations.filter(r => ids(("relation", r.id))).sortBy(_.id)
+    val pbf = new java.io.ByteArrayOutputStream()
+    PbfCodec.writePbfFile(pbf, nodes, ways, rels)
+    val vex = new java.io.ByteArrayOutputStream()
+    val counts = VexSink.write(vex, nodes, ways)
+    (pbf.toByteArray, vex.toByteArray, counts)
+  }
+
+  private val emptyBox = BBox(-120.0, -60.0, -110.0, -50.0)
+
+  private def kindsIn(b: BBox): Set[String] =
+    PlanetExtract.bbox(tables, b).select("kind").distinct().collect().map(_.getString(0)).toSet
+
+  /** A box around a city centre whose extract holds all three kinds. */
+  private lazy val cityBox: BBox = Fixtures.cityCenters(Fixtures.DefaultSeed).iterator
+    .map(c => BBox(c._1 - 3.0, c._2 - 2.0, c._1 + 3.0, c._2 + 2.0))
+    .find(kindsIn(_) == Set("node", "way", "relation")).get
+
+  /** A one-degree box around a way's first node whose extract holds ways
+    * but no relations. */
+  private lazy val noRelationsBox: BBox = {
+    val nodeById = planet.nodes.map(n => n.id -> n).toMap
+    planet.ways.iterator.map { w =>
+      val n = nodeById(w.refs(0))
+      BBox(n.lon - 0.5, n.lat - 0.5, n.lon + 0.5, n.lat + 0.5)
+    }.find { b => val kinds = kindsIn(b); kinds("way") && !kinds("relation") }.get
   }
 
   test("serves a PBF extract matching the engine's bbox row set, with the " +
@@ -145,23 +209,108 @@ class ExtractServerSpec extends SparkFunSuite {
   }
 
   test("a PBF or VEX extract over a box in other cells compiles no new classes") {
-    val srv = new ExtractServer(tables, "127.0.0.1", 0)
-    val port = srv.start()
-    def query(b: BBox, vex: Boolean) =
-      s"/?west=${b.minLon}&south=${b.minLat}&east=${b.maxLon}&north=${b.maxLat}" +
-        (if (vex) "&format=vex" else "")
     val cs = Fixtures.cityCenters(Fixtures.DefaultSeed)
     def box(c: (Double, Double)) = BBox(c._1 - 3.0, c._2 - 2.0, c._1 + 3.0, c._2 + 2.0)
-    try WriteProbe.withoutAqe(spark) {
-      for (vex <- Seq(false, true)) {
-        val (c1, b1, _) = get(port, query(box(cs(0)), vex))
-        assert(c1 == 200 && b1.nonEmpty)
-        var second = (0, Array.empty[Byte], Map.empty[String, String])
-        assert(WriteProbe.compileCount {
-          second = get(port, query(box(cs(1)), vex))
-        } == 0, s"vex=$vex")
-        assert(second._1 == 200 && second._2.nonEmpty && !second._2.sameElements(b1))
+    served() { port =>
+      WriteProbe.withoutAqe(spark) {
+        for (vex <- Seq(false, true)) {
+          val (c1, b1, _) = get(port, query(box(cs(0)), vex))
+          assert(c1 == 200 && b1.nonEmpty)
+          // the codegen metric is JVM-wide: open the window only once no
+          // earlier work can still compile
+          WriteProbe.quiesce(spark)
+          var second = (0, Array.empty[Byte], Map.empty[String, String])
+          val compiled = WriteProbe.compileCount {
+            second = get(port, query(box(cs(1)), vex))
+          }
+          val clue = if (compiled == 0) "" else
+            PlanetExtract.taggedEntities(tables, box(cs(1)), relations = !vex)
+              .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+          assert(compiled == 0, s"vex=$vex: $compiled classes compiled; served plan:\n$clue")
+          assert(second._1 == 200 && second._2.nonEmpty && !second._2.sameElements(b1))
+        }
       }
-    } finally srv.stop()
+    }
+  }
+
+  test("one served request runs a pinned number of Spark jobs: one tagged plan, " +
+       "not one per entity kind") {
+    // (box, VEX?, jobs with adaptive execution off): the node broadcast,
+    // the range sample (two jobs when one input partition is oversized, as
+    // here), and one job per result partition. Planning one query per
+    // kind ran 17, 7, 13 and 6.
+    val pins = Seq((cityBox, false, 7), (emptyBox, false, 3),
+                   (cityBox, true, 7), (emptyBox, true, 3))
+    served(stored) { port =>
+      for ((b, vex, pinned) <- pins) {
+        WriteProbe.quiesce(spark)
+        val jobs = WriteProbe.jobCount(spark, anyThread = true) {
+          assert(get(port, query(b, vex))._1 == 200)
+        }
+        assert(jobs == pinned, s"box=$b vex=$vex")
+      }
+    }
+  }
+
+  test("an extract over several result partitions streams nodes, ways, then " +
+       "relations, byte-identical to a driver-side encode") {
+    val (pbf, vex, (nn, nw)) = driverEncodes(cityBox)
+    val rows = PlanetExtract.bbox(tables, cityBox).count().toInt
+    val partitions = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(partitions)
+    // adaptive execution off, so the range exchange keeps its partition
+    // count: over 2 partitions one holds two kinds; over twice as many
+    // partitions as rows every row samples as a bound of its own, so each
+    // kind boundary falls between partitions
+    val layouts = WriteProbe.withoutAqe(spark) {
+      try for (n <- Seq(2, 2 * rows)) yield {
+        spark.conf.set(partitions, n.toString)
+        val kinds = PlanetExtract.taggedEntities(tables, cityBox).rdd
+          .mapPartitions(rows => Iterator(rows.map(_.getInt(0)).toVector)).collect()
+          .filter(_.nonEmpty).toSeq
+        assert(kinds.flatten == kinds.flatten.sorted && kinds.flatten.distinct == Seq(0, 1, 2))
+        served() { port =>
+          val (c, body, _) = get(port, query(cityBox))
+          assert(c == 200 && body.toSeq == pbf.toSeq, s"PBF over $n partitions")
+          val (cv, bodyV, h) = get(port, query(cityBox, vex = true))
+          assert(cv == 200 && bodyV.toSeq == vex.toSeq, s"VEX over $n partitions")
+          assert(h("X-Vex-Nodes") == nn.toString && h("X-Vex-Ways") == nw.toString)
+        }
+        kinds
+      } finally spark.conf.set(partitions, prev)
+    }
+    assert(layouts.forall(_.size > 1), "one result partition")
+    assert(layouts.exists(_.exists(_.distinct.size > 1)),
+      "no result partition holds two kinds")
+    assert(layouts.exists(_.sliding(2).exists(p => p.size == 2 && p(0).last < p(1).head)),
+      "no kind boundary between result partitions")
+  }
+
+  test("a box with no relations and an empty box: the driver-side encodes; " +
+       "VEX carries no relations and its counts match the body") {
+    assert(PlanetExtract.bbox(tables, emptyBox).isEmpty, "weak fixture: box not empty")
+    val header = new java.io.ByteArrayOutputStream()
+    PbfCodec.writePbfFile(header, Nil, Nil, Nil)
+    served() { port =>
+      for (b <- Seq(noRelationsBox, emptyBox, cityBox)) {
+        val (pbf, vex, (nn, nw)) = driverEncodes(b)
+        val (c, body, _) = get(port, query(b))
+        assert(c == 200 && body.toSeq == pbf.toSeq, s"PBF $b")
+        val d = PbfCodec.decodeFile(body)
+        if (b == noRelationsBox) assert(d.ways.nonEmpty && d.rels.isEmpty)
+        if (b == emptyBox) {
+          assert(body.length == 65 && body.toSeq == header.toByteArray.toSeq)
+          assert(d.nodes.isEmpty && d.ways.isEmpty && d.rels.isEmpty)
+        }
+        val (cv, bodyV, h) = get(port, query(b, vex = true))
+        assert(cv == 200 && bodyV.toSeq == vex.toSeq, s"VEX $b")
+        assert(h("X-Vex-Nodes") == nn.toString && h("X-Vex-Ways") == nw.toString)
+        // the counts read the whole body: no relation bytes follow the ways
+        val in = new java.io.ByteArrayInputStream(bodyV)
+        val (vn, vw) = VexSink.read(in, nn, nw)
+        assert(vn.size == nn && vw.size == nw && in.read() == -1, s"VEX $b")
+        assert(vn.map(_.id) == d.nodes.map(_.id) && vw.map(_.id) == d.ways.map(_.id))
+      }
+    }
   }
 }

@@ -18,8 +18,12 @@ object WriteProbe {
     * stage whose tasks wrote output records. */
   final case class Run(jobDescriptions: Seq[String], writeStageTasks: Seq[Int])
 
-  /** Run `body` under a job group of its own and record its jobs. */
-  def record[A](spark: SparkSession)(body: => A): (A, Run) = {
+  /** Run `body` under a job group of its own and record its jobs. With
+    * `anyThread`, record every job started while `body` ran, whatever its
+    * thread: a request served by `ExtractServer` runs its jobs on the
+    * server's dispatcher thread, which carries no job group. Suites run one
+    * after another in one JVM, so after [[quiesce]] those are `body`'s. */
+  def record[A](spark: SparkSession, anyThread: Boolean = false)(body: => A): (A, Run) = {
     val sc = spark.sparkContext
     val group = s"write-probe-${java.util.UUID.randomUUID()}"
     val descriptions = new ConcurrentLinkedQueue[String]()
@@ -27,7 +31,8 @@ object WriteProbe {
     val writing = ConcurrentHashMap.newKeySet[Int]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
+        if (anyThread ||
+            e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
           descriptions.add(Option(e.properties.getProperty("spark.job.description")).getOrElse(""))
           e.stageInfos.foreach(s => stageTasks.put(s.stageId, s.numTasks))
         }
@@ -52,8 +57,24 @@ object WriteProbe {
     * stages finish (connected components on a 3-pair fixture: 17 or 18
     * jobs from the same code). With AQE off the count is the actions the
     * code runs, which is what a job-count spec pins. */
-  def jobCount(spark: SparkSession)(body: => Any): Int =
-    withoutAqe(spark)(record(spark)(body)._2.jobDescriptions.size)
+  def jobCount(spark: SparkSession, anyThread: Boolean = false)(body: => Any): Int =
+    withoutAqe(spark)(record(spark, anyThread)(body)._2.jobDescriptions.size)
+
+  /** Wait until no Spark job runs and every posted listener event has been
+    * delivered, so that work an earlier spec left running (the stages of a
+    * query that failed mid-stream, a broadcast) cannot land in a count
+    * window opened next. */
+  def quiesce(spark: SparkSession): Unit = {
+    val sc = spark.sparkContext
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getActiveJobIds.nonEmpty) {
+      if (System.nanoTime() > deadline)
+        throw new IllegalStateException("Spark jobs still running after 60 s: " +
+          sc.statusTracker.getActiveJobIds.mkString(", "))
+      Thread.sleep(10)
+    }
+    ListenerBusDrain(sc)
+  }
 
   /** Run `body` with adaptive execution off (see [[jobCount]]). */
   def withoutAqe[A](spark: SparkSession)(body: => A): A = {
