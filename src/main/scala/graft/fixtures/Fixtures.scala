@@ -4,7 +4,7 @@ import java.awt.image.BufferedImage
 import java.io.ByteArrayOutputStream
 import javax.imageio.ImageIO
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.cells.CellIndex
 
@@ -239,13 +239,4 @@ object Fixtures {
       (1 to nRels).map(i => relationRow(i.toLong, seed, nNodes.toLong, nWays.toLong)))
   }
 
-  /** Distributed planet tables (bench scale), same per-id functions. */
-  def planetTables(spark: SparkSession, nNodes: Long, nWays: Long, nRels: Long,
-                   seed: Long = DefaultSeed): (Dataset[NodeRow], Dataset[WayRow], Dataset[RelationRow]) = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(cityCenters(seed))
-    (spark.range(1, nNodes + 1).mapPartitions(_.map(id => nodeRow(id, seed, bc.value))),
-     spark.range(1, nWays + 1).mapPartitions(_.map(id => wayRow(id, seed, nNodes))),
-     spark.range(1, nRels + 1).mapPartitions(_.map(id => relationRow(id, seed, nNodes, nWays))))
-  }
 }

@@ -264,9 +264,9 @@ object Similarity {
     * loop per subspace with the codebook as a reference object (the
     * [[assignLarge]] treatment: plan/codegen cost independent of
     * m x ksub x subDim, no per-element lambda dispatch on the full-corpus
-    * encode pass). Bit-identical to [[pqEncodeHigherOrder]], the
-    * spec-parity reference (PipelineOpsSpec pins the two on NULLs, short
-    * vectors, NaN, and ties). */
+    * encode pass). Bit-identical to the higher-order zip_with/aggregate
+    * form the specs keep as its reference (PipelineOpsSpec pins the two on
+    * NULLs, short vectors, NaN, and ties). */
   def pqEncode(embs: DataFrame,
                codebooks: Array[Array[Array[Float]]]): DataFrame = {
     val subDim = codebooks(0)(0).length
@@ -274,27 +274,6 @@ object Similarity {
       df.withColumn(s"code_$s",
         vec.pq_sub_argmin(col("embedding"),
           cb.map(_.map(_.toDouble)), s * subDim))
-    }
-  }
-
-  /** The higher-order formulation of [[pqEncode]] (codebooks as
-    * per-subspace DATA literals, zip_with/aggregate distances, linear
-    * array_min/array_position argmin — never a nested when-fold): kept as
-    * the spec-parity reference for the codegen expression; the zip_with
-    * lambda promotes each float element to double exactly as the explicit
-    * cast did, and aggregate's left fold is the same ascending-dim
-    * accumulation order. */
-  private[graft] def pqEncodeHigherOrder(
-      embs: DataFrame, codebooks: Array[Array[Array[Float]]]): DataFrame = {
-    val subDim = codebooks(0)(0).length
-    codebooks.zipWithIndex.foldLeft(embs) { case (df, (cb, s)) =>
-      val cbLit = typedLit(cb.map(_.map(_.toDouble).toSeq).toSeq)
-      val sub = slice(col("embedding"), s * subDim + 1, subDim)
-      val dists = transform(cbLit, cw =>
-        aggregate(zip_with(sub, cw, (x, y) => (x - y) * (x - y)),
-          lit(0.0), (acc, v) => acc + v))
-      df.withColumn(s"code_$s",
-        (array_position(dists, array_min(dists)) - 1).cast("int"))
     }
   }
 
@@ -484,22 +463,6 @@ object Similarity {
     "transform(embedding, x -> " +
       "CAST(CAST(x AS DOUBLE) * 1000.0D AS BIGINT) + 2000L)")
 
-  /** Higher-order reference form of the assignment distances (the
-    * round-6 intermediate: centroids as ONE array<array<bigint>> DATA
-    * literal + zip_with/aggregate lambdas — plan size independent of k,
-    * measured faster than the unrolled-literal codegen at 400k rows x
-    * k=4: 2.0 vs 2.8 s noop). Superseded in the shipping path by the
-    * [[graft.functions.QDistArgmin]] codegen expression (same plan-size
-    * property, tight JIT loop instead of per-element lambda dispatch);
-    * kept PUBLIC-to-graft as the spec cross-check of the null/length
-    * semantics all three forms share. */
-  private[graft] def largeDists(q: Column, cents: Array[Array[Long]]): Column = {
-    val centsLit = typedLit(cents.map(_.toSeq).toSeq)
-    transform(centsLit, c =>
-      aggregate(zip_with(q, c, (x, y) => (x - y) * (x - y)),
-        lit(0L), (acc, v) => acc + v))
-  }
-
   /** Squared-L2 argmin assignment over a frame carrying the quantized
     * `_q` column — the ONE assignment implementation every shipping
     * k-means path uses (fit rounds, fit output, predict, purity, coreset,
@@ -508,8 +471,8 @@ object Similarity {
     * source independent of k x dim, so the compiled class is reused
     * across Lloyd iterations; tight JIT'd long loop instead of
     * per-element lambda dispatch). First-minimum ties; adds `cluster`
-    * and `d2`. Bit-identical to the unrolled-literal [[kmeansAssign]]
-    * AND to the higher-order [[largeDists]] form by construction
+    * and `d2`. Bit-identical to the unrolled-literal and the higher-order
+    * zip_with/aggregate assignments the specs keep as its references
     * (spec-enforced; q_embed_kmeans_large shares q_embed_kmeans's oracle
     * verbatim). The `_ba` struct projection is a real column (referenced
     * twice, non-cheap): one argmin evaluation per row. */
@@ -519,35 +482,6 @@ object Similarity {
       .withColumn("cluster", col("_ba").getField("cluster"))
       .withColumn("d2", col("_ba").getField("d2"))
       .drop("_ba")
-
-  /** Squared-L2 argmin assignment of quantized vectors to integer
-    * centroids as UNROLLED broadcast literals: BIGINT distances (exact —
-    * no float-sum ordering hazard), linear array_min/array_position, ties
-    * to the lowest cluster id. Adds `cluster` and `d2`. Kept as the
-    * spec-parity reference implementation for [[assignLarge]] (the
-    * round-6 shipping path, whose plan cost is k-independent and whose
-    * evaluation measured faster); both produce bit-identical output. */
-  private[graft] def kmeansAssign(q: DataFrame,
-                                  cents: Array[Array[Long]]): DataFrame = {
-    require(cents.length.toLong *
-        cents.headOption.map(_.length).getOrElse(0) <= 65536,
-      s"k x dim = ${cents.length} x ${cents.headOption.map(_.length)
-        .getOrElse(0)} exceeds the literal-codegen assignment cap (65536 " +
-        "expression terms — Janino method limits force interpreted " +
-        "fallback beyond it); very large k needs an exploded-join " +
-        "assignment against a centroid TABLE instead")
-    val dists = array(cents.map { c =>
-      c.indices.map { j =>
-        val d = element_at(col("_q"), j + 1) - lit(c(j))
-        d * d
-      }.reduce(_ + _)
-    }: _*)
-    q.withColumn("_d", dists)
-      .withColumn("cluster", (array_position(col("_d"), array_min(col("_d"))) - 1)
-        .cast("long"))
-      .withColumn("d2", array_min(col("_d")))
-      .drop("_d")
-  }
 
   /**
    * Distributed Lloyd k-means in EXACT integer arithmetic — every step

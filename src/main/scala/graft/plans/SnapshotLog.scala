@@ -3,8 +3,6 @@ package graft.plans
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import scala.jdk.CollectionConverters._
-
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import org.json4s.jackson.JsonMethods.{compact, render}
@@ -89,13 +87,4 @@ object SnapshotLog {
     snap
   }
 
-  def allSnapshots(tablePath: String): Seq[Snapshot] = {
-    val d = dir(tablePath)
-    if (!Files.exists(d)) return Seq.empty
-    Files.list(d).iterator().asScala
-      .filter(_.getFileName.toString.matches("snapshot-\\d+\\.json"))
-      .map(p => JsonMethods.parse(new String(Files.readAllBytes(p),
-        StandardCharsets.UTF_8)).extract[Snapshot])
-      .toSeq.sortBy(_.id)
-  }
 }

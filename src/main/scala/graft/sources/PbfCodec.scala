@@ -37,6 +37,7 @@ object PbfCodec {
 
   final val BlockSize = 8000          // entities per block (pbf-write.c:103)
   final val MaxInflated = 32 << 20    // sanity cap (pbf-read.c:57-60)
+  final val MaxHeaderLen = 64 << 10   // BlobHeader cap (fileformat.proto)
   final val Granularity = 100L        // default: 100 nanodeg units
 
   // ---- protobuf primitives ---------------------------------------------------
@@ -163,26 +164,71 @@ object PbfCodec {
     os.write(blobBytes)
   }
 
+  /** One frame of a PBF stream: [start, start+len) covers the whole
+    * [4B len][BlobHeader][Blob] unit, decodable in isolation; the Blob is
+    * its last `dataSize` bytes. */
+  final case class BlobFrame(start: Long, len: Int, blobType: String,
+                             dataSize: Int) {
+    def blobStart: Long = start + len - dataSize
+  }
+
+  /** Parse the BlobHeader of the frame at `offset` of an input of `size`
+    * bytes; `read(pos, buf)` fills `buf` from input position `pos`. The
+    * ONE framing parser: the driver's header-only index of a file and the
+    * in-memory [[frames]] both go through it. The lengths come from the
+    * input, so each is checked before it sizes a buffer or a seek: a header
+    * length outside (0, [[MaxHeaderLen]]], a `datasize` outside
+    * [0, [[MaxInflated]]], or a frame that ends past the input is an
+    * IOException naming the offset (and `source`, when given). */
+  def frameAt(offset: Long, size: Long, source: String = "")(
+      read: (Long, Array[Byte]) => Unit): BlobFrame = {
+    def corrupt(msg: String) = new java.io.IOException(
+      s"corrupt PBF frame at offset $offset${if (source.isEmpty) "" else s" of $source"}: $msg")
+    if (offset + 4 > size)
+      throw corrupt(s"${size - offset} trailing bytes, too few for a header length")
+    val lenBuf = new Array[Byte](4)
+    read(offset, lenBuf)
+    val hLen = java.nio.ByteBuffer.wrap(lenBuf).getInt   // big-endian
+    if (hLen <= 0 || hLen > MaxHeaderLen)
+      throw corrupt(s"BlobHeader length $hLen outside (0, $MaxHeaderLen]")
+    if (offset + 4 + hLen > size)
+      throw corrupt(s"BlobHeader of $hLen bytes ends past the input ($size bytes)")
+    val hBytes = new Array[Byte](hLen)
+    read(offset + 4, hBytes)
+    var tpe = ""; var dataSize = -1L
+    try {
+      val h = new PbIn(hBytes, 0, hLen)
+      while (h.hasNext) {
+        val t = h.readTag()
+        (t >> 3, t & 7) match {
+          case (1, 2) => tpe = new String(h.readBytes(), "UTF-8")
+          case (3, 0) => dataSize = h.readVarint()
+          case (_, w) => h.skip(w)
+        }
+      }
+    } catch {
+      case e @ (_: IndexOutOfBoundsException | _: IllegalArgumentException) =>
+        throw corrupt(s"unparsable BlobHeader (${e.getMessage})")
+    }
+    if (dataSize < 0 || dataSize > MaxInflated)
+      throw corrupt(s"datasize $dataSize outside [0, $MaxInflated]")
+    val f = BlobFrame(offset, 4 + hLen + dataSize.toInt, tpe, dataSize.toInt)
+    if (offset + f.len > size)
+      throw corrupt(s"frame of ${f.len} bytes ends past the input ($size bytes)")
+    f
+  }
+
   /** Iterate (blobType, inflated payload) frames of a PBF byte stream. */
   def frames(bytes: Array[Byte]): Iterator[(String, Array[Byte])] =
     new Iterator[(String, Array[Byte])] {
-      private var pos = 0
-      def hasNext: Boolean = pos + 4 <= bytes.length
+      private var pos = 0L
+      def hasNext: Boolean = pos < bytes.length
       def next(): (String, Array[Byte]) = {
-        val hLen = ((bytes(pos) & 0xFF) << 24) | ((bytes(pos + 1) & 0xFF) << 16) |
-                   ((bytes(pos + 2) & 0xFF) << 8) | (bytes(pos + 3) & 0xFF)
-        pos += 4
-        val h = new PbIn(bytes, pos, pos + hLen); pos += hLen
-        var tpe = ""; var dataSize = -1
-        while (h.hasNext) {
-          val t = h.readTag()
-          (t >> 3, t & 7) match {
-            case (1, 2) => tpe = new String(h.readBytes(), "UTF-8")
-            case (3, 0) => dataSize = h.readVarint().toInt
-            case (_, w) => h.skip(w)
-          }
-        }
-        val b = new PbIn(bytes, pos, pos + dataSize); pos += dataSize
+        val f = frameAt(pos, bytes.length) { (p, buf) =>
+          System.arraycopy(bytes, p.toInt, buf, 0, buf.length) }
+        pos += f.len
+        val start = f.blobStart.toInt
+        val b = new PbIn(bytes, start, start + f.dataSize)
         var raw: Array[Byte] = null; var rawSize = -1; var zlib: Array[Byte] = null
         while (b.hasNext) {
           val t = b.readTag()
@@ -193,7 +239,7 @@ object PbfCodec {
             case (_, w) => b.skip(w)
           }
         }
-        (tpe, if (raw != null) raw else inflate(zlib, rawSize))
+        (f.blobType, if (raw != null) raw else inflate(zlib, rawSize))
       }
     }
 

@@ -13,14 +13,12 @@ import graft.fixtures.Fixtures.{NodeRow, RelationRow, WayRow}
  * switching to this engine needs a way in from .pbf files without a
  * custom FileFormat.
  *
- * Read path: `spark.read.format("binaryFile")` delivers each file as one
- * row; a flatMap decodes blob frames (zlib inflate + hand-rolled protobuf,
- * PbfCodec) into typed rows. Granularity: one TASK PER FILE — PBF blob
- * framing is not splittable without an index pass, so parallelism comes
- * from file count (planet-scale ingest is fed as many files; the reference
- * itself is one sequential scan, pbf-read.c:239). Phase pruning: a scan
- * that wants only nodes stops reading at the first ways block
- * (PbfCodec.decodeFile, mirroring pbf-read.c:94-135).
+ * Read path: [[readPlanetSplit]], one file at a time. The reference reads
+ * a planet with one sequential scan (pbf-read.c:239); here the driver
+ * indexes the blob frames with a header-only scan and the frame list is
+ * range-partitioned across tasks, each of which decodes its frames (zlib
+ * inflate + hand-rolled protobuf, PbfCodec) into typed rows. A directory
+ * of part files is read by concatenating the parts in name order first.
  *
  * Write path: one valid .pbf part file per partition, kind-segregated and
  * named so lexicographic part order preserves the nodes -> ways ->
@@ -29,53 +27,9 @@ import graft.fixtures.Fixtures.{NodeRow, RelationRow, WayRow}
  */
 object PbfSource {
 
-  private def fileBytes(spark: SparkSession, path: String): Dataset[Array[Byte]] = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(path)
-      .where(col("path").endsWith(".pbf"))
-      .select("content").as[Array[Byte]]
-  }
-
-  /** Decode all three entity kinds as typed Datasets (three passes over the
-    * files; each pass phase-prunes, so the nodes pass stops at the first
-    * ways block and so on — column pruning at the source). */
-  def readNodes(spark: SparkSession, path: String): Dataset[NodeRow] = {
-    import spark.implicits._
-    fileBytes(spark, path).flatMap(b =>
-      PbfCodec.decodeFile(b, PbfCodec.Wanted(nodes = true, ways = false,
-        relations = false)).nodes)
-  }
-
-  def readWays(spark: SparkSession, path: String): Dataset[WayRow] = {
-    import spark.implicits._
-    fileBytes(spark, path).flatMap(b =>
-      PbfCodec.decodeFile(b, PbfCodec.Wanted(nodes = false, ways = true,
-        relations = false)).ways)
-  }
-
-  def readRelations(spark: SparkSession, path: String): Dataset[RelationRow] = {
-    import spark.implicits._
-    fileBytes(spark, path).flatMap(b =>
-      PbfCodec.decodeFile(b, PbfCodec.Wanted(nodes = false, ways = false,
-        relations = true)).rels)
-  }
-
-  /** The planet-ingest entry: PBF files -> the three raw DataFrames that
-    * feed PlanetExtract.ingest. NOTE: the binaryFile source materializes a
-    * whole file per row and caps at 2 GB — for a planet-sized single .pbf
-    * use [[readPlanetSplit]], which never loads more than one blob frame
-    * (<= ~16 MB zlib, 32 MB inflated) at a time per task. */
-  def readPlanet(spark: SparkSession, path: String)
-      : (DataFrame, DataFrame, DataFrame) =
-    (readNodes(spark, path).toDF(),
-     readWays(spark, path).toDF(),
-     readRelations(spark, path).toDF())
-
-  // ---- splittable single-file read -------------------------------------------
-
-  /** One frame of a PBF file: [start, start+len) covers the whole
-    * [4B len][BlobHeader][Blob] unit, decodable in isolation. */
-  final case class BlobFrame(start: Long, len: Int, blobType: String)
+  /** Driver header-scan counter (test observability: readPlanetSplit must
+    * index the file exactly once for all three kinds). */
+  private[graft] val indexPasses = new java.util.concurrent.atomic.AtomicLong(0)
 
   /**
    * Index the blob frames of ONE .pbf file with a header-only scan: each
@@ -85,84 +39,25 @@ object PbfSource {
    * range-partitioned across tasks and each task re-opens the file and
    * decodes only its frames — the blob is the natural split unit (each
    * PrimitiveBlock is independently parsable by design, osmformat.proto).
+   * A corrupt or truncated frame fails here, on the driver, with an
+   * IOException naming the file and offset ([[PbfCodec.frameAt]]).
    */
-  /** Driver header-scan counter (test observability: readPlanetSplit must
-    * index the file exactly once for all three kinds). */
-  private[graft] val indexPasses = new java.util.concurrent.atomic.AtomicLong(0)
-
-  def indexBlobs(spark: SparkSession, file: String): Seq[BlobFrame] = {
+  def indexBlobs(spark: SparkSession, file: String): Seq[PbfCodec.BlobFrame] = {
     indexPasses.incrementAndGet()
     val p = new org.apache.hadoop.fs.Path(file)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val size = fs.getFileStatus(p).getLen
     val in = fs.open(p)
     try {
-      val frames = Seq.newBuilder[BlobFrame]
+      val frames = Seq.newBuilder[PbfCodec.BlobFrame]
       var pos = 0L
-      val lenBuf = new Array[Byte](4)
-      while (pos + 4 <= size) {
-        in.readFully(pos, lenBuf)
-        val hLen = ((lenBuf(0) & 0xFF) << 24) | ((lenBuf(1) & 0xFF) << 16) |
-                   ((lenBuf(2) & 0xFF) << 8) | (lenBuf(3) & 0xFF)
-        val hBytes = new Array[Byte](hLen)
-        in.readFully(pos + 4, hBytes)
-        val h = new PbfCodec.PbIn(hBytes, 0, hLen)
-        var tpe = ""; var dataSize = 0
-        while (h.hasNext) {
-          val t = h.readTag()
-          (t >> 3, t & 7) match {
-            case (1, 2) => tpe = new String(h.readBytes(), "UTF-8")
-            case (3, 0) => dataSize = h.readVarint().toInt
-            case (_, w) => h.skip(w)
-          }
-        }
-        val total = 4 + hLen + dataSize
-        frames += BlobFrame(pos, total, tpe)
-        pos += total
+      while (pos < size) {
+        val f = PbfCodec.frameAt(pos, size, file)(in.readFully(_, _))
+        frames += f
+        pos += f.len
       }
       frames.result()
     } finally in.close()
-  }
-
-  /**
-   * Splittable decode of one PBF file: `parallelism` tasks each fetch and
-   * decode a contiguous range of OSMData frames (phase-pruned per the
-   * `want` projection). Parallelism within ONE file — the answer to "a
-   * planet is one 60 GB .pbf", where the per-file binaryFile path would
-   * serialize on a single task.
-   */
-  def decodeFileSplit(spark: SparkSession, file: String,
-                      want: PbfCodec.Wanted,
-                      parallelism: Int = 0,
-                      preIndexed: Seq[BlobFrame] = null): Dataset[(Seq[NodeRow], Seq[WayRow], Seq[RelationRow])] = {
-    import spark.implicits._
-    val slices = if (parallelism > 0) parallelism
-                 else spark.sparkContext.defaultParallelism
-    val frames = (if (preIndexed != null) preIndexed
-                  else indexBlobs(spark, file)).filter(_.blobType == "OSMData")
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    spark.createDataset(frames.map(f => (f.start, f.len)))
-      .repartitionByRange(math.min(slices, math.max(1, frames.size)),
-        org.apache.spark.sql.functions.col("_1"))   // contiguous ranges: sequential IO per task
-      .mapPartitions { it =>
-        val p = new org.apache.hadoop.fs.Path(file)
-        val fs = p.getFileSystem(conf.value)
-        val in = fs.open(p)
-        // drain eagerly inside try/finally: the stream must close even
-        // when a corrupt frame makes the read or decode throw
-        val materialized =
-          try it.map { case (start, len) =>
-            val buf = new Array[Byte](len)
-            in.readFully(start, buf)
-            val (tpe, payload) = PbfCodec.frames(buf).next()
-            require(tpe == "OSMData")
-            val d = PbfCodec.decodePrimitiveBlock(payload, want)
-            (d.nodes, d.ways, d.rels)
-          }.toVector
-          finally in.close()
-        materialized.iterator
-      }
   }
 
   /** Result of a splittable planet read: the three entity tables plus the
@@ -175,18 +70,42 @@ object PbfSource {
     def unpersist(): Unit = cache.unpersist()
   }
 
-  /** Splittable planet read over one file: ONE driver index pass and ONE
-    * decode pass shared by all three entity kinds. The decoded triple is
-    * persisted (memory, spill to disk) so the three DataFrames' jobs read
-    * the cached partitions instead of re-inflating the whole file per kind
-    * — at planet scale the alternative is 3 full zlib passes. */
+  /** Splittable planet read over one file: ONE driver index pass, then
+    * `parallelism` tasks (default: the default parallelism) each fetch and
+    * decode a contiguous range of OSMData frames — parallelism within ONE
+    * file, the answer to "a planet is one 60 GB .pbf". The decoded triple
+    * is persisted (memory, spill to disk) so the three DataFrames' jobs
+    * read the cached partitions instead of re-inflating the whole file per
+    * kind — at planet scale the alternative is 3 full zlib passes. */
   def readPlanetSplit(spark: SparkSession, file: String, parallelism: Int = 0)
       : SplitPlanet = {
     import spark.implicits._
-    val idx = indexBlobs(spark, file)   // the ONLY header-scan of the file
-    val decoded = decodeFileSplit(spark, file,
-        PbfCodec.Wanted(nodes = true, ways = true, relations = true),
-        parallelism, preIndexed = idx)
+    val slices = if (parallelism > 0) parallelism
+                 else spark.sparkContext.defaultParallelism
+    val frames = indexBlobs(spark, file).filter(_.blobType == "OSMData")
+    val conf = new org.apache.spark.util.SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration)
+    val decoded = spark.createDataset(frames.map(f => (f.start, f.len)))
+      .repartitionByRange(math.min(slices, math.max(1, frames.size)),
+        col("_1"))   // contiguous ranges: sequential IO per task
+      .mapPartitions { it =>
+        val p = new org.apache.hadoop.fs.Path(file)
+        val fs = p.getFileSystem(conf.value)
+        val in = fs.open(p)
+        // drain eagerly inside try/finally: the stream must close even
+        // when a corrupt frame makes the read or decode throw
+        val materialized =
+          try it.map { case (start, len) =>
+            val buf = new Array[Byte](len)
+            in.readFully(start, buf)
+            val (tpe, payload) = PbfCodec.frames(buf).next()
+            require(tpe == "OSMData")
+            val d = PbfCodec.decodePrimitiveBlock(payload)
+            (d.nodes, d.ways, d.rels)
+          }.toVector
+          finally in.close()
+        materialized.iterator
+      }
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     SplitPlanet(decoded.flatMap(_._1).toDF(),
                 decoded.flatMap(_._2).toDF(),

@@ -170,16 +170,4 @@ object VexSink {
     }
   }
 
-  /** Single-file VEX sink for bounded extracts (the reference's
-    * one-file-per-extract shape, vex.c:861-880 with the .vex extension).
-    * Hadoop FS path: works against HDFS/object stores like local dirs.
-    * Returns (nNodes, nWays). */
-  def writeFile(spark: org.apache.spark.sql.SparkSession, path: String,
-                nodes: IterableOnce[NodeRow], ways: IterableOnce[WayRow])
-      : (Long, Long) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(p, true)
-    try write(os, nodes, ways) finally os.close()
-  }
 }

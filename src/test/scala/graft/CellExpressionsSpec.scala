@@ -118,38 +118,67 @@ class CellExpressionsSpec extends SparkFunSuite {
       (4L, Seq[java.lang.Long](1L, 2L)),          // LENGTH MISMATCH -> NULL
       (5L, Seq[java.lang.Long](1L, null, 3L)))    // NULL element -> NULL
     val df = rows.toDF("id", "q")
-    // the higher-order reference (zip_with pads/propagates nulls)
-    val hoDists = graft.operators.Similarity.largeDists(col("q"), cents)
-    val ho = df.select(col("id"),
-        (array_position(hoDists, array_min(hoDists)) - 1).cast("long").as("cl"),
-        array_min(hoDists).as("d2"))
-      .collect().map(r => r.getLong(0) ->
-        (if (r.isNullAt(1)) null else r.getLong(1),
-         if (r.isNullAt(2)) null else r.getLong(2))).toMap
-    val cg = df.select(col("id"), vec.qdist_argmin(col("q"), cents).as("b"))
-      .select(col("id"), col("b").getField("cluster").as("cl"),
-        col("b").getField("d2").as("d2"))
-      .collect().map(r => r.getLong(0) ->
-        (if (r.isNullAt(1)) null else r.getLong(1),
-         if (r.isNullAt(2)) null else r.getLong(2))).toMap
-    assert(cg == ho, s"argmin: $cg vs $ho")
+    def nullable(r: org.apache.spark.sql.Row, i: Int): Any =
+      if (r.isNullAt(i)) null else r.getLong(i)
+    // each call plans fresh frames: a frame keeps the physical plan it was
+    // first planned with, so the interpreted run below really re-plans
+    def run(wholeStage: Boolean): (Map[Long, (Any, Any)], Map[(Long, Long), Any]) = {
+      // a lambda form is CodegenFallback, so its projection is never inside
+      // whole-stage codegen; the codegen forms' projections are, unless
+      // whole-stage codegen is off
+      def collectIn(out: org.apache.spark.sql.DataFrame, lambda: Boolean) = {
+        val got = out.collect().toSeq
+        // read after the run: an adaptive plan shows its stages once final
+        val plan = out.queryExecution.executedPlan.toString
+        val ws = plan.contains("*(")
+        assert(if (wholeStage) ws || lambda else !ws,
+          s"whole-stage codegen ${if (wholeStage) "off" else "still on"}: $plan")
+        got
+      }
+      // the higher-order reference (zip_with pads/propagates nulls)
+      val hoDists = graft.operators.SimilarityOracle.largeDists(col("q"), cents)
+      val ho = collectIn(df.select(col("id"),
+          (array_position(hoDists, array_min(hoDists)) - 1).cast("long").as("cl"),
+          array_min(hoDists).as("d2")), lambda = true)
+        .map(r => r.getLong(0) -> (nullable(r, 1), nullable(r, 2))).toMap
+      val cg = collectIn(df.select(col("id"), vec.qdist_argmin(col("q"), cents).as("b"))
+          .select(col("id"), col("b").getField("cluster").as("cl"),
+            col("b").getField("d2").as("d2")), lambda = false)
+        .map(r => r.getLong(0) -> (nullable(r, 1), nullable(r, 2))).toMap
+      assert(cg == ho, s"argmin: $cg vs $ho")
+      // pair distance: codegen vs lambda over all row pairs, one query each
+      // so the codegen form runs inside whole-stage codegen
+      val pairs = df.select(col("id").as("ia"), col("q").as("qa"))
+        .crossJoin(df.select(col("id").as("ib"), col("q").as("qb")))
+      def byPair(d: org.apache.spark.sql.Column, lambda: Boolean) =
+        collectIn(pairs.select(col("ia"), col("ib"), d), lambda)
+          .map(r => (r.getLong(0), r.getLong(1)) -> nullable(r, 2)).toMap
+      val lam = byPair(aggregate(zip_with(col("qa"), col("qb"),
+        (x, y) => (x - y) * (x - y)), lit(0L), (acc, v) => acc + v), lambda = true)
+      val got = byPair(vec.sqdist_long(col("qa"), col("qb")), lambda = false)
+      assert(got.size == rows.size * rows.size)
+      got.foreach { case (pair, d) => assert(d == lam(pair), s"pair $pair: $d vs ${lam(pair)}") }
+      (cg, got)
+    }
+    val (cg, pairs) = run(wholeStage = true)
     assert(cg(2L) == ((0L, 2L)), "tie must pick the FIRST minimal centroid")
     assert(cg(4L) == ((null, null)) && cg(5L) == ((null, null)))
-    // pair distance: codegen vs lambda over all row pairs
-    val a = df.select(col("id").as("ia"), col("q").as("qa"))
-    val b = df.select(col("id").as("ib"), col("q").as("qb"))
-    val pairs = a.crossJoin(b)
-    val lam = aggregate(zip_with(col("qa"), col("qb"),
-      (x, y) => (x - y) * (x - y)), lit(0L), (acc, v) => acc + v)
-    val got = pairs.select(col("ia"), col("ib"),
-        vec.sqdist_long(col("qa"), col("qb")).as("cgd"), lam.as("lamd"))
-      .collect()
-    got.foreach { r =>
-      val c = if (r.isNullAt(2)) null else r.getLong(2)
-      val l = if (r.isNullAt(3)) null else r.getLong(3)
-      assert(c == l, s"pair (${r.getLong(0)},${r.getLong(1)}): $c vs $l")
+    assert(pairs.values.exists(d => d != null && d.asInstanceOf[Long] > 0))
+    // the interpreted surface (nullSafeEval, what Spark falls back to when
+    // codegen fails): no whole-stage codegen, every projection built by
+    // the interpreted factory; same answers as the lambda forms and as the
+    // codegen run
+    val interpreted = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val saved = interpreted.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val ip = try {
+      interpreted.foreach { case (k, v) => spark.conf.set(k, v) }
+      run(wholeStage = false)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
-    assert(got.exists(r => !r.isNullAt(2) && r.getLong(2) > 0))
+    assert(ip == ((cg, pairs)), s"NO_CODEGEN $ip vs codegen ${(cg, pairs)}")
   }
 
   test("point_in_polygon: codegen path matches interpreted oracle on a concave polygon") {

@@ -9,9 +9,10 @@ import graft.oracle.RefOracle
 import graft.sources.{PbfCodec, PbfSource}
 
 /** PBF source/sink (S1/S2/S5): byte-level round-trips of the hand-rolled
-  * protobuf codec, phase early-exit pruning, the Spark binaryFile read
-  * path, and an end-to-end PBF -> ingest -> extract differential vs the
-  * reference-model oracle built from the decoded planet. */
+  * protobuf codec, phase early-exit pruning, the splittable Spark read
+  * path, frame checks on corrupt input, and an end-to-end PBF -> ingest ->
+  * extract differential vs the reference-model oracle built from the
+  * decoded planet. */
 class PbfSourceSpec extends SparkFunSuite {
 
   private lazy val planet = Fixtures.localPlanet(1500, 400, 80)
@@ -22,6 +23,13 @@ class PbfSourceSpec extends SparkFunSuite {
     d
   }
   private def pbfBytes = Files.readAllBytes(Paths.get(s"$pbfDir/planet.pbf"))
+
+  /** `bytes` as a .pbf file in a fresh temp dir; returns its path. */
+  private def pbfFile(bytes: Array[Byte]): String = {
+    val f = Files.createTempDirectory("graft_pbf_").resolve("planet.pbf")
+    Files.write(f, bytes)
+    f.toString
+  }
 
   test("varint/zigzag primitives round-trip (incl. 64-bit edges)") {
     val vs = Seq(0L, 1L, -1L, 127L, 128L, 300L, -300L,
@@ -91,20 +99,24 @@ class PbfSourceSpec extends SparkFunSuite {
     assert(d.nodes == Seq(Fixtures.NodeRow(7, 2.5, 1.5, Map("k" -> "v"))))
   }
 
-  test("Spark binaryFile read path: typed datasets match the local decode") {
-    val nodes = PbfSource.readNodes(spark, pbfDir).collect().sortBy(_.id)
+  test("split read of one file: typed datasets match the local decode") {
+    import spark.implicits._
+    val split = PbfSource.readPlanetSplit(spark, s"$pbfDir/planet.pbf")
+    val nodes = split.nodes.as[Fixtures.NodeRow].collect().sortBy(_.id)
     assert(nodes.length == planet.nodes.size)
     assert(nodes.map(_.id).toSeq == planet.nodes.map(_.id))
-    val ways = PbfSource.readWays(spark, pbfDir).collect().sortBy(_.id)
+    val ways = split.ways.as[Fixtures.WayRow].collect().sortBy(_.id)
     assert(ways.map(_.refs.toSeq).toSeq == planet.ways.map(_.refs.toSeq))
-    val rels = PbfSource.readRelations(spark, pbfDir).collect().sortBy(_.id)
+    val rels = split.relations.as[Fixtures.RelationRow].collect().sortBy(_.id)
     assert(rels.length == planet.relations.size)
+    split.unpersist()
   }
 
   test("end-to-end: PBF -> ingest -> bbox extract matches the oracle built " +
        "from the decoded planet (coords quantize identically)") {
-    val (n, w, r) = PbfSource.readPlanet(spark, pbfDir)
-    val t = PlanetExtract.ingest(n, w, r, strictB1 = true)
+    val split = PbfSource.readPlanetSplit(spark, s"$pbfDir/planet.pbf")
+    val t = PlanetExtract.ingest(split.nodes, split.ways, split.relations,
+      strictB1 = true)
     val decoded = PbfCodec.decodeFile(pbfBytes)
     val oraclePlanet = Fixtures.Planet(decoded.nodes, decoded.ways, decoded.rels)
     val oracle = new RefOracle(oraclePlanet, strictB1 = true)
@@ -116,6 +128,7 @@ class PbfSourceSpec extends SparkFunSuite {
     assert(engine == expect,
       s"engine-only=${(engine -- expect).take(5)} oracle-only=${(expect -- engine).take(5)}")
     assert(engine.nonEmpty)
+    split.unpersist()
   }
 
   test("randomized round-trip: huge ids, negative coords, unicode tags, " +
@@ -209,8 +222,8 @@ class PbfSourceSpec extends SparkFunSuite {
     assert(w.select("id").collect().map(_.getLong(0)).sorted.toSeq ==
       planet.ways.map(_.id))
     assert(r.count() == planet.relations.size)
-    // content identical to the per-file binaryFile path
-    val whole = PbfSource.readNodes(spark, pbfDir).collect()
+    // content identical to the whole-file decode
+    val whole = PbfCodec.decodeFile(pbfBytes).nodes
       .map(x => (x.id, x.lon, x.lat)).toSet
     val splitRows = n.select("id", "lon", "lat").collect()
       .map(x => (x.getLong(0), x.getDouble(1), x.getDouble(2))).toSet
@@ -275,12 +288,71 @@ class PbfSourceSpec extends SparkFunSuite {
     val parts = new java.io.File(outDir).listFiles().map(_.getName).sorted
     assert(parts.head.startsWith("part-0-nodes"))
     assert(parts.last.startsWith("part-2-relations"))
-    val (n2, w2, r2) = PbfSource.readPlanet(spark, outDir)
+    // the parts concatenated in name order form one valid stream
+    val one = Files.createTempDirectory("graft_pbf_concat_").resolve("planet.pbf")
+    Files.write(one, parts.flatMap(p => Files.readAllBytes(Paths.get(outDir, p))))
+    val split = PbfSource.readPlanetSplit(spark, one.toString)
+    val (n2, w2, r2) = (split.nodes, split.ways, split.relations)
     assert(n2.select("id").collect().map(_.getLong(0)).sorted.toSeq ==
       planet.nodes.map(_.id))
     assert(w2.select("id").collect().map(_.getLong(0)).sorted.toSeq ==
       planet.ways.map(_.id))
     assert(r2.select("id").collect().map(_.getLong(0)).sorted.toSeq ==
       planet.relations.map(_.id))
+    split.unpersist()
+  }
+
+  test("corrupt framing: a garbage header length or a file cut off " +
+       "mid-blob is an IOException naming the offset, from both readers; " +
+       "the split read fails on the driver, at index time") {
+    val good = pbfBytes
+    val frames = PbfSource.indexBlobs(spark, pbfFile(good))
+    val second = frames(1).start
+    def withLen(at: Long, len: Int): Array[Byte] = {
+      val b = good.clone()
+      java.nio.ByteBuffer.wrap(b).putInt(at.toInt, len)
+      b
+    }
+    val cases = Seq(
+      "negative header length" -> (withLen(0, -1), 0L),
+      "header length past 64 KiB" -> (withLen(second, (64 << 10) + 1), second),
+      "huge header length" -> (withLen(second, Int.MaxValue), second),
+      "cut off mid-blob" -> (good.take(good.length - 10), frames.last.start),
+      "cut off inside a length prefix" ->
+        (good.take(frames.last.start.toInt + 2), frames.last.start))
+    cases.foreach { case (what, (bytes, offset)) =>
+      val local = intercept[java.io.IOException](PbfCodec.decodeFile(bytes))
+      assert(local.getMessage.contains(s"offset $offset"), s"$what: ${local.getMessage}")
+      val file = pbfFile(bytes)
+      var ex: java.io.IOException = null
+      val jobs = WriteProbe.jobCount(spark) {
+        ex = intercept[java.io.IOException](PbfSource.readPlanetSplit(spark, file))
+      }
+      assert(jobs == 0, s"$what: the split read ran $jobs Spark jobs before failing")
+      assert(ex.getMessage.contains(s"offset $offset") && ex.getMessage.contains(file),
+        s"$what: ${ex.getMessage}")
+    }
+    // a datasize past MaxInflated is rejected before any buffer is sized
+    val hdr = new PbfCodec.PbOut
+    hdr.writeString(1, "OSMData")
+    hdr.writeInt(3, PbfCodec.MaxInflated + 1L)
+    val h = hdr.toBytes
+    val big = java.nio.ByteBuffer.allocate(4 + h.length).putInt(h.length).put(h).array()
+    val ex = intercept[java.io.IOException](PbfCodec.decodeFile(big))
+    assert(ex.getMessage.contains("datasize"), ex.getMessage)
+  }
+
+  test("a single-file split read runs a pinned number of Spark jobs " +
+       "(adaptive execution off)") {
+    val file = pbfFile(pbfBytes)
+    var split: PbfSource.SplitPlanet = null
+    val jobs = WriteProbe.jobCount(spark) {
+      split = PbfSource.readPlanetSplit(spark, file)
+      assert(split.nodes.count() == planet.nodes.size)
+    }
+    split.unpersist()
+    // the range partitioner's sample of the frame index, then the count;
+    // the driver's index pass runs no job
+    assert(jobs == 2, s"$jobs jobs")
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Frequency, Sampling, Similarity, TextOps}
+import graft.operators.{Dedup, Frequency, Sampling, Similarity, SimilarityOracle, TextOps}
 
 /** Dedup / similarity / text-analysis operators vs brute-force oracles on
   * fixtures with planted duplicates and near-duplicates. */
@@ -440,7 +440,7 @@ class PipelineOpsSpec extends SparkFunSuite {
   // round 6, so the reference must call the unrolled path explicitly)
   private def predictLiteral(df: org.apache.spark.sql.DataFrame,
                              cents: Array[Array[Long]]) =
-    Similarity.kmeansAssign(
+    SimilarityOracle.kmeansAssign(
         df.select(col("vec_id"), Similarity.quantized.as("_q")), cents)
       .select("vec_id", "cluster", "d2")
 
@@ -1006,7 +1006,7 @@ class PipelineOpsSpec extends SparkFunSuite {
         ((if (r.isNullAt(1)) null else r.getInt(1).asInstanceOf[Any]),
          (if (r.isNullAt(2)) null else r.getInt(2).asInstanceOf[Any]))).toMap
     val cg = dump(Similarity.pqEncode(df, cbs))
-    val ho = dump(Similarity.pqEncodeHigherOrder(df, cbs))
+    val ho = dump(SimilarityOracle.pqEncodeHigherOrder(df, cbs))
     assert(cg === ho, s"codegen vs higher-order: $cg vs $ho")
     assert(cg(1L) === ((0, 0)), "exact-hit tie must pick the FIRST codeword")
     assert(cg(2L)._1 === 0, "all-NaN distances resolve to the first codeword")

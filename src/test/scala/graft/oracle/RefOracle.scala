@@ -140,10 +140,4 @@ final class RefOracle(planet: Planet, strictB1: Boolean = true) {
     }
     out.toSeq
   }
-
-  /** Brute-force k-nearest-neighbor oracle over planet nodes. */
-  def knnNodes(qLon: Double, qLat: Double, k: Int): Seq[(Long, Double)] =
-    planet.nodes.map { n =>
-      n.id -> CellIndex.distMeters(qLon, qLat, n.lon, n.lat)
-    }.sortBy { case (id, d) => (d, id) }.take(k)
 }
