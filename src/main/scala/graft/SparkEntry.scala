@@ -236,8 +236,7 @@ object SparkEntry {
       val tmp = java.nio.file.Files.createTempDirectory("graft_knn_").toString
       // repartition on the partition column (one file per directory, not
       // #tasks x #dirs); res 3 = 64 dirs, sized to the gate data volume
-      LeafWrite.byLeaf(pts, "p_cell")
-        .write.mode("overwrite").partitionBy("p_cell").parquet(tmp)
+      LeafWrite.partitioned(pts, Seq("p_cell")).mode("overwrite").parquet(tmp)
       Knn.knn(s.read.parquet(tmp), knnQs, 10, pRes = 3)
         .select(col("qid"), col("id"), col("rank").cast("long").as("rnk"))
         .orderBy("qid", "rnk")

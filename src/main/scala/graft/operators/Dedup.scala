@@ -51,7 +51,7 @@ object Dedup {
     val spark = df.sparkSession
     val dir = new org.apache.hadoop.fs.Path(
       scratchDir(spark) + s"/${prefix}_${java.util.UUID.randomUUID()}")
-    df.write.parquet(dir.toString)
+    LeafWrite.writer(df).parquet(dir.toString)
     dir.getFileSystem(spark.sparkContext.hadoopConfiguration).deleteOnExit(dir)
     // read back with the written schema: inferring it would run a
     // footer-reading job on a dir whose schema is already known
@@ -494,17 +494,17 @@ object Dedup {
                       maxBucket: Int = 1000): Unit = {
     require(buckets >= 1)
     val spark = corpus.sparkSession
-    LeafWrite.byLeaf(
+    LeafWrite.partitioned(
       portableBanded(corpus, nGram, nHashes, bands, maxBucket, carry = Nil)
         .select(col("doc_id"), col("_sh"), col("_b"), col("_k"))
         .withColumn("idx_b",
           pmod(xxhash64(col("_b"), col("_k")), lit(buckets.toLong)).cast("int")),
-      "idx_b")
-      .write.mode("overwrite")
+      Seq("idx_b"))
+      .mode("overwrite")
       // STATIC pin: a dynamic-mode rebuild over a shrunk corpus would only
       // truncate touched buckets, resurrecting stale signatures
       .option("partitionOverwriteMode", "static")
-      .partitionBy("idx_b").parquet(path)
+      .parquet(path)
     IndexMeta.write(spark, dedupIdxMetaPath(path), Seq(
       "nGram" -> nGram, "nHashes" -> nHashes, "bands" -> bands,
       "buckets" -> buckets))
@@ -626,13 +626,13 @@ object Dedup {
   def appendToDedupIndex(accepted: DataFrame, indexPath: String): Unit = {
     val spark = accepted.sparkSession
     val (nGram, nHashes, bands, buckets) = readDedupIndexMeta(spark, indexPath)
-    LeafWrite.byLeaf(
+    LeafWrite.partitioned(
       portableBanded(accepted, nGram, nHashes, bands, maxBucket = 0, carry = Nil)
         .select(col("doc_id"), col("_sh"), col("_b"), col("_k"))
         .withColumn("idx_b",
           pmod(xxhash64(col("_b"), col("_k")), lit(buckets.toLong)).cast("int")),
-      "idx_b")
-      .write.mode("append").partitionBy("idx_b").parquet(indexPath)
+      Seq("idx_b"))
+      .mode("append").parquet(indexPath)
   }
 
   /** The pruned (index x banded batch) candidate join over an

@@ -25,13 +25,18 @@ import graft.plans.SnapshotLog.PartitionLineage
  * (vex.c:25-27); p_salt spreads hot cells (AQE handles residual skew at
  * query time, explicit salt handles it at REST — file sizes stay bounded).
  *
- * Write path: the write repartitions on (p_cell, p_salt) into an EXPLICIT
- * `spark.sql.shuffle.partitions` count ([[LeafWrite.byLeaf]]). AQE would
- * coalesce a plain key repartition by shuffle bytes — a small ingest then
- * runs as one task writing every leaf file in turn — but write cost is per
- * file, not per byte. Lineage is computed from the salted input (the same
- * aggregate the commit would run over the written table, without the
- * table's partition-discovery listing), so the commit reads nothing back.
+ * Write path: every write goes through the engine's one write seam,
+ * [[LeafWrite.partitioned]]. It repartitions on (p_cell, p_salt) into an
+ * EXPLICIT `spark.sql.shuffle.partitions` count: AQE would coalesce a plain
+ * key repartition by shuffle bytes — a small ingest then runs as one task
+ * writing every leaf file in turn — but write cost is per file, not per
+ * byte. On a local `file:` table the seam also sets file permissions
+ * through java.nio instead of a forked `chmod` per directory, data file
+ * and checksum file (about 3 per leaf, in the tasks and in the driver's
+ * dynamic-overwrite commit); elsewhere that part is a no-op. Lineage is
+ * computed from the salted input (the same aggregate the commit would run
+ * over the written table, without the table's partition-discovery
+ * listing), so the commit reads nothing back.
  *
  * Scale notes (100 TB): partition resolution `pRes` controls directory
  * fan-out (4^pRes cells); salting bounds the largest partition; queries
@@ -111,9 +116,8 @@ object ImageTable {
     // file per leaf is right. Dynamic overwrite is a PER-WRITE option (not a
     // session-conf mutation, which would silently leak into every later
     // overwrite on the session)
-    LeafWrite.byLeaf(observed, "p_cell", "p_salt").write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("p_cell", "p_salt").parquet(path)
+    LeafWrite.partitioned(observed, Seq("p_cell", "p_salt")).mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic").parquet(path)
     val writeSec = (System.nanoTime() - t0) / 1e9
     val loadMetrics = obs.get.map { case (k, v) =>
       s"observed_$k" -> v.toString.toDouble }
@@ -412,7 +416,8 @@ object ImageTable {
         //    removed by hand)
         fs.delete(sinkLog, true)
       }
-      merged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      // `merged` is already laid out one task per file: no second shuffle
+      LeafWrite.writer(merged).mode("overwrite").option("partitionOverwriteMode", "dynamic")
         .partitionBy(partCols: _*).parquet(path)
     }
     affectedCells.size.toLong

@@ -21,14 +21,9 @@ private[operators] object IndexMeta {
     * token totals) that outgrow Int; same file format, same authority
     * contract. A separate name because Seq's erasure forbids a true
     * overload. */
-  def writeL(spark: SparkSession, p: Path, kv: Seq[(String, Long)]): Unit = {
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(p, true)
-    try os.write(
-      kv.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-        .getBytes("UTF-8"))
-    finally os.close()
-  }
+  def writeL(spark: SparkSession, p: Path, kv: Seq[(String, Long)]): Unit =
+    LeafWrite.writeFile(spark, p,
+      kv.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}").getBytes("UTF-8"))
 
   /** Read `keys` (all required); `what` names the sidecar and `store` the
     * builder in the failure messages. */

@@ -346,11 +346,11 @@ object PlanetExtract {
     // files (write amplification that dominates wall time even at sf0.1;
     // at planet scale it would also blow up the namenode/file listing)
     def write(df: DataFrame, table: String): Unit =
-      LeafWrite.byLeaf(df.withColumn("p",
+      LeafWrite.partitioned(df.withColumn("p",
           when(col("cell").isNull, lit(-1)).otherwise(
             shiftright(col("xbin"), CellIndex.GridBits - pBits) * (1 << pBits) +
-              shiftright(col("ybin"), CellIndex.GridBits - pBits))), "p")
-        .write.mode("overwrite").partitionBy("p").parquet(s"$path/$table")
+              shiftright(col("ybin"), CellIndex.GridBits - pBits))), Seq("p"))
+        .mode("overwrite").parquet(s"$path/$table")
     // the three writes are INDEPENDENT jobs: submit them concurrently so
     // each job's tail (the last few partition-writer tasks) is back-filled
     // by the next job's tasks instead of idling the executors (guide-§2.6
@@ -404,7 +404,7 @@ object PlanetExtract {
     * partitioned by entity kind (the staged-PBF-stream equivalent: readers
     * consume kind=node, then kind=way, then kind=relation). */
   def writeExtract(extract: DataFrame, path: String): Unit =
-    extract.write.mode("overwrite").partitionBy("kind").parquet(path)
+    LeafWrite.writer(extract).mode("overwrite").partitionBy("kind").parquet(path)
 
   /** bbox-overlap predicate over the per-way bin bounds columns written by
     * [[ingest]] — true iff the way's bound rectangle intersects any cover

@@ -51,12 +51,10 @@ object Postings {
     * ranking (tf sums, df joins) never touches raw text. */
   private def postingsFrame(docs: DataFrame, buckets: Int,
                             textCol: String): DataFrame =
-    LeafWrite.byLeaf(
-      docs.select(col("doc_id").cast("long").as("doc_id"),
-          explode(Dedup.wsWords(col(textCol))).as("word"))
-        .groupBy("word", "doc_id").agg(count(lit(1)).as("tf"))
-        .withColumn("w_b", pmod(xxhash64(col("word")), lit(buckets.toLong)).cast("int")),
-      "w_b")
+    docs.select(col("doc_id").cast("long").as("doc_id"),
+        explode(Dedup.wsWords(col(textCol))).as("word"))
+      .groupBy("word", "doc_id").agg(count(lit(1)).as("tf"))
+      .withColumn("w_b", pmod(xxhash64(col("word")), lit(buckets.toLong)).cast("int"))
 
   /** The `_doclen` rows for a batch, derived FROM its (persisted) postings
     * frame — dl = sum of the doc's term frequencies == its wsWords count,
@@ -73,8 +71,7 @@ object Postings {
         pmod(xxhash64(col("doc_id")), lit(buckets.toLong)).cast("int"))
 
   private def writeDoclen(dl: DataFrame, path: String): Unit =
-    LeafWrite.byLeaf(dl, "d_b").write.mode("append")
-      .partitionBy("d_b").parquet(doclenPath(path))
+    LeafWrite.partitioned(dl, Seq("d_b")).mode("append").parquet(doclenPath(path))
 
   private def writeMeta(spark: SparkSession, path: String, buckets: Int,
                         nDocs: Long, totalLen: Long): Unit =
@@ -108,10 +105,10 @@ object Postings {
     // (no second full pass + no memory copy), and the corpus counters
     // ride the doclen write as observe() metrics instead of a separate
     // aggregation job (round 6: build cost drops from 4 jobs to 2)
-    postingsFrame(docs, buckets, textCol)
-      .write.mode("overwrite")
+    LeafWrite.partitioned(postingsFrame(docs, buckets, textCol), Seq("w_b"))
+      .mode("overwrite")
       .option("partitionOverwriteMode", "static")
-      .partitionBy("w_b").parquet(path)
+      .parquet(path)
     val stored = spark.read.schema(PostingsSchema).parquet(path)
     val obs = new org.apache.spark.sql.Observation()
     writeDoclen(doclenFrame(docs, stored, buckets)
@@ -141,9 +138,10 @@ object Postings {
     val spark = docs.sparkSession
     val Seq(buckets, n0, tot0) = IndexMeta.readL(spark, metaPath(path),
       "postings meta", "writePostingsIndex", Seq("buckets", "n_docs", "total_len"))
-    Using.resource(materialize(postingsFrame(docs, buckets.toInt, textCol))) { batchPf =>
+    Using.resource(materialize(
+        LeafWrite.byLeaf(postingsFrame(docs, buckets.toInt, textCol), "w_b"))) { batchPf =>
       val pf = batchPf.df
-      pf.write.mode("append").partitionBy("w_b").parquet(path)
+      LeafWrite.writer(pf).mode("append").partitionBy("w_b").parquet(path)
       // batch counters ride the doclen write as observe() metrics — no
       // second materialization of the doclen frame (round 6)
       val obs = new org.apache.spark.sql.Observation()
@@ -186,13 +184,12 @@ object Postings {
       val frozenDl = use(materialize(
         spark.read.schema(DoclenSchema).parquet(doclenPath(path))
           .dropDuplicates("doc_id"))).df    // physical replay repair
-      LeafWrite.byLeaf(
+      LeafWrite.partitioned(
           frozen.dropDuplicates("word", "doc_id"),  // physical replay repair
-          "w_b")
-        .sortWithinPartitions("w_b", "word", "doc_id")
-        .write.mode("overwrite")
+          Seq("w_b"), sortBy = Seq("word", "doc_id"))
+        .mode("overwrite")
         .option("partitionOverwriteMode", "static")
-        .partitionBy("w_b").parquet(path)
+        .parquet(path)
       // postings-orphan repair: a crash between an append's postings
       // commit and its doclen write leaves docs with postings but no
       // doclen row — invisible to searchBm25's doclen join. Their dl is
@@ -203,10 +200,9 @@ object Postings {
         .withColumn("d_b",
           pmod(xxhash64(col("doc_id")), lit(buckets.toLong)).cast("int"))
       val allDl = frozenDl.unionByName(orphans)
-      LeafWrite.byLeaf(allDl, "d_b")
-        .sortWithinPartitions("d_b", "doc_id")
-        .write.mode("append")   // root overwrite just removed the old dir
-        .partitionBy("d_b").parquet(doclenPath(path))
+      LeafWrite.partitioned(allDl, Seq("d_b"), sortBy = Seq("doc_id"))
+        .mode("append")   // root overwrite just removed the old dir
+        .parquet(doclenPath(path))
       // replayed appends advanced the meta counters at-least-once; the
       // deduped + orphan-repaired doclen is the exact census, so
       // compaction resynchronizes

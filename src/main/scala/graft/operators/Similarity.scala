@@ -23,12 +23,9 @@ object Similarity {
   // ---- sidecar IO (the one implementation for every float sidecar here) ----
 
   private def writeSidecar(df: DataFrame, path: String, name: String,
-                           json: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path, name)
-    val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    val os = fs.create(p, true)
-    try os.write(json.getBytes("UTF-8")) finally os.close()
-  }
+                           json: String): Unit =
+    LeafWrite.writeFile(df.sparkSession, new org.apache.hadoop.fs.Path(path, name),
+      json.getBytes("UTF-8"))
 
   private def readSidecar(spark: org.apache.spark.sql.SparkSession,
                           path: String, name: String, store: String): String = {
@@ -198,13 +195,13 @@ object Similarity {
   def writeIvfIndex(assigned: DataFrame, centroids: Array[Array[Float]],
                     path: String): Unit = {
     // one file per list directory, not #tasks x #lists
-    LeafWrite.byLeaf(assigned, "list_id")
-      .write.mode("overwrite")
+    LeafWrite.partitioned(assigned, Seq("list_id"))
+      .mode("overwrite")
         // STATIC pin: under a session-wide dynamic mode a rebuild over a
         // shrunk corpus would only truncate the lists the new build touches,
         // resurrecting stale vectors (the writePostingsIndex hazard)
         .option("partitionOverwriteMode", "static")
-        .partitionBy("list_id").parquet(path)
+        .parquet(path)
     writeSidecar(assigned, path, "_centroids.json",
       centroids.map(_.mkString("[", ",", "]")).mkString("[", ",", "]"))
   }
@@ -329,17 +326,17 @@ object Similarity {
     require(seeds.nonEmpty, "empty embeddings table")
     val cents = seeds.take(nLists)
     val cbs = pqCodebooks(seeds.take(ksub), m, dim / m)
-    LeafWrite.byLeaf(
+    LeafWrite.partitioned(
       pqEncode(assign(embs, cents), cbs)
         .select((col("vec_id") +: (0 until m).map(s => col(s"code_$s"))) :+
           col("list_id"): _*),
-      "list_id")
-      .write.mode("overwrite")
+      Seq("list_id"))
+      .mode("overwrite")
         // STATIC pin: under a session-wide dynamic mode a rebuild over a
         // shrunk corpus would only truncate the lists the new build touches,
         // resurrecting stale vectors (the writePostingsIndex hazard)
         .option("partitionOverwriteMode", "static")
-        .partitionBy("list_id").parquet(path)
+        .parquet(path)
     writeSidecar(embs, path, "_ivfpq_meta.json",
       "{\"centroids\":" +
         cents.map(_.mkString("[", ",", "]")).mkString("[", ",", "]") +
@@ -698,14 +695,9 @@ object Similarity {
     * driver-small — the IndexMeta convention: apply-side reads the
     * writer's own parameters, divergence impossible). */
   def writeKmeansModel(spark: org.apache.spark.sql.SparkSession, path: String,
-                       cents: Array[Array[Long]]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path, "_kmeans_model.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(p, true)
-    try os.write(cents.map(_.mkString("[", ",", "]"))
-      .mkString("[", ",", "]").getBytes("UTF-8"))
-    finally os.close()
-  }
+                       cents: Array[Array[Long]]): Unit =
+    LeafWrite.writeFile(spark, new org.apache.hadoop.fs.Path(path, "_kmeans_model.json"),
+      cents.map(_.mkString("[", ",", "]")).mkString("[", ",", "]").getBytes("UTF-8"))
 
   /** Read back a stored k-means model ([[writeKmeansModel]]). */
   def readKmeansModel(spark: org.apache.spark.sql.SparkSession, path: String)

@@ -4,6 +4,7 @@ import java.io.ByteArrayOutputStream
 import java.util.zip.{Deflater, Inflater}
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 import graft.fixtures.Fixtures.{NodeRow, RelMemberRow, RelationRow, WayRow}
 
@@ -138,6 +139,11 @@ object PbfCodec {
             s"truncated or corrupt zlib blob: $off of $rawSize bytes inflated")
         off += n
       }
+      // a raw_size that disagrees with the stream would otherwise pass
+      // silently: short leaves trailing zeros, long drops the tail
+      if (off < rawSize || inf.inflate(new Array[Byte](1)) > 0)
+        throw new java.io.IOException(
+          s"zlib blob does not inflate to its raw_size of $rawSize bytes")
       out
     } finally inf.end()
   }
@@ -182,8 +188,7 @@ object PbfCodec {
     * IOException naming the offset (and `source`, when given). */
   def frameAt(offset: Long, size: Long, source: String = "")(
       read: (Long, Array[Byte]) => Unit): BlobFrame = {
-    def corrupt(msg: String) = new java.io.IOException(
-      s"corrupt PBF frame at offset $offset${if (source.isEmpty) "" else s" of $source"}: $msg")
+    def corrupt(msg: String) = corruptFrame(offset, source, msg, null)
     if (offset + 4 > size)
       throw corrupt(s"${size - offset} trailing bytes, too few for a header length")
     val lenBuf = new Array[Byte](4)
@@ -218,28 +223,51 @@ object PbfCodec {
     f
   }
 
-  /** Iterate (blobType, inflated payload) frames of a PBF byte stream. */
-  def frames(bytes: Array[Byte]): Iterator[(String, Array[Byte])] =
-    new Iterator[(String, Array[Byte])] {
+  private def corruptFrame(offset: Long, source: String, msg: String,
+                           cause: Throwable) = new java.io.IOException(
+    s"corrupt PBF frame at offset $offset${if (source.isEmpty) "" else s" of $source"}: $msg",
+    cause)
+
+  /** `body` over the payload of frame `f` of `source`. Any failure in it (a
+    * zlib error, an unknown wire type, a length past the block) means a
+    * corrupt payload behind a valid header: it is rethrown as an
+    * IOException naming the frame's offset and `source`, with the original
+    * failure as its cause. */
+  private[sources] def inFrame[T](f: BlobFrame, source: String)(body: => T): T =
+    try body catch {
+      case NonFatal(e) => throw corruptFrame(f.start, source, s"malformed Blob payload ($e)", e)
+    }
+
+  /** Iterate the frames of a PBF byte stream with their inflated payloads.
+    * `bytes` starts at offset `base` of `source`, so a failure names the
+    * frame's offset in the whole file. */
+  def frames(bytes: Array[Byte], base: Long = 0L,
+             source: String = ""): Iterator[(BlobFrame, Array[Byte])] =
+    new Iterator[(BlobFrame, Array[Byte])] {
       private var pos = 0L
       def hasNext: Boolean = pos < bytes.length
-      def next(): (String, Array[Byte]) = {
-        val f = frameAt(pos, bytes.length) { (p, buf) =>
-          System.arraycopy(bytes, p.toInt, buf, 0, buf.length) }
+      def next(): (BlobFrame, Array[Byte]) = {
+        val f = frameAt(base + pos, base + bytes.length, source) { (p, buf) =>
+          System.arraycopy(bytes, (p - base).toInt, buf, 0, buf.length) }
         pos += f.len
-        val start = f.blobStart.toInt
-        val b = new PbIn(bytes, start, start + f.dataSize)
-        var raw: Array[Byte] = null; var rawSize = -1; var zlib: Array[Byte] = null
-        while (b.hasNext) {
-          val t = b.readTag()
-          (t >> 3, t & 7) match {
-            case (1, 2) => raw = b.readBytes()
-            case (2, 0) => rawSize = b.readVarint().toInt
-            case (3, 2) => zlib = b.readBytes()
-            case (_, w) => b.skip(w)
+        val payload = inFrame(f, source) {
+          val start = (f.blobStart - base).toInt
+          val b = new PbIn(bytes, start, start + f.dataSize)
+          var raw: Array[Byte] = null; var rawSize = -1; var zlib: Array[Byte] = null
+          while (b.hasNext) {
+            val t = b.readTag()
+            (t >> 3, t & 7) match {
+              case (1, 2) => raw = b.readBytes()
+              case (2, 0) => rawSize = b.readVarint().toInt
+              case (3, 2) => zlib = b.readBytes()
+              case (_, w) => b.skip(w)
+            }
           }
+          if (raw != null) raw
+          else if (zlib != null) inflate(zlib, rawSize)
+          else throw new java.io.IOException("Blob holds neither raw nor zlib_data")
         }
-        (f.blobType, if (raw != null) raw else inflate(zlib, rawSize))
+        (f, payload)
       }
     }
 
@@ -536,9 +564,9 @@ object PbfCodec {
     val it = frames(bytes)
     var stop = false
     while (it.hasNext && !stop) {
-      val (tpe, payload) = it.next()
-      if (tpe == "OSMData") {
-        val d = decodePrimitiveBlock(payload, want)
+      val (f, payload) = it.next()
+      if (f.blobType == "OSMData") {
+        val d = inFrame(f, "")(decodePrimitiveBlock(payload, want))
         nodes ++= d.nodes; ways ++= d.ways; rels ++= d.rels; kinds ++= d.kindsSeen
         val phase = if (d.kindsSeen.contains("relation")) 3
                     else if (d.kindsSeen.contains("way")) 2

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.fixtures.Fixtures.{NodeRow, RelationRow, WayRow}
+import graft.operators.LeafWrite
 
 /**
  * Bounded PBF source + sink over Spark (SURVEY.md §2.1 S1/S5): the
@@ -98,9 +99,9 @@ object PbfSource {
           try it.map { case (start, len) =>
             val buf = new Array[Byte](len)
             in.readFully(start, buf)
-            val (tpe, payload) = PbfCodec.frames(buf).next()
-            require(tpe == "OSMData")
-            val d = PbfCodec.decodePrimitiveBlock(payload)
+            val (f, payload) = PbfCodec.frames(buf, start, file).next()
+            require(f.blobType == "OSMData")
+            val d = PbfCodec.inFrame(f, file)(PbfCodec.decodePrimitiveBlock(payload))
             (d.nodes, d.ways, d.rels)
           }.toVector
           finally in.close()
@@ -118,8 +119,7 @@ object PbfSource {
   def writePlanet(nodes: Dataset[NodeRow], ways: Dataset[WayRow],
                   rels: Dataset[RelationRow], dir: String): Unit = {
     val dPath = new org.apache.hadoop.fs.Path(dir)
-    dPath.getFileSystem(nodes.sparkSession.sparkContext.hadoopConfiguration)
-      .mkdirs(dPath)
+    LeafWrite.fileSystem(nodes.sparkSession, dPath).mkdirs(dPath)
     writeParts(nodes, dir, 0, "nodes") { (os, rows) =>
       PbfCodec.writePbfStream(os, rows)(PbfCodec.encodeNodeBlock) }
     writeParts(ways, dir, 1, "ways") { (os, rows) =>
@@ -139,7 +139,7 @@ object PbfSource {
       encode: (java.io.OutputStream, Iterator[T]) => Unit): Unit = {
     import org.apache.spark.TaskContext
     val conf = new org.apache.spark.util.SerializableConfiguration(
-      ds.sparkSession.sparkContext.hadoopConfiguration)
+      LeafWrite.hadoopConf(ds.sparkSession))
     ds.toDF().sparkSession.sparkContext.runJob(ds.rdd, (it: Iterator[T]) => {
       if (it.hasNext) {
         val pid = TaskContext.getPartitionId()

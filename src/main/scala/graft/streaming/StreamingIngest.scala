@@ -154,13 +154,10 @@ object StreamingIngest {
     * built with. A batch running with a DIFFERENT bucket count would hash
     * ids into buckets the entries don't live in and silently miss deletes —
     * a mismatch (or missing meta) forces a rebuild instead. */
-  private def writeIdxMeta(fs: org.apache.hadoop.fs.FileSystem,
-                           tablePath: String, buckets: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(idxPath(tablePath), "_meta.json")
-    val os = fs.create(p, true)
-    try os.write(s"""{"buckets":$buckets}""".getBytes("UTF-8"))
-    finally os.close()
-  }
+  private def writeIdxMeta(spark: SparkSession, tablePath: String,
+                           buckets: Int): Unit =
+    LeafWrite.writeFile(spark, new org.apache.hadoop.fs.Path(idxPath(tablePath), "_meta.json"),
+      s"""{"buckets":$buckets}""".getBytes("UTF-8"))
   private def readIdxBuckets(fs: org.apache.hadoop.fs.FileSystem,
                              tablePath: String): Option[Int] = {
     val p = new org.apache.hadoop.fs.Path(idxPath(tablePath), "_meta.json")
@@ -188,14 +185,14 @@ object StreamingIngest {
     * invisible to parquet reads of the main table. */
   def buildCellIndex(spark: SparkSession, tablePath: String,
                      buckets: Int = DefaultIdxBuckets): Unit =
-    LeafWrite.byLeaf(
+    LeafWrite.partitioned(
       spark.read.parquet(tablePath)
         // explicit long: Hive partition-column inference would make the
         // bootstrap's p_cell an int while per-batch updates write long
         .select(col("image_id"), col("p_cell").cast("long").as("p_cell"))
         .withColumn("idx_b", idxBucket(buckets)),
-      "idx_b")
-      .write.mode("overwrite").partitionBy("idx_b").parquet(idxPath(tablePath))
+      Seq("idx_b"))
+      .mode("overwrite").parquet(idxPath(tablePath))
 
   /** One micro-batch merge (also callable for batch diff application).
     * A missing `seq` column is treated as all-zero (single-op-per-id
@@ -248,7 +245,7 @@ object StreamingIngest {
       readIdxBuckets(fs, tablePath).contains(idxBuckets)
     if (store != null && !idxHasData) {
       buildCellIndex(spark, tablePath, idxBuckets)
-      writeIdxMeta(fs, tablePath, idxBuckets)
+      writeIdxMeta(spark, tablePath, idxBuckets)
     }
     val hasIdx = idxHasData
     // buckets the diffed ids hash into: driver-small (<= idxBuckets)
@@ -340,7 +337,7 @@ object StreamingIngest {
     val metaP = new org.apache.hadoop.fs.Path(idxPath(tablePath), "_meta.json")
     if (fs.exists(metaP)) fs.delete(metaP, false)
     val t0 = System.nanoTime()
-    merged.write.mode("overwrite")
+    LeafWrite.writer(merged).mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")   // per-write, no session leak
       .partitionBy("p_cell", "p_salt").parquet(tablePath)
     val writeSec = (System.nanoTime() - t0) / 1e9
@@ -352,7 +349,7 @@ object StreamingIngest {
     // overwrite leaves absent partitions alone)
     val remainingBuckets = idxMerged.select("idx_b").distinct()
       .collect().map(_.getInt(0)).toSet
-    idxMerged.write.mode("overwrite")
+    LeafWrite.writer(idxMerged).mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("idx_b").parquet(idxPath(tablePath))
     idBuckets.filterNot(remainingBuckets).foreach { b =>
@@ -362,7 +359,7 @@ object StreamingIngest {
     // index rewrite complete and consistent with the store: (re-)commit the
     // meta (it was dropped above as the crash guard; a fresh table's first
     // batch records its bucket count here too)
-    writeIdxMeta(fs, tablePath, idxBuckets)
+    writeIdxMeta(spark, tablePath, idxBuckets)
 
     // ---- snapshot lineage patch (only when the table HAS a log) --------------
     // rewritten leaves get fresh lineage; every parent leaf under an
@@ -484,7 +481,7 @@ object StreamingIngest {
             else Dedup.dropClusterDuplicates(docs,   // bootstrap: self-dedup
               Dedup.minhashLshPortable(docs, nGram, nHashes, bands,
                 threshold, maxBucket))
-          kept.write.mode("overwrite").parquet(s"$destDir/batch=$batchId")
+          LeafWrite.writer(kept).mode("overwrite").parquet(s"$destDir/batch=$batchId")
           if (hasIdx) Dedup.appendToDedupIndex(kept, indexDir)
           else Dedup.writeDedupIndex(kept, indexDir, nGram, nHashes, bands,
             buckets, maxBucket)

@@ -44,8 +44,8 @@ class PbfSourceSpec extends SparkFunSuite {
 
   test("file framing: header frame + data frames, zlib round-trip") {
     val fs = PbfCodec.frames(pbfBytes).toSeq
-    assert(fs.head._1 == "OSMHeader")
-    assert(fs.tail.forall(_._1 == "OSMData"))
+    assert(fs.head._1.blobType == "OSMHeader")
+    assert(fs.tail.forall(_._1.blobType == "OSMData"))
     // 1500 nodes / 8000 per block = 1 node block, 1 way block, 1 rel block
     assert(fs.size == 4)
   }
@@ -271,8 +271,8 @@ class PbfSourceSpec extends SparkFunSuite {
       PbfCodec.encodeNodeBlock)
     val bytes = bos.toByteArray
     val frames = PbfCodec.frames(bytes).toSeq
-    assert(frames.head._1 == "OSMHeader")
-    assert(frames.count(_._1 == "OSMData") == 4)   // ceil(35/10)
+    assert(frames.head._1.blobType == "OSMHeader")
+    assert(frames.count(_._1.blobType == "OSMData") == 4)   // ceil(35/10)
     val d = PbfCodec.decodeFile(bytes)
     assert(d.nodes.map(_.id) == nodes.map(_.id))
     assert(d.nodes.map(_.tags) == nodes.map(_.tags))
@@ -340,6 +340,42 @@ class PbfSourceSpec extends SparkFunSuite {
     val big = java.nio.ByteBuffer.allocate(4 + h.length).putInt(h.length).put(h).array()
     val ex = intercept[java.io.IOException](PbfCodec.decodeFile(big))
     assert(ex.getMessage.contains("datasize"), ex.getMessage)
+  }
+
+  test("corrupt payload: a flipped byte behind a valid header is an " +
+       "IOException naming the frame's offset, and on the split read also " +
+       "the file, with the decode failure as its cause") {
+    val good = pbfBytes
+    val starts = PbfSource.indexBlobs(spark, pbfFile(good)).map(_.start)
+    val Named = "(?s)corrupt PBF frame at offset (\\d+).*".r
+    def flipped(at: Int) = { val b = good.clone(); b(at) = (b(at) ^ 0xFF).toByte; b }
+    // offsets whose flip fails in a frame's payload, with that frame's start
+    val payloadFailures = (120 until math.min(5000, good.length)).flatMap { at =>
+      try { PbfCodec.decodeFile(flipped(at)); None }
+      catch {
+        case e: java.io.IOException =>
+          val offset = e.getMessage match {
+            case Named(o) => o.toLong
+            case m => fail(s"flip at $at: $m")
+          }
+          if (e.getCause == null) None       // a header field: framing checks
+          else {
+            assert(offset == starts.filter(_ <= at).max, s"flip at $at: ${e.getMessage}")
+            Some(at -> offset)
+          }
+      }
+    }
+    assert(payloadFailures.size > 1000, s"${payloadFailures.size} payload failures")
+    val picked = payloadFailures.groupBy(_._2).values.map(_.minBy(_._1)).toSeq
+    picked.foreach { case (at, offset) =>
+      val file = pbfFile(flipped(at))
+      val split = PbfSource.readPlanetSplit(spark, file)
+      val ex = try intercept[Exception](split.nodes.count()) finally split.unpersist()
+      val chain = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(t => t.isInstanceOf[java.io.IOException] && t.getCause != null &&
+          t.getMessage.contains(s"offset $offset of $file")),
+        s"flip at $at: ${chain.map(_.getMessage).mkString(" <- ")}")
+    }
   }
 
   test("a single-file split read runs a pinned number of Spark jobs " +
