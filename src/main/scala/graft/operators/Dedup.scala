@@ -487,7 +487,9 @@ object Dedup {
    * `maxBucket` drops degenerate corpus band buckets at BUILD time (same
    * discipline as [[capBuckets]]; 0 disables). Note the cap is then
    * per-side, not over the corpus+batch union as in the recompute path —
-   * with caps off the two paths are decision-identical (gated).
+   * with caps off the two paths are decision-identical (gated). A full
+   * rebuild ([[LeafWrite.writer]]'s overwrite policy): no bucket of a
+   * previous build survives.
    */
   def writeDedupIndex(corpus: DataFrame, path: String, nGram: Int = 3,
                       nHashes: Int = 4, bands: Int = 4, buckets: Int = 64,
@@ -500,11 +502,7 @@ object Dedup {
         .withColumn("idx_b",
           pmod(xxhash64(col("_b"), col("_k")), lit(buckets.toLong)).cast("int")),
       Seq("idx_b"))
-      .mode("overwrite")
-      // STATIC pin: a dynamic-mode rebuild over a shrunk corpus would only
-      // truncate touched buckets, resurrecting stale signatures
-      .option("partitionOverwriteMode", "static")
-      .parquet(path)
+      .mode("overwrite").parquet(path)
     IndexMeta.write(spark, dedupIdxMetaPath(path), Seq(
       "nGram" -> nGram, "nHashes" -> nHashes, "bands" -> bands,
       "buckets" -> buckets))
@@ -518,10 +516,9 @@ object Dedup {
 
   private def readDedupIndexMeta(spark: org.apache.spark.sql.SparkSession,
                                  path: String): (Int, Int, Int, Int) = {
-    val Seq(g, h, b, k) = IndexMeta.read(spark, dedupIdxMetaPath(path),
-      "dedup index meta", "writeDedupIndex",
-      Seq("nGram", "nHashes", "bands", "buckets"))
-    (g, h, b, k)
+    val m = IndexMeta.read(spark, dedupIdxMetaPath(path), "dedup index meta",
+      "writeDedupIndex")
+    (m.int("nGram"), m.int("nHashes"), m.int("bands"), m.int("buckets"))
   }
 
   /**

@@ -113,9 +113,9 @@ object ImageTable {
       approx_count_distinct(col("cell")).as("approx_cells"))
     val t0 = System.nanoTime()
     // the salt dimension already bounds per-file size for hot cells, so one
-    // file per leaf is right. Dynamic overwrite is a PER-WRITE option (not a
-    // session-conf mutation, which would silently leak into every later
-    // overwrite on the session)
+    // file per leaf is right. Dynamic overwrite is a PER-WRITE opt-in that
+    // overrides LeafWrite.writer's static pin (not a session-conf mutation,
+    // which would silently leak into every later overwrite on the session)
     LeafWrite.partitioned(observed, Seq("p_cell", "p_salt")).mode("overwrite")
       .option("partitionOverwriteMode", "dynamic").parquet(path)
     val writeSec = (System.nanoTime() - t0) / 1e9

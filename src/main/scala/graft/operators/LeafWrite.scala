@@ -14,8 +14,10 @@ import org.apache.spark.sql.functions.col
 /** The engine's one write seam. Its table, index and scratch writes, its
   * driver-side sidecars and its PBF part files go through here (the
   * streaming file sinks and the result dumps of the gate mains do not), for
-  * two reasons:
+  * three reasons:
   *
+  *  - The overwrite policy: an overwrite is a full rebuild ([[writer]])
+  *    unless the call site opts into replacing only the leaves it writes.
   *  - Shuffle layout of the Hive-partitioned writes: a write that
   *    `partitionBy`s some keys repartitions on the same keys first
   *    ([[byLeaf]]), so it writes one file per leaf.
@@ -54,8 +56,14 @@ object LeafWrite {
     df.repartition(df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
       keys.map(col): _*)
 
-  /** The writer of `df` through the seam, with no shuffle and no layout. */
-  def writer(df: DataFrame): DataFrameWriter[Row] = df.write.options(FsOptions)
+  /** The writer of `df` through the seam, with no shuffle and no layout.
+    * Overwrites are static: a rebuild replaces the whole target, where a
+    * session-wide `spark.sql.sources.partitionOverwriteMode=dynamic` would
+    * replace only the leaves it writes and keep every stale one. A write
+    * that replaces some leaves on purpose overrides the pin with
+    * `.option("partitionOverwriteMode", "dynamic")`. */
+  def writer(df: DataFrame): DataFrameWriter[Row] =
+    df.write.options(FsOptions).option("partitionOverwriteMode", "static")
 
   /** The Hive-partitioned write of `df` on `keys`: one file per leaf
     * ([[byLeaf]]), each sorted by `keys ++ sortBy` when `sortBy` is given. */

@@ -12,7 +12,7 @@ import org.apache.spark.storage.StorageLevel
   * count and the handle that frees them. Iterative and multi-consumer
   * operators read `df` instead of recomputing its lineage; `close()` (or
   * `scala.util.Using`) releases the blocks deterministically on every exit
-  * path. `Dataset.localCheckpoint(eager = true)` offers no such handle: its
+  * path. An eager `Dataset.localCheckpoint` offers no such handle: its
   * blocks answer neither `Dataset.unpersist` nor any deterministic release,
   * only the GC-driven ContextCleaner. */
 final class Materialized private (val df: DataFrame, val count: Long,

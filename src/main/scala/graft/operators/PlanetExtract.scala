@@ -387,7 +387,7 @@ object PlanetExtract {
       spark.read.parquet(s"$path/ways"),
       spark.read.parquet(s"$path/relations"),
       if (IndexMeta.exists(spark, meta))
-        Some(IndexMeta.read(spark, meta, "planet meta", "planet", Seq("pBits")).head)
+        Some(IndexMeta.read(spark, meta, "planet meta", "writeTables").int("pBits"))
       else None)
   }
 

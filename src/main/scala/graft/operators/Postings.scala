@@ -75,7 +75,7 @@ object Postings {
 
   private def writeMeta(spark: SparkSession, path: String, buckets: Int,
                         nDocs: Long, totalLen: Long): Unit =
-    IndexMeta.writeL(spark, metaPath(path), Seq("buckets" -> buckets.toLong,
+    IndexMeta.write(spark, metaPath(path), Seq("buckets" -> buckets,
       "n_docs" -> nDocs, "total_len" -> totalLen))
 
   private def doclenStats(dl: DataFrame): (Long, Long) = {
@@ -83,15 +83,13 @@ object Postings {
     (r.getLong(0), r.getLong(1))
   }
 
-  /** Build (overwrite) the postings index. The writer pins STATIC
-    * partition-overwrite mode: under a session-wide dynamic mode a
-    * rebuild over a shrunk corpus would only truncate the buckets the new
-    * postings touch, resurrecting deleted documents from the rest.
-    * Alongside the postings land the `_doclen` side table and the corpus
-    * counters (`n_docs`, `total_len`) in the meta sidecar — the length-
-    * normalization statistics [[searchBm25]] needs, maintained here so a
-    * ranked probe NEVER scans the corpus (or even the full doclen table)
-    * for them. Write order is commit-safe: the root overwrite wipes the
+  /** Build (overwrite) the postings index: a full rebuild, by
+    * [[LeafWrite.writer]]'s overwrite policy, so a rebuild over a shrunk
+    * corpus keeps no bucket of the previous one. Alongside the postings
+    * land the `_doclen` side table and the corpus counters (`n_docs`,
+    * `total_len`) in the meta sidecar — the length-normalization
+    * statistics [[searchBm25]] needs, maintained here so a ranked probe
+    * NEVER scans the corpus (or even the full doclen table) for them. Write order is commit-safe: the root overwrite wipes the
     * directory (including any previous sidecars), doclen and meta follow
     * — a crash mid-build leaves a store without meta, which every probe
     * refuses. */
@@ -106,9 +104,7 @@ object Postings {
     // ride the doclen write as observe() metrics instead of a separate
     // aggregation job (round 6: build cost drops from 4 jobs to 2)
     LeafWrite.partitioned(postingsFrame(docs, buckets, textCol), Seq("w_b"))
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "static")
-      .parquet(path)
+      .mode("overwrite").parquet(path)
     val stored = spark.read.schema(PostingsSchema).parquet(path)
     val obs = new org.apache.spark.sql.Observation()
     writeDoclen(doclenFrame(docs, stored, buckets)
@@ -136,20 +132,19 @@ object Postings {
   def appendToPostingsIndex(docs: DataFrame, path: String,
                             textCol: String = "text"): Unit = {
     val spark = docs.sparkSession
-    val Seq(buckets, n0, tot0) = IndexMeta.readL(spark, metaPath(path),
-      "postings meta", "writePostingsIndex", Seq("buckets", "n_docs", "total_len"))
+    val (buckets, n0, tot0) = indexStats(spark, path)
     Using.resource(materialize(
-        LeafWrite.byLeaf(postingsFrame(docs, buckets.toInt, textCol), "w_b"))) { batchPf =>
+        LeafWrite.byLeaf(postingsFrame(docs, buckets, textCol), "w_b"))) { batchPf =>
       val pf = batchPf.df
       LeafWrite.writer(pf).mode("append").partitionBy("w_b").parquet(path)
       // batch counters ride the doclen write as observe() metrics — no
       // second materialization of the doclen frame (round 6)
       val obs = new org.apache.spark.sql.Observation()
-      writeDoclen(doclenFrame(docs, pf, buckets.toInt)
+      writeDoclen(doclenFrame(docs, pf, buckets)
         .observe(obs, count(lit(1)).as("n"),
           coalesce(sum("dl"), lit(0L)).as("tot")), path)
       val m = obs.get
-      writeMeta(spark, path, buckets.toInt, n0 + m("n").asInstanceOf[Long],
+      writeMeta(spark, path, buckets, n0 + m("n").asInstanceOf[Long],
         tot0 + m("tot").asInstanceOf[Long])
     }
   }
@@ -158,10 +153,6 @@ object Postings {
     * sidecar is present) — the bootstrap test for online loops. */
   def hasPostingsIndex(spark: SparkSession, path: String): Boolean =
     IndexMeta.exists(spark, metaPath(path))
-
-  private def readMetaBuckets(spark: SparkSession, path: String): Int =
-    IndexMeta.read(spark, metaPath(path), "postings meta",
-      "writePostingsIndex", Seq("buckets")).head
 
   /** Maintenance: rewrite the index in place, collapsing the small files
     * accumulated by [[appendToPostingsIndex]] batches — hash-partitioning
@@ -175,7 +166,7 @@ object Postings {
   def compactPostingsIndex(spark: SparkSession, path: String): Unit = {
     // refuses non-index dirs AND supplies the meta the root-overwrite is
     // about to delete — it is re-written after the data lands
-    val buckets = readMetaBuckets(spark, path)
+    val buckets = indexStats(spark, path)._1
     val cur = spark.read.schema(PostingsSchema).parquet(path)
     Using.Manager { use =>
       val frozen = use(materialize(cur)).df
@@ -187,8 +178,7 @@ object Postings {
       LeafWrite.partitioned(
           frozen.dropDuplicates("word", "doc_id"),  // physical replay repair
           Seq("w_b"), sortBy = Seq("word", "doc_id"))
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "static")
+        .mode("overwrite")   // a full rebuild: LeafWrite.writer's overwrite policy
         .parquet(path)
       // postings-orphan repair: a crash between an append's postings
       // commit and its doclen write leaves docs with postings but no
@@ -222,7 +212,7 @@ object Postings {
   private[graft] def termPostings(spark: SparkSession, path: String,
                                   terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty, "at least one query term")
-    val buckets = readMetaBuckets(spark, path)
+    val buckets = indexStats(spark, path)._1
     // bucket ids evaluated DRIVER-SIDE through the very catalyst
     // expressions the writer's pmod(xxhash64(word), buckets) column
     // compiles to — bit-exact by construction (same Expression classes,
@@ -304,8 +294,7 @@ object Postings {
   def searchBm25(spark: SparkSession, path: String, terms: Seq[String],
                  k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    val Seq(buckets, nDocs, totalLen) = IndexMeta.readL(spark, metaPath(path),
-      "postings meta", "writePostingsIndex", Seq("buckets", "n_docs", "total_len"))
+    val (buckets, nDocs, totalLen) = indexStats(spark, path)
     val avgdl = totalLen.toDouble / math.max(nDocs, 1L)
     val tp = termPostings(spark, path, terms.distinct)
     val dfs = tp.groupBy("word").agg(count(lit(1)).as("_df"))
@@ -343,8 +332,7 @@ object Postings {
     * advances them at-least-once too, until [[compactPostingsIndex]]
     * resynchronizes them from the deduplicated doclen census. */
   def indexStats(spark: SparkSession, path: String): (Int, Long, Long) = {
-    val Seq(b, n, t) = IndexMeta.readL(spark, metaPath(path), "postings meta",
-      "writePostingsIndex", Seq("buckets", "n_docs", "total_len"))
-    (b.toInt, n, t)
+    val m = IndexMeta.read(spark, metaPath(path), "postings meta", "writePostingsIndex")
+    (m.int("buckets"), m.long("n_docs"), m.long("total_len"))
   }
 }

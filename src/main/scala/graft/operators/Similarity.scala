@@ -20,44 +20,6 @@ import graft.operators.Materialized.materialize
  */
 object Similarity {
 
-  // ---- sidecar IO (the one implementation for every float sidecar here) ----
-
-  private def writeSidecar(df: DataFrame, path: String, name: String,
-                           json: String): Unit =
-    LeafWrite.writeFile(df.sparkSession, new org.apache.hadoop.fs.Path(path, name),
-      json.getBytes("UTF-8"))
-
-  private def readSidecar(spark: org.apache.spark.sql.SparkSession,
-                          path: String, name: String, store: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path, name)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"no $name at $path — not a $store store")
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-  }
-
-  private def jFloats(v: org.json4s.JValue): Array[Float] = {
-    import org.json4s._
-    v match {
-      case JArray(vs) => vs.map {
-        case JDouble(d) => d.toFloat
-        case JInt(i) => i.toFloat
-        case x => throw new IllegalArgumentException(s"bad float $x")
-      }.toArray
-      case x => throw new IllegalArgumentException(s"bad float list $x")
-    }
-  }
-
-  private def jFloatMatrix(v: org.json4s.JValue, what: String)
-      : Array[Array[Float]] = {
-    import org.json4s._
-    v match {
-      case JArray(rows) => rows.map(jFloats).toArray
-      case x => throw new IllegalArgumentException(s"bad $what $x")
-    }
-  }
-
   /** Exact cosine top-k for one query vector: scan + orderBy + limit
     * (Spark plans TakeOrderedAndProject — no full sort). */
   def bruteForceTopK(embs: DataFrame, query: Array[Float], k: Int): DataFrame =
@@ -191,28 +153,24 @@ object Similarity {
     * reads ONLY the nprobe list directories (PartitionFilters in the plan)
     * — the storage analogue of an inverted file, and the layout that makes
     * ivfTopK a pruned scan at 100 TB instead of a full pass. Centroids ride
-    * along as a tiny JSON sidecar (nLists x dim floats, driver-small). */
+    * along as a tiny JSON sidecar (nLists x dim floats, driver-small). A
+    * full rebuild ([[LeafWrite.writer]]'s overwrite policy): no list of a
+    * previous build survives. */
   def writeIvfIndex(assigned: DataFrame, centroids: Array[Array[Float]],
                     path: String): Unit = {
     // one file per list directory, not #tasks x #lists
-    LeafWrite.partitioned(assigned, Seq("list_id"))
-      .mode("overwrite")
-        // STATIC pin: under a session-wide dynamic mode a rebuild over a
-        // shrunk corpus would only truncate the lists the new build touches,
-        // resurrecting stale vectors (the writePostingsIndex hazard)
-        .option("partitionOverwriteMode", "static")
-        .parquet(path)
-    writeSidecar(assigned, path, "_centroids.json",
-      centroids.map(_.mkString("[", ",", "]")).mkString("[", ",", "]"))
+    LeafWrite.partitioned(assigned, Seq("list_id")).mode("overwrite").parquet(path)
+    IndexMeta.write(assigned.sparkSession, ivfMeta(path), centroids)
   }
+
+  private def ivfMeta(path: String) = new org.apache.hadoop.fs.Path(path, "_centroids.json")
 
   /** Read back a stored IVF index: (assigned rows, centroids). The
     * underscore-prefixed sidecar is invisible to the parquet scan. */
   def readIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String)
       : (DataFrame, Array[Array[Float]]) = {
-    val json = readSidecar(spark, path, "_centroids.json", "writeIvfIndex")
-    val centroids = jFloatMatrix(
-      org.json4s.jackson.JsonMethods.parse(json), "centroid json")
+    val centroids = IndexMeta.read(spark, ivfMeta(path), "IVF centroids", "writeIvfIndex")
+      .floatMatrix()
     (spark.read.parquet(path), centroids)
   }
 
@@ -309,12 +267,13 @@ object Similarity {
    * the raw embeddings stay wherever they live, while this index is
    * ~m bytes/vector and a probe reads `nprobe / nLists` of it as a
    * directory-pruned code-column scan ([[ivfPqTopK]]). Centroids and
-   * codebooks ride in a `_ivfpq_meta.json` sidecar (driver-small), so
-   * probes always use the writer's own parameters — the IndexMeta
-   * convention. Both builds are the PORTABLE recipes (md5-ordered seed
-   * selection, double argmin/argmax, first-win ties), so the entire
-   * index + probe is recomputable cross-engine from the embeddings table
-   * (gate q_embed_ivfpq).
+   * codebooks ride in a `_ivfpq_meta.json` sidecar (driver-small, through
+   * [[IndexMeta]]), so probes always use the writer's own parameters. A
+   * full rebuild ([[LeafWrite.writer]]'s overwrite policy). Both builds
+   * are the PORTABLE recipes (md5-ordered seed selection, double
+   * argmin/argmax, first-win ties), so the entire index + probe is
+   * recomputable cross-engine from the embeddings table (gate
+   * q_embed_ivfpq).
    */
   def writeIvfPqIndex(embs: DataFrame, path: String, nLists: Int = 8,
                       m: Int = 8, ksub: Int = 16, dim: Int = 64): Unit = {
@@ -331,33 +290,18 @@ object Similarity {
         .select((col("vec_id") +: (0 until m).map(s => col(s"code_$s"))) :+
           col("list_id"): _*),
       Seq("list_id"))
-      .mode("overwrite")
-        // STATIC pin: under a session-wide dynamic mode a rebuild over a
-        // shrunk corpus would only truncate the lists the new build touches,
-        // resurrecting stale vectors (the writePostingsIndex hazard)
-        .option("partitionOverwriteMode", "static")
-        .parquet(path)
-    writeSidecar(embs, path, "_ivfpq_meta.json",
-      "{\"centroids\":" +
-        cents.map(_.mkString("[", ",", "]")).mkString("[", ",", "]") +
-        ",\"codebooks\":" +
-        cbs.map(_.map(_.mkString("[", ",", "]")).mkString("[", ",", "]"))
-          .mkString("[", ",", "]") + "}")
+      .mode("overwrite").parquet(path)
+    IndexMeta.write(embs.sparkSession, ivfPqMeta(path),
+      Seq("centroids" -> cents, "codebooks" -> cbs))
   }
+
+  private def ivfPqMeta(path: String) = new org.apache.hadoop.fs.Path(path, "_ivfpq_meta.json")
 
   /** Read back a stored IVF+PQ index: (codes, centroids, codebooks). */
   def readIvfPqIndex(spark: org.apache.spark.sql.SparkSession, path: String)
       : (DataFrame, Array[Array[Float]], Array[Array[Array[Float]]]) = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val json = readSidecar(spark, path, "_ivfpq_meta.json", "writeIvfPqIndex")
-    val root = JsonMethods.parse(json)
-    val cents = jFloatMatrix(root \ "centroids", "centroids")
-    val cbs = root \ "codebooks" match {
-      case JArray(ss) => ss.map(jFloatMatrix(_, "codebook")).toArray
-      case x => throw new IllegalArgumentException(s"bad codebooks $x")
-    }
-    (spark.read.parquet(path), cents, cbs)
+    val m = IndexMeta.read(spark, ivfPqMeta(path), "IVF-PQ meta", "writeIvfPqIndex")
+    (spark.read.parquet(path), m.floatMatrix("centroids"), m.floatMatrices("codebooks"))
   }
 
   /** Probe a stored IVF+PQ index: rank centroids by query cosine on the
@@ -692,29 +636,19 @@ object Similarity {
       .select("vec_id", "cluster", "d2")
 
   /** Persist fitted integer centroids as a JSON sidecar (k x dim longs,
-    * driver-small — the IndexMeta convention: apply-side reads the
-    * writer's own parameters, divergence impossible). */
+    * driver-small, through [[IndexMeta]]: apply-side reads the writer's own
+    * parameters, divergence impossible). */
   def writeKmeansModel(spark: org.apache.spark.sql.SparkSession, path: String,
                        cents: Array[Array[Long]]): Unit =
-    LeafWrite.writeFile(spark, new org.apache.hadoop.fs.Path(path, "_kmeans_model.json"),
-      cents.map(_.mkString("[", ",", "]")).mkString("[", ",", "]").getBytes("UTF-8"))
+    IndexMeta.write(spark, kmeansMeta(path), cents)
+
+  private def kmeansMeta(path: String) =
+    new org.apache.hadoop.fs.Path(path, "_kmeans_model.json")
 
   /** Read back a stored k-means model ([[writeKmeansModel]]). */
   def readKmeansModel(spark: org.apache.spark.sql.SparkSession, path: String)
-      : Array[Array[Long]] = {
-    import org.json4s._
-    val json = readSidecar(spark, path, "_kmeans_model.json", "writeKmeansModel")
-    org.json4s.jackson.JsonMethods.parse(json) match {
-      case JArray(rows) => rows.map {
-        case JArray(vs) => vs.map {
-          case JInt(i) => i.toLong
-          case x => throw new IllegalArgumentException(s"bad centroid value $x")
-        }.toArray
-        case x => throw new IllegalArgumentException(s"bad centroid row $x")
-      }.toArray
-      case x => throw new IllegalArgumentException(s"bad model json $x")
-    }
-  }
+      : Array[Array[Long]] =
+    IndexMeta.read(spark, kmeansMeta(path), "k-means model", "writeKmeansModel").longMatrix()
 
   // ---- embedding-label evaluation ---------------------------------------------
 

@@ -36,7 +36,15 @@ object SnapshotLog {
 
   private implicit val fmt: Formats = DefaultFormats
 
-  private def dir(tablePath: String): Path = Paths.get(tablePath, "_snapshots")
+  /** The local log directory of `tablePath`, resolved as Hadoop resolves
+    * the table's files (`file:/tmp/t` is `/tmp/t`). The log is local-only:
+    * any other scheme is refused, not written to the driver's disk. */
+  private def dir(tablePath: String): Path = {
+    val uri = new org.apache.hadoop.fs.Path(tablePath).toUri
+    require(uri.getScheme == null || uri.getScheme == "file",
+      s"SnapshotLog is local-only: cannot keep the log of $tablePath")
+    Paths.get(uri.getPath, "_snapshots")
+  }
 
   def latestId(tablePath: String): Option[Long] = {
     val p = dir(tablePath).resolve("LATEST")

@@ -1,13 +1,13 @@
 package graft.streaming
 
-import scala.util.Using
+import scala.util.{Try, Using}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.operators.{ImageTable, LeafWrite}
+import graft.operators.{ImageTable, IndexMeta, LeafWrite}
 import graft.operators.Materialized.materialize
 
 /**
@@ -153,20 +153,10 @@ object StreamingIngest {
   /** Index metadata sidecar: records the bucket count the on-disk index was
     * built with. A batch running with a DIFFERENT bucket count would hash
     * ids into buckets the entries don't live in and silently miss deletes —
-    * a mismatch (or missing meta) forces a rebuild instead. */
-  private def writeIdxMeta(spark: SparkSession, tablePath: String,
-                           buckets: Int): Unit =
-    LeafWrite.writeFile(spark, new org.apache.hadoop.fs.Path(idxPath(tablePath), "_meta.json"),
-      s"""{"buckets":$buckets}""".getBytes("UTF-8"))
-  private def readIdxBuckets(fs: org.apache.hadoop.fs.FileSystem,
-                             tablePath: String): Option[Int] = {
-    val p = new org.apache.hadoop.fs.Path(idxPath(tablePath), "_meta.json")
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-            finally in.close()
-    "\"buckets\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(s).map(_.group(1).toInt)
-  }
+    * a mismatch (or a missing or unreadable meta) forces a rebuild
+    * instead. */
+  private def idxMetaPath(tablePath: String) =
+    new org.apache.hadoop.fs.Path(idxPath(tablePath), "_meta.json")
 
   /** Drop the id -> p_cell index. Writers that rewrite the store OUTSIDE
     * the diff-merge path (full/partial re-ingest) MUST call this — a stale
@@ -242,10 +232,11 @@ object StreamingIngest {
     val hIdx = new org.apache.hadoop.fs.Path(idxPath(tablePath))
     def idxHasData = fs.exists(hIdx) && fs.listStatus(hIdx)
       .exists(st => st.isDirectory && st.getPath.getName.startsWith("idx_b=")) &&
-      readIdxBuckets(fs, tablePath).contains(idxBuckets)
+      Try(IndexMeta.read(spark, idxMetaPath(tablePath), "cell-index meta", "diffSync")
+        .int("buckets")).toOption.contains(idxBuckets)
     if (store != null && !idxHasData) {
       buildCellIndex(spark, tablePath, idxBuckets)
-      writeIdxMeta(spark, tablePath, idxBuckets)
+      IndexMeta.write(spark, idxMetaPath(tablePath), Seq("buckets" -> idxBuckets))
     }
     val hasIdx = idxHasData
     // buckets the diffed ids hash into: driver-small (<= idxBuckets)
@@ -287,94 +278,92 @@ object StreamingIngest {
         .drop("_pc", "_nsalt")
     // materialize the merge BEFORE overwriting: the partitions being
     // rewritten are also the read input (self-overwrite hazard — Spark
-    // refuses to overwrite a path it is scanning); localCheckpoint
-    // truncates the lineage so the write never re-reads the target.
+    // refuses to overwrite a path it is scanning); the materialized copy
+    // truncates the lineage so the write never re-reads the target, and
+    // is released on every exit path.
     // Memory-bounded by the AFFECTED partitions only, i.e. by diff
     // locality, not table size.
-    val merged = LeafWrite.byLeaf(
-      if (store == null) upserts
-      else store.where(col("p_cell").isin(affected: _*))
-        .join(ids, Seq("image_id"), "left_anti")   // drop deleted/superseded
-        .unionByName(upserts),
-      "p_cell", "p_salt").localCheckpoint(true)
+    Using.Manager { use =>
+      val merged = use(materialize(LeafWrite.byLeaf(
+        if (store == null) upserts
+        else store.where(col("p_cell").isin(affected: _*))
+          .join(ids, Seq("image_id"), "left_anti")   // drop deleted/superseded
+          .unionByName(upserts),
+        "p_cell", "p_salt"))).df
 
-    // index merge MATERIALIZED BEFORE the main overwrite (it reads both the
-    // old index and — through the upserts' salt lookup — the old store):
-    // new bucket content = old bucket rows minus diffed ids, plus the
-    // upserts' fresh (image_id, p_cell)
-    val upsertIdx = upserts
-      .select(col("image_id"), col("p_cell").cast("long").as("p_cell"))
-      .withColumn("idx_b", idxBucket(idxBuckets))
-    val idxMerged = LeafWrite.byLeaf(
-      if (!hasIdx) upsertIdx
-      else spark.read.parquet(idxPath(tablePath))
-        .where(col("idx_b").isin(idBuckets: _*))
-        .join(ids, Seq("image_id"), "left_anti")
-        .select(col("image_id"), col("p_cell").cast("long").as("p_cell"), col("idx_b"))
-        .unionByName(upsertIdx),
-      "idx_b").localCheckpoint(true)
+      // index merge MATERIALIZED BEFORE the main overwrite (it reads both the
+      // old index and — through the upserts' salt lookup — the old store):
+      // new bucket content = old bucket rows minus diffed ids, plus the
+      // upserts' fresh (image_id, p_cell)
+      val upsertIdx = upserts
+        .select(col("image_id"), col("p_cell").cast("long").as("p_cell"))
+        .withColumn("idx_b", idxBucket(idxBuckets))
+      val idxMerged = use(materialize(LeafWrite.byLeaf(
+        if (!hasIdx) upsertIdx
+        else spark.read.parquet(idxPath(tablePath))
+          .where(col("idx_b").isin(idBuckets: _*))
+          .join(ids, Seq("image_id"), "left_anti")
+          .select(col("image_id"), col("p_cell").cast("long").as("p_cell"), col("idx_b"))
+          .unionByName(upsertIdx),
+        "idx_b"))).df
 
-    // dynamic overwrite only rewrites LEAF partitions (p_cell, p_salt)
-    // PRESENT in `merged`: any affected leaf whose rows were all deleted
-    // or superseded is absent from the output and must be dropped
-    // explicitly, or its stale files would resurrect the deleted rows —
-    // note the granularity: a cell can keep salt bucket 0 alive while
-    // bucket 1 empties, so the cleanup must compare LEAVES, not cells
-    val remainingLeaves = merged.select("p_cell", "p_salt").distinct()
-      .collect()
-      .map(r => ImageTable.leafSpec(r.getAs[Number](0).longValue,
-        r.getAs[Number](1).longValue))
-      .toSet
-    // CRASH GUARD: the store overwrite below and the index rewrite further
-    // down are two non-atomic writes. Drop the index META first — a caller
-    // (batch diff application has no checkpoint replay) dying between the
-    // two writes then leaves an index that FAILS the meta check, forcing
-    // the next batch's bootstrap rebuild instead of trusting entries that
-    // no longer match the store (an id upserted by the crashed batch would
-    // be absent from the stale index, so a later delete of it would resolve
-    // no affected cell and silently survive). Meta is re-written only after
-    // the index rewrite succeeds.
-    val metaP = new org.apache.hadoop.fs.Path(idxPath(tablePath), "_meta.json")
-    if (fs.exists(metaP)) fs.delete(metaP, false)
-    val t0 = System.nanoTime()
-    LeafWrite.writer(merged).mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")   // per-write, no session leak
-      .partitionBy("p_cell", "p_salt").parquet(tablePath)
-    val writeSec = (System.nanoTime() - t0) / 1e9
-    val staleSpecs = ImageTable.dropStaleLeaves(fs, tablePath, affected, remainingLeaves)
-
-    // ---- index maintenance: rewrite ONLY the ids' hash buckets ---------------
-    // (idxMerged was checkpointed above, before the store files changed);
-    // a bucket whose rows all vanished is deleted explicitly (dynamic
-    // overwrite leaves absent partitions alone)
-    val remainingBuckets = idxMerged.select("idx_b").distinct()
-      .collect().map(_.getInt(0)).toSet
-    LeafWrite.writer(idxMerged).mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("idx_b").parquet(idxPath(tablePath))
-    idBuckets.filterNot(remainingBuckets).foreach { b =>
-      val d = new org.apache.hadoop.fs.Path(s"${idxPath(tablePath)}/idx_b=$b")
-      if (fs.exists(d)) fs.delete(d, true)
-    }
-    // index rewrite complete and consistent with the store: (re-)commit the
-    // meta (it was dropped above as the crash guard; a fresh table's first
-    // batch records its bucket count here too)
-    writeIdxMeta(spark, tablePath, idxBuckets)
-
-    // ---- snapshot lineage patch (only when the table HAS a log) --------------
-    // rewritten leaves get fresh lineage; every parent leaf under an
-    // affected cell that was not rewritten is dropped (staleSpecs, from the
-    // leaf cleanup above) — readCommitted then agrees with the on-disk state
-    // after the merge. Cost: one aggregate over the (localCheckpointed)
-    // affected partitions, not the table.
-    if (graft.plans.SnapshotLog.latestId(tablePath).isDefined) {
+      // CRASH GUARD: the store overwrite below and the index rewrite further
+      // down are two non-atomic writes. Drop the index META first — a caller
+      // (batch diff application has no checkpoint replay) dying between the
+      // two writes then leaves an index that FAILS the meta check, forcing
+      // the next batch's bootstrap rebuild instead of trusting entries that
+      // no longer match the store (an id upserted by the crashed batch would
+      // be absent from the stale index, so a later delete of it would resolve
+      // no affected cell and silently survive). Meta is re-written only after
+      // the index rewrite succeeds.
+      val metaP = idxMetaPath(tablePath)
+      if (fs.exists(metaP)) fs.delete(metaP, false)
+      val t0 = System.nanoTime()
+      LeafWrite.writer(merged).mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")   // replaces the leaves written
+        .partitionBy("p_cell", "p_salt").parquet(tablePath)
+      val writeSec = (System.nanoTime() - t0) / 1e9
+      // the lineage of `merged` names the leaves the merge keeps (and a
+      // logged table commits it). Dynamic overwrite only rewrites LEAF
+      // partitions (p_cell, p_salt) PRESENT in `merged`: any affected leaf
+      // whose rows were all deleted or superseded must be dropped
+      // explicitly, or its stale files would resurrect the deleted rows —
+      // a cell can keep salt bucket 0 alive while bucket 1 empties, so the
+      // cleanup compares LEAVES, not cells
       val newLineage = ImageTable.lineageOf(merged, writeSec)
-      graft.plans.SnapshotLog.commit(tablePath, "images", newLineage, Map(
-        "diff_batch" -> 1.0,
-        "affected_cells" -> affected.size.toDouble,
-        "rows_written" -> newLineage.map(_.rows).sum.toDouble,
-        "write_sec" -> writeSec), removed = staleSpecs)
-    }
+      val staleSpecs = ImageTable.dropStaleLeaves(fs, tablePath, affected,
+        newLineage.map(_.partition).toSet)
+
+      // ---- index maintenance: rewrite ONLY the ids' hash buckets -------------
+      // (idxMerged was materialized above, before the store files changed);
+      // a bucket whose rows all vanished is deleted explicitly (dynamic
+      // overwrite leaves absent partitions alone)
+      val remainingBuckets = idxMerged.select("idx_b").distinct()
+        .collect().map(_.getInt(0)).toSet
+      LeafWrite.writer(idxMerged).mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("idx_b").parquet(idxPath(tablePath))
+      idBuckets.filterNot(remainingBuckets).foreach { b =>
+        val d = new org.apache.hadoop.fs.Path(s"${idxPath(tablePath)}/idx_b=$b")
+        if (fs.exists(d)) fs.delete(d, true)
+      }
+      // index rewrite complete and consistent with the store: (re-)commit the
+      // meta (it was dropped above as the crash guard; a fresh table's first
+      // batch records its bucket count here too)
+      IndexMeta.write(spark, metaP, Seq("buckets" -> idxBuckets))
+
+      // ---- snapshot lineage patch (only when the table HAS a log) ------------
+      // rewritten leaves get fresh lineage; every parent leaf under an
+      // affected cell that was not rewritten is dropped (staleSpecs, from the
+      // leaf cleanup above) — readCommitted then agrees with the on-disk state
+      // after the merge
+      if (graft.plans.SnapshotLog.latestId(tablePath).isDefined)
+        graft.plans.SnapshotLog.commit(tablePath, "images", newLineage, Map(
+          "diff_batch" -> 1.0,
+          "affected_cells" -> affected.size.toDouble,
+          "rows_written" -> newLineage.map(_.rows).sum.toDouble,
+          "write_sec" -> writeSec), removed = staleSpecs)
+    }.get
   }
 
   /**

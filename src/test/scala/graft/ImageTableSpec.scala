@@ -447,4 +447,15 @@ class ImageTableSpec extends SparkFunSuite {
       }
     }
   }
+
+  test("a table path with a file: scheme keeps its snapshot log under the " +
+       "table, and no other scheme is taken") {
+    val dir = Files.createTempDirectory("graft_file_uri_").toString
+    ImageTable.ingest(Fixtures.localImages(300, withBytes = false).toDF(), "file:" + dir)
+    assert(new java.io.File(s"$dir/_snapshots/LATEST").isFile)
+    assert(ImageTable.readCommitted(spark, dir).count() == 300)
+    assert(ImageTable.readCommitted(spark, "file:" + dir).count() == 300)
+    val e = intercept[IllegalArgumentException](SnapshotLog.latestId("hdfs://namenode/t"))
+    assert(e.getMessage.contains("hdfs://namenode/t"))
+  }
 }

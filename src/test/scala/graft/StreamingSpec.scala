@@ -535,4 +535,39 @@ class StreamingSpec extends SparkFunSuite {
     assert(all.size == 100)
     assert(all == expect(w1 ++ w2))
   }
+
+  /** A table of `n` fixture rows whose diff index exists, and a diff batch
+    * for it that deletes one row and moves another. */
+  private def diffFixture(prefix: String, logged: Boolean) = {
+    import graft.operators.ImageTable
+    val table = Files.createTempDirectory(prefix).toString
+    val rows = Fixtures.localImages(200, withBytes = false)
+    ImageTable.ingest(rows.toDF(), table)
+    if (!logged) org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$table/_snapshots"))
+    def diff(items: Seq[(String, Fixtures.ImageRow)]) =
+      items.zipWithIndex.map { case ((op, r), i) =>
+        (op, i.toLong, r.image_id, r.bytes, r.w, r.h, r.fmt, r.caption, r.phash)
+      }.toDF("op", "seq", "image_id", "bytes", "w", "h", "fmt", "caption", "phash")
+    StreamingIngest.applyDiffBatch(diff(Seq("delete" -> rows(0))), table, ImageTable.DefaultPRes)
+    val moved = rows(2).copy(phash = Fixtures.imageRow(8100L, withBytes = false).phash)
+    (table, diff(Seq("delete" -> rows(1), "upsert" -> moved)))
+  }
+
+  test("a diff batch on a logged table leaves no persisted blocks behind") {
+    val (table, batch) = diffFixture("graft_diff_blocks_", logged = true)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    StreamingIngest.applyDiffBatch(batch, table, graft.operators.ImageTable.DefaultPRes)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"pinned after the batch: $leaked")
+    assert(graft.operators.ImageTable.readCommitted(spark, table).count() == 198)
+  }
+
+  test("a diff batch runs a fixed number of Spark jobs, logged or not") {
+    val pRes = graft.operators.ImageTable.DefaultPRes
+    val jobs = Seq(true, false).map { logged =>
+      val (table, batch) = diffFixture(s"graft_diff_jobs_${logged}_", logged)
+      logged -> WriteProbe.jobCount(spark)(StreamingIngest.applyDiffBatch(batch, table, pRes))
+    }.toMap
+    assert(jobs == Map(true -> 21, false -> 21), jobs)
+  }
 }
