@@ -86,17 +86,6 @@ object Plans {
         fmt(Similarity.axisKnnJoin(embs, k = 5, nTables = 8, bits = 8,
           probePred = col("vec_id") < 20, maxBucket = 0))
       },
-      "kNN candidate round (broadcast query-cell table + literal p_cell " +
-        "prefix predicate — expect PartitionFilters on p_cell)" -> {
-        val cells = graft.cells.CellIndex.disk(
-          graft.cells.CellIndex.xBin(c._1), graft.cells.CellIndex.yBin(c._2), 1)
-        val pCells = cells.map(graft.cells.CellIndex
-          .coarseCellOfGrid(_, ImageTable.DefaultPRes)).distinct.toSeq
-        val cand = cells.map(cc => (1L, c._1, c._2, cc)).toSeq
-        import spark.implicits._
-        fmt(table.where(col("p_cell").isin(pCells: _*))
-          .join(broadcast(cand.toDF("qid", "qlon", "qlat", "cell")), "cell"))
-      },
       "random-plane LSH knn join (expect ONE source scan per self-join side " +
         "— all 6 table signatures in a single projection, exploded to band " +
         "structs; was nTables scans per side via union. At scale the two " +
@@ -149,7 +138,8 @@ object Plans {
         fmt(TextOps.withLangId(spark.read.parquet(ddir))
           .select("doc_id", "lang_pred"))
       },
-      "table-driven kNN join round (expect: query-side disk explode via " +
+      "kNN candidate round, the one round of knn and knnJoinTable " +
+        "(expect: query-side disk explode via " +
         "two generates — never a crossJoin — equi-joined on (cell, p_cell) " +
         "with the Morton-derived query-side partition key; on a " +
         "partitioned store that join key is the dynamic-partition-pruning " +

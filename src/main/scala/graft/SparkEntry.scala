@@ -217,7 +217,7 @@ object SparkEntry {
         .where(geo.point_in_polygon(col("lon"), col("lat"), tri))
         .select("event_id").orderBy("event_id")
     }),
-    // ---- kNN (ring expansion + window top-k) ----------------------------------
+    // ---- kNN (knnJoinTable rounds + window top-k) ----------------------------
     "q_knn" -> ((s, dir) => {
       val pts = eventPoints(s, dir)
         .select(col("event_id").as("id"), col("lon"), col("lat"),

@@ -17,7 +17,8 @@ package graft.cells
  * On top we add a prefix-property quadtree: cellId(res) = Morton interleave
  * of the top `res` bits of the unsigned (x, y) coordinates. This supplies
  * everything the design uses H3/S2 for: bbox covers are bin-range unions,
- * ring(k) is neighbor arithmetic, containment is id-prefix testing.
+ * neighbours are bin arithmetic (SpatialJoin.neighbourCells), containment
+ * is id-prefix testing.
  */
 object CellIndex {
   final val GridBits  = 14                  // vex.c:25 GRID_BITS
@@ -206,42 +207,13 @@ object CellIndex {
     merged.toSeq
   }
 
-  // ---- ring / neighbors (kNN expansion) -------------------------------------
-
-  /** Cells at Chebyshev distance exactly k from (xbin, ybin) at the level-0
-    * grid, clamped to grid edges on the y axis, wrapped on x (longitude is
-    * periodic). k=0 -> the cell itself. */
-  def ring(xbin: Int, ybin: Int, k: Int): Array[Int] = {
-    if (k == 0) return Array(gridCell(xbin, ybin))
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Int]
-    @inline def add(xb: Int, yb: Int): Unit = {
-      if (yb >= 0 && yb < GridDim) {
-        val xw = ((xb % GridDim) + GridDim) % GridDim   // wrap longitude
-        buf += gridCell(xw, yb)
-      }
-    }
-    var d = -k
-    while (d <= k) {
-      add(xbin + d, ybin - k); add(xbin + d, ybin + k)  // top + bottom edges
-      d += 1
-    }
-    d = -k + 1
-    while (d <= k - 1) {
-      add(xbin - k, ybin + d); add(xbin + k, ybin + d)  // left + right edges
-      d += 1
-    }
-    buf.distinct.toArray
-  }
-
-  /** Disk: all cells with Chebyshev distance <= k. */
-  def disk(xbin: Int, ybin: Int, k: Int): Array[Int] =
-    (0 to k).flatMap(ring(xbin, ybin, _)).distinct.toArray
-
   // ---- distance (kNN metric) -------------------------------------------------
 
   /** Equirectangular approximation in meters (same local-projection idea as
     * the reference's decimeter projection, routable.c.experiment:90-110):
-    * dx scaled by cos(mean lat). Adequate for ranking at extract scale. */
+    * dx scaled by cos(mean lat). Adequate for ranking at extract scale.
+    * The scalar reference of the engine's one distance column,
+    * `geo.dist_meters`, which repeats these operations in this order. */
   final val MetersPerDegree = 111319.49079327358   // WGS84 equatorial deg
   def distMeters(lon1: Double, lat1: Double, lon2: Double, lat2: Double): Double = {
     val meanLat = math.toRadians((lat1 + lat2) / 2.0)
@@ -250,15 +222,5 @@ object CellIndex {
     val dx = dLon * math.cos(meanLat)
     val dy = lat2 - lat1
     math.sqrt(dx * dx + dy * dy) * MetersPerDegree
-  }
-
-  /** Worst-case meters spanned by one level-0 cell at latitude `lat` —
-    * used to bound kNN ring expansion. Cell height is constant (90/8192 deg
-    * of lat); width shrinks with cos(lat). Returns the diagonal. */
-  def cellDiagonalMeters(lat: Double): Double = {
-    val dLat = 90.0 / (GridDim / 2)        // y axis spans ±90 over 2^14 bins
-    val dLon = 180.0 / (GridDim / 2)
-    val w = dLon * math.cos(math.toRadians(math.min(89.9, math.abs(lat)))) max 1e-9
-    math.sqrt(w * w + dLat * dLat) * MetersPerDegree
   }
 }

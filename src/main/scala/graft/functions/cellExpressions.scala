@@ -419,6 +419,19 @@ object geo {
                      rects: Array[Double]): Column =
     if (rects.isEmpty) org.apache.spark.sql.functions.lit(false)
     else col(BinRects(ex(xlo), ex(xhi), ex(ylo), ex(yhi), rects))
+  /** Equirectangular meters from (lon1, lat1) to (lon2, lat2): the column
+    * form of [[CellIndex.distMeters]], the same operations in the same
+    * order, so the two agree bit for bit — the one distance of the kNN,
+    * the distance join and the routable-edge lengths. */
+  def dist_meters(lon1: Column, lat1: Column, lon2: Column, lat2: Column): Column = {
+    import org.apache.spark.sql.{functions => F}
+    val meanLat = F.radians((lat1 + lat2) / 2.0)
+    // shorter-arc longitude difference (antimeridian wrap)
+    val dLon = ((lon2 - lon1 + 540.0) % 360.0) - 180.0
+    val dx = dLon * F.cos(meanLat)
+    val dy = lat2 - lat1
+    F.sqrt(dx * dx + dy * dy) * CellIndex.MetersPerDegree
+  }
   /** Ring as columns (array<double> lons / lats) — the polygon-join refine. */
   def point_in_poly_cols(lon: Column, lat: Column,
                          px: Column, py: Column): Column =

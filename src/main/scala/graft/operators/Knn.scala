@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.util.Using
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,153 +12,36 @@ import graft.operators.Materialized.materialize
 /**
  * k-nearest-neighbor join: cell-disk expansion + distance-bounded top-k
  * window (the kNN shape the design derives from the reference's grid,
- * SURVEY.md §2.3 last row / §7.6).
+ * SURVEY.md §2.3 last row / §7.6). One implementation, [[knnJoinTable]];
+ * [[knn]] runs it on driver-side queries.
  *
- * Rounds r ∈ {1,4,16,64}: per-query disk(r) cells become a broadcast literal
- * table equi-joined on `cell`, and — when the table carries the coarse
- * partition column `p_cell` — a literal `p_cell IN (...)` predicate derived
- * from the same disk cells makes the probe a directory-PRUNED scan
- * (PartitionFilters + row-group skipping), never a full scan per round.
- * A query resolves when it has ≥ k candidates
- * whose k-th distance is below the geometric guarantee radius of disk(r)
- * (any point outside the disk is at least r·minCellExtent away). Stragglers
- * (sparse regions) fall back to one broadcast range join over the remaining
- * queries — rare by construction on skewed data.
+ * Rounds r ∈ {1,4,16,64} explode the unresolved queries into their disk(r)
+ * cells ([[SpatialJoin.neighbourCells]]) and equi-join them to the points.
+ * A query resolves when it has ≥ k candidates whose k-th distance is below
+ * the geometric guarantee radius of disk(r) (any point outside the disk is
+ * at least r·minCellExtent away). Stragglers (sparse regions) get one exact
+ * pass over the whole table — rare by construction on skewed data.
  *
- * Distance = equirectangular meters (CellIndex.distMeters), deterministic
- * ties broken by point id.
+ * Distance = equirectangular meters ([[graft.functions.geo.dist_meters]],
+ * the column form of CellIndex.distMeters), deterministic ties broken by
+ * point id.
  */
 object Knn {
 
   final case class Query(qid: Long, lon: Double, lat: Double)
 
-  /** Guaranteed minimum distance (meters) from a query anywhere in its cell
-    * to any point OUTSIDE disk(r): r full cell extents on the tighter axis.
-    * cos evaluated at the far edge of the disk (worst case). */
-  def diskBoundMeters(qlat: Double, r: Int): Double = {
-    val dLat = 180.0 / CellIndex.GridDim          // cell height in degrees
-    val dLon = 360.0 / CellIndex.GridDim
-    val farLat = math.min(89.99, math.abs(qlat) + (r + 1) * dLat)
-    val width = dLon * math.cos(math.toRadians(farLat))
-    r * math.min(dLat, width) * CellIndex.MetersPerDegree
-  }
+  /** Straggler-pass broadcast cap (rows): beyond it the exact pass runs as
+    * a partitioned cartesian instead of broadcasting the query side
+    * (~40-80 MB of UnsafeRows per 1M rows — sized for a modest driver). */
+  private val MaxBroadcastQueries = 1000000L
 
-  private def distCol = {
-    val meanLat = radians((col("qlat") + col("lat")) / 2)
-    // shorter-arc longitude difference — bit-identical to CellIndex.distMeters
-    val dLon = ((col("lon") - col("qlon") + 540.0) % 360.0) - 180.0
-    val dx = dLon * cos(meanLat)
-    val dy = col("lat") - col("qlat")
-    sqrt(dx * dx + dy * dy) * lit(CellIndex.MetersPerDegree)
-  }
+  private def distCol = graft.functions.geo.dist_meters(
+    col("qlon"), col("qlat"), col("lon"), col("lat"))
 
-  /**
-   * @param points DataFrame with (id: long, lon, lat, cell: int) — e.g. the
-   *   derived images table (with image_id projected to an id) or planet nodes.
-   *   If the frame also carries the coarse Morton partition column `p_cell`
-   *   (the images-table layout, ImageTable.derive), each round's probe adds
-   *   a LITERAL `p_cell IN (...)` predicate derived from the disk cells —
-   *   that is what turns the probe into a directory-pruned scan
-   *   (PartitionFilters in the plan) instead of a full-table scan per round.
-   * @param pRes resolution of the `p_cell` column when present (the
-   *   ImageTable.DefaultPRes layout is 5).
-   * @param maxCandRows cap on broadcast candidate rows per probe job (disk
-   *   cells are driver-materialized); rounds needing more are chunked.
-   * @return (qid, id, dist, rank) — exactly k rows per query (fewer iff the
-   *   whole table has < k rows).
-   */
-  def knn(points: DataFrame, queries: Seq[Query], k: Int,
-          pRes: Int = 5, maxCandRows: Long = 4000000L): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    require(k >= 1)
-    val hasPCell = points.columns.contains("p_cell")
-    val w = Window.partitionBy("qid").orderBy(col("dist"), col("id"))
-
-    var unresolved = queries
-    // kNN results are Q*k rows — inherently driver-small (the queries came
-    // from the driver). Each round's result is collected ONCE; nothing is
-    // recomputed when the returned DataFrame is consumed repeatedly.
-    val resolvedRows = List.newBuilder[(Long, Long, Double, Int)]
-    def drain(df: DataFrame): Unit =
-      df.collect().foreach(r => resolvedRows +=
-        ((r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))))
-
-    // the r=64 round (disk = 129^2 = ~16.6k cells/query, still a broadcast
-    // literal + pruned scan) exists to keep genuinely sparse queries OFF the
-    // exact full-scan fallback: a query that is unresolved past r=64 has no
-    // neighbor within ~64 cell extents, which on any real dataset is a
-    // handful of queries, so the remaining fallback is a bounded rarity.
-    // Candidate-table cap: the disk cells are DRIVER-materialized and
-    // broadcast, so each PROBE is bounded to maxCandRows rows. A round
-    // whose |unresolved| x (2r+1)^2 exceeds the cap is CHUNKED into
-    // cap-sized probe jobs (at r=1 the chunk holds ~444k queries, so huge
-    // query sets still resolve through the cheap pruned path); only when a
-    // round would need more than maxChunks probes is it skipped — those
-    // queries fall through to later rounds or the bounded distributed
-    // fallback instead of OOMing the driver or flooding the scheduler.
-    val maxChunks = 16
-    for (r <- Seq(1, 4, 16, 64) if unresolved.nonEmpty) {
-      val diskSize = (2L * r + 1) * (2L * r + 1)
-      val chunkLen = math.max(1L, maxCandRows / diskSize).toInt
-      val nChunks = (unresolved.size.toLong + chunkLen - 1) / chunkLen
-      if (nChunks <= maxChunks) {
-        val resolvedThisRound = Set.newBuilder[Long]
-        for (chunk <- unresolved.grouped(chunkLen)) {
-          val diskCells = chunk.map { q =>
-            q -> CellIndex.disk(CellIndex.xBin(q.lon), CellIndex.yBin(q.lat), r)
-          }
-          val cand = diskCells.flatMap { case (q, cells) =>
-            cells.map(c => (q.qid, q.lon, q.lat, c))
-          }.toDF("qid", "qlon", "qlat", "cell")
-          // partition pruning: the disk cells' coarse Morton prefixes as a
-          // literal predicate — Catalyst turns it into PartitionFilters, so
-          // the probe scans only the touched directories, never the whole
-          // table
-          val probe =
-            if (!hasPCell) points
-            else {
-              val pCells = diskCells.iterator.flatMap(_._2)
-                .map(c => CellIndex.coarseCellOfGrid(c, pRes)).toSeq.distinct
-              points.where(col("p_cell").isin(pCells: _*))
-            }
-          val topk = probe
-            .join(broadcast(cand), "cell")
-            .withColumn("dist", distCol)
-            .withColumn("rank", row_number().over(w))
-            .where(col("rank") <= k)
-            .select(col("qid"), col("qlat"), col("id"), col("dist"), col("rank"))
-            .collect()                       // one evaluation per chunk
-          // resolution check: k-th neighbor inside the guarantee radius
-          val byQ = topk.groupBy(_.getLong(0))
-          val resolved = byQ.collect {
-            case (qid, rows) if rows.length >= k &&
-              rows.map(_.getDouble(3)).max <= diskBoundMeters(rows.head.getDouble(1), r) => qid
-          }.toSet
-          if (resolved.nonEmpty) {
-            topk.filter(r0 => resolved(r0.getLong(0))).foreach(r0 => resolvedRows +=
-              ((r0.getLong(0), r0.getLong(2), r0.getDouble(3), r0.getInt(4))))
-            resolvedThisRound ++= resolved
-          }
-        }
-        val resolvedSet = resolvedThisRound.result()
-        if (resolvedSet.nonEmpty)
-          unresolved = unresolved.filterNot(q => resolvedSet(q.qid))
-      }
-    }
-
-    if (unresolved.nonEmpty) {
-      // fallback: exact top-k over the full table for the stragglers
-      val qdf = unresolved.map(q => (q.qid, q.lon, q.lat)).toDF("qid", "qlon", "qlat")
-      drain(points.crossJoin(broadcast(qdf))
-        .withColumn("dist", distCol)
-        .withColumn("rank", row_number().over(w))
-        .where(col("rank") <= k)
-        .select("qid", "id", "dist", "rank"))
-    }
-
-    resolvedRows.result().toDF("qid", "id", "dist", "rank")
-  }
+  /** [[knnJoinTable]] over a driver-side query list. */
+  def knn(points: DataFrame, queries: Seq[Query], k: Int, pRes: Int = 5): DataFrame =
+    knnJoinTable(points,
+      points.sparkSession.createDataFrame(queries).toDF("qid", "qlon", "qlat"), k, pRes)
 
   /** Morton spread of the low 16 bits into even bit positions — the column
     * twin of CellIndex.spread16 (spec-enforced bit-identical). */
@@ -176,51 +59,50 @@ object Knn {
     shiftleft(spread16Col(shiftrightunsigned(xw, CellIndex.GridBits - res)), 1)
       .bitwiseOR(spread16Col(shiftrightunsigned(yb, CellIndex.GridBits - res)))
 
-  /** The disk guarantee radius as a column — the twin of
-    * [[diskBoundMeters]] (same expressions, same operation order). */
+  /** Guaranteed minimum distance (meters) from a query anywhere in its cell
+    * to any point OUTSIDE disk(r): r full cell extents on the tighter axis,
+    * with cos taken at the far edge of the disk (worst case). The far
+    * latitude is capped at the pole itself: a cap short of 90° overstates
+    * the column width of a disk that reaches past it, so the bound goes to
+    * ~0 there and such queries fall through to the exact pass. */
   private def boundCol(qlat: Column, r: Int): Column = {
     val dLat = 180.0 / CellIndex.GridDim
     val dLon = 360.0 / CellIndex.GridDim
-    val farLat = least(lit(89.99), abs(qlat) + (r + 1) * dLat)
+    val farLat = least(lit(90.0), abs(qlat) + (r + 1) * dLat)
     lit(r) * least(lit(dLat), lit(dLon) * cos(radians(farLat))) *
       lit(CellIndex.MetersPerDegree)
   }
 
   /**
-   * Dataset-native kNN JOIN: queries arrive as a DataFrame
-   * (qid, qlon, qlat) and are never driver-materialized — the shape for
-   * query sets too large for [[knn]]'s broadcast-literal rounds (whose
-   * chunking exhausts at ~7M queries and falls back to a full crossJoin).
+   * kNN JOIN: queries arrive as a DataFrame (qid, qlon, qlat) and are never
+   * driver-materialized.
    *
-   * Same guarantee-radius resolution as [[knn]], as filtered passes: each
-   * round r in {1,4,16,64} EXPLODES the still-unresolved queries into
-   * their disk(r) cells (two generates: dx x dy, longitude wrapped,
-   * latitude clamped — bit-identical to CellIndex.disk), equi-joins
-   * `points` on `cell`, takes the per-query distance top-k window, and
-   * resolves queries whose k-th distance is inside the disk guarantee
-   * radius. When the points frame carries the coarse partition column
-   * `p_cell`, the candidate's p_cell is derived on the query side (Morton
-   * column math) and added to the join keys — with a partitioned store
-   * that is the dynamic-partition-pruning shape (the scan skips
-   * directories no surviving query touches). Stragglers after r=64 get
-   * one exact pass — query side broadcast while broadcast-sized, a
-   * partitioned cartesian beyond that (bounded rarity by construction).
+   * Each round r in {1,4,16,64} explodes the still-unresolved queries into
+   * their disk(r) cells (two generates, [[SpatialJoin.neighbourCells]]),
+   * equi-joins `points` on `cell`, takes the per-query distance top-k
+   * window, and resolves queries whose k-th distance is inside the disk
+   * guarantee radius. When the points frame carries the coarse partition
+   * column `p_cell`, the candidate's p_cell is derived on the query side
+   * (Morton column math) and added to the join keys — with a partitioned
+   * store that is the dynamic-partition-pruning shape (the scan skips
+   * directories no surviving query touches). Stragglers after r=64 get one
+   * exact pass — query side broadcast while broadcast-sized, a partitioned
+   * cartesian beyond that (bounded rarity by construction).
    *
    * Round results land in one scratch parquet ([[Dedup.scratchResult]],
    * `knn_` prefix) and every per-round materialized block is released
    * deterministically (the connectedComponents discipline).
-   * Returns (qid, id, dist, rank) — exactly k rows per query (fewer iff
-   * the whole table has < k rows).
    *
-   * @param maxBroadcastQueries straggler-fallback broadcast cap (rows):
-   *   beyond it the exact pass runs as a partitioned cartesian instead of
-   *   broadcasting the query side (~40-80 MB of UnsafeRows per 1M rows —
-   *   sized for a modest driver, and a parameter because the right value
-   *   is deployment-specific).
+   * @param points (id: long, lon, lat, cell: int) — e.g. the derived images
+   *   table (with image_id projected to an id) or planet nodes, optionally
+   *   with the coarse Morton partition column `p_cell` (ImageTable.derive).
+   * @param pRes resolution of the `p_cell` column when present (the
+   *   ImageTable.DefaultPRes layout is 5).
+   * @return (qid, id, dist, rank) — exactly k rows per query (fewer iff the
+   *   whole table has < k rows).
    */
   def knnJoinTable(points: DataFrame, queries: DataFrame, k: Int,
-                   pRes: Int = 5,
-                   maxBroadcastQueries: Long = 1000000L): DataFrame = {
+                   pRes: Int = 5): DataFrame = {
     require(k >= 1)
     val spark = points.sparkSession
     val w = Window.partitionBy("qid").orderBy(col("dist"), col("id"))
@@ -257,7 +139,7 @@ object Knn {
         // memory-bounded, matching the contract that stragglers are the
         // exception, not the plan)
         val qside = un.df.select(col("qid"), col("qlon"), col("qlat"))
-        val qb = if (un.count <= maxBroadcastQueries) broadcast(qside) else qside
+        val qb = if (un.count <= MaxBroadcastQueries) broadcast(qside) else qside
         roundResults += norm(points.crossJoin(qb)
           .withColumn("dist", distCol)
           .withColumn("rank", row_number().over(w))
@@ -273,26 +155,17 @@ object Knn {
   }
 
   /** One [[knnJoinTable]] round's candidate top-k frame (lazy): the
-    * disk(r) explode of the unresolved queries (two generates, lon
-    * wrapped, lat clamped), equi-joined to `points` on `cell` — plus the
-    * Morton-derived `p_cell` key when the store carries it — with the
-    * per-query distance window. Factored out as the plan-evidence surface
-    * (PLANS.md) so the audited plan IS the executed plan. */
+    * disk(r) explode of the unresolved queries, equi-joined to `points` on
+    * `cell` — plus the Morton-derived `p_cell` key when the store carries
+    * it — with the per-query distance window. Factored out as the
+    * plan-evidence surface (PLANS.md) so the audited plan IS the executed
+    * plan. */
   private[graft] def roundTopK(points: DataFrame, un: DataFrame, r: Int,
                                k: Int, pRes: Int): DataFrame = {
     val hasPCell = points.columns.contains("p_cell")
     val w = Window.partitionBy("qid").orderBy(col("dist"), col("id"))
-    val qc0 = un
-      .withColumn("_qcell", graft.functions.geo.grid_cell(col("qlon"), col("qlat")))
-      .withColumn("_qx", shiftright(col("_qcell"), CellIndex.GridBits))
-      .withColumn("_qy", col("_qcell").bitwiseAND(lit(CellIndex.GridDim - 1)))
-      .withColumn("_dx", explode(sequence(lit(-r), lit(r))))
-      .withColumn("_dy", explode(sequence(lit(-r), lit(r))))
-      .withColumn("_yb", col("_qy") + col("_dy"))
-      .where(col("_yb").between(0, CellIndex.GridDim - 1))   // clamp lat
-      .withColumn("_xw", pmod(col("_qx") + col("_dx"), lit(CellIndex.GridDim)))
-      .withColumn("cell",
-        shiftleft(col("_xw"), CellIndex.GridBits).bitwiseOR(col("_yb")))
+    val qc0 = SpatialJoin.neighbourCells(un,
+      graft.functions.geo.grid_cell(col("qlon"), col("qlat")), lit(r), lit(r))
     val qc =
       if (!hasPCell) qc0.select("qid", "qlon", "qlat", "cell")
       else qc0.withColumn("p_cell", coarseCellCol(col("_xw"), col("_yb"), pRes))

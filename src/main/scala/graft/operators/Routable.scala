@@ -62,13 +62,9 @@ object Routable {
       .withColumn("seg", sum(when(col("is_vertex"), 1).otherwise(0))
         .over(w.rowsBetween(Window.unboundedPreceding, 0)))
       .where(col("nxt_node").isNotNull)
-    val meanLat = radians((col("lat") + col("nxt_lat")) / 2)
-    val dLon = ((col("nxt_lon") - col("lon") + 540.0) % 360.0) - 180.0
-    val dx = dLon * cos(meanLat)
-    val dy = col("nxt_lat") - col("lat")
     withNext
-      .withColumn("leg_m", sqrt(dx * dx + dy * dy) *
-        lit(graft.cells.CellIndex.MetersPerDegree))
+      .withColumn("leg_m", graft.functions.geo.dist_meters(
+        col("lon"), col("lat"), col("nxt_lon"), col("nxt_lat")))
       .groupBy("way_id", "seg")
       .agg(min_by(col("node_id"), col("pos")).as("src"),
            max_by(col("nxt_node"), col("pos")).as("dst"),

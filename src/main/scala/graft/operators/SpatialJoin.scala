@@ -20,13 +20,40 @@ import graft.cells.CellIndex
  *
  * Scale: the expansion factor is (2kx+1)(2ky+1) per left row — bounded and
  * data-independent for a fixed radius/latitude band; the join itself is a
- * plain equi-join so AQE/skew handling applies. Degenerate poles are
- * clamped; longitude wraps.
+ * plain equi-join so AQE/skew handling applies. Longitude wraps; latitude
+ * steps across the equator and stops at the poles ([[neighbourCells]]).
  */
 object SpatialJoin {
 
   private val cellHeightDeg = 180.0 / CellIndex.GridDim
   private val cellWidthDeg = 360.0 / CellIndex.GridDim
+
+  /** The grid cells within `kx` columns and `ky` rows of each row's cell
+    * `qcell` — the one neighbour-cell expansion of the distance join and
+    * the kNN rounds. One output row per neighbour, carrying its bins `_xw`
+    * and `_yb` and its packed `cell`; `kx` and `ky` may be per-row columns
+    * or literals. Longitude is cyclic. Latitude steps in latitude order:
+    * `CellIndex.bin` is the reference's unsigned shift, so ybin 0..8191
+    * runs from the equator north to the pole and 8192..16383 from the
+    * south pole up to the equator. `ybin xor 8192` is the row's index in
+    * latitude order; the walk crosses the equator (16383 ↔ 0) and is cut
+    * at the poles (8191 | 8192). */
+  private[operators] def neighbourCells(df: DataFrame, qcell: Column,
+                                        kx: Column, ky: Column): DataFrame = {
+    val half = lit(CellIndex.GridDim / 2)
+    df.withColumn("_qc", qcell)
+      .withColumn("_dx", explode(sequence(-kx, kx)))
+      .withColumn("_dy", explode(sequence(-ky, ky)))
+      .withColumn("_yl", col("_qc").bitwiseAND(lit(CellIndex.GridDim - 1))
+        .bitwiseXOR(half) + col("_dy"))
+      .where(col("_yl").between(0, CellIndex.GridDim - 1))
+      .withColumn("_yb", col("_yl").bitwiseXOR(half))
+      .withColumn("_xw", pmod(shiftright(col("_qc"), CellIndex.GridBits) + col("_dx"),
+        lit(CellIndex.GridDim)))
+      .withColumn("cell",
+        shiftleft(col("_xw"), CellIndex.GridBits).bitwiseOR(col("_yb")))
+      .drop("_qc", "_dx", "_dy", "_yl")
+  }
 
   /**
    * @param left  needs (lon, lat) + any payload columns; output keeps all,
@@ -59,29 +86,12 @@ object SpatialJoin {
 
     val l = left
       .withColumnRenamed("lon", "l_lon").withColumnRenamed("lat", "l_lat")
-      .withColumn("_lxbin", shiftright(
-        graft.functions.geo.grid_cell(col("l_lon"), col("l_lat")), CellIndex.GridBits))
-      .withColumn("_lybin",
-        graft.functions.geo.grid_cell(col("l_lon"), col("l_lat"))
-          .bitwiseAND(lit(CellIndex.GridDim - 1)))
-      .withColumn("_kx", kx)
-      .withColumn("_dx", explode(sequence(-col("_kx"), col("_kx"))))
-      .withColumn("_dy", explode(sequence(lit(-ky), lit(ky))))
-      .withColumn("_ybin", col("_lybin") + col("_dy"))
-      .where(col("_ybin") >= 0 && col("_ybin") < CellIndex.GridDim) // lat clamp
-      .withColumn("_xbin",
-        pmod(col("_lxbin") + col("_dx"), lit(CellIndex.GridDim)))   // lon wrap
-      .withColumn("cell",
-        shiftleft(col("_xbin"), CellIndex.GridBits).bitwiseOR(col("_ybin")).cast("int"))
-      .drop("_lxbin", "_lybin", "_kx", "_dx", "_dy", "_xbin", "_ybin")
-
-    val joined = l.join(right, "cell")
-    val meanLat = radians((col("l_lat") + col("lat")) / 2)
-    val dLon = ((col("lon") - col("l_lon") + 540.0) % 360.0) - 180.0
-    val dx = dLon * cos(meanLat)
-    val dy = col("lat") - col("l_lat")
-    joined
-      .withColumn("dist_m", sqrt(dx * dx + dy * dy) * lit(CellIndex.MetersPerDegree))
+    neighbourCells(l, graft.functions.geo.grid_cell(col("l_lon"), col("l_lat")),
+        kx, lit(ky))
+      .drop("_xw", "_yb")
+      .join(right, "cell")
+      .withColumn("dist_m", graft.functions.geo.dist_meters(
+        col("l_lon"), col("l_lat"), col("lon"), col("lat")))
       .where(col("dist_m") <= radiusMeters)
   }
 

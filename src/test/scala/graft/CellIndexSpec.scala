@@ -5,7 +5,7 @@ import graft.cells.CellIndex._
 
 /** Bit-compat tests for the semantics kernel (SURVEY.md §5 item 1):
   * quantization vectors incl. C-cast truncation edges, unsigned binning
-  * wraparound, Morton prefix property, cover correctness, ring geometry.
+  * wraparound, Morton prefix property, cover correctness, distance.
   * Property-style checks run over seeded deterministic samples. */
 class CellIndexSpec extends AnyFunSuite {
 
@@ -181,37 +181,9 @@ class CellIndexSpec extends AnyFunSuite {
     }
   }
 
-  test("ring(k) has the right cardinality and distance") {
-    val (xb, yb) = (1000, 9000)
-    assert(ring(xb, yb, 0).toSeq == Seq(gridCell(xb, yb)))
-    assert(ring(xb, yb, 1).length == 8)
-    assert(ring(xb, yb, 3).length == 24)
-    ring(xb, yb, 3).foreach { c =>
-      val dx = math.abs(cellX(c) - xb); val dy = math.abs(cellY(c) - yb)
-      assert(math.max(math.min(dx, GridDim - dx), dy) == 3)
-    }
-    assert(disk(xb, yb, 2).length == 25)
-  }
-
-  test("ring wraps longitude, clamps latitude") {
-    val top = ring(0, 16383, 1)      // at the north edge, x seam
-    assert(top.forall(c => cellY(c) <= 16383))
-    assert(top.length == 5)          // 3 below + 2 beside, none above
-    assert(top.contains(gridCell(16383, 16383)))  // wrapped west neighbor
-  }
-
   test("distMeters sanity: 1 deg lat ~ 111.3 km; lon shrinks with cos(lat)") {
     assert(math.abs(distMeters(0, 0, 0, 1) - 111319.5) < 1)
     val dLonAt60 = distMeters(10, 60, 11, 60)
     assert(math.abs(dLonAt60 - 111319.5 * math.cos(math.toRadians(60))) < 60)
-  }
-
-  test("cellDiagonalMeters bounds the true diagonal of any cell at that lat") {
-    samples(500, 9L)(r => lonLat(r)) { case (lon, lat0) =>
-      val lat = math.min(89.0, math.abs(lat0))  // stay off the pole
-      val d = distMeters(lon, lat,
-        math.min(180.0, lon + 180.0 / 8192), math.min(90.0, lat + 90.0 / 8192))
-      assert(d <= cellDiagonalMeters(lat) * 1.01)
-    }
   }
 }

@@ -362,38 +362,27 @@ class ImageTableSpec extends SparkFunSuite {
     val k = 10
     val pts = table.select(col("image_id"), col("lon"), col("lat"), col("cell"))
       .withColumn("id", expr("cast(substring(image_id, 5) as long)"))
-    val got = Knn.knn(pts, queries, k).collect()
-      .groupBy(_.getLong(0))
-      .view.mapValues(_.sortBy(_.getInt(3)).map(_.getLong(1)).toSeq).toMap
     val coords = rows.map { r =>
       (r.image_id.stripPrefix("img_").toLong,
        CellIndex.getLon(CellIndex.unpackX(r.phash)),
        CellIndex.getLat(CellIndex.unpackY(r.phash)))
     }
-    queries.foreach { q =>
-      val brute = coords.map { case (id, lon, lat) =>
+    val brute = queries.map { q =>
+      q.qid -> coords.map { case (id, lon, lat) =>
         (id, CellIndex.distMeters(q.lon, q.lat, lon, lat))
       }.sortBy { case (id, d) => (d, id) }.take(k).map(_._1)
-      assert(got(q.qid) == brute, s"qid=${q.qid}")
-    }
-    // a candidate cap small enough to force CHUNKED rounds (each probe job
-    // bounded, several per round) must return the identical neighbor lists
-    val chunked = Knn.knn(pts, queries, k, maxCandRows = 40).collect()
-      .groupBy(_.getLong(0))
-      .view.mapValues(_.sortBy(_.getInt(3)).map(_.getLong(1)).toSeq).toMap
-    assert(chunked == got, "chunked rounds diverged from unchunked")
-
-    // the Dataset-native kNN JOIN (queries as a table, never driver-
-    // materialized) must return the identical neighbor lists — both on the
-    // plain frame and on a stored p_cell-partitioned table (the derived
-    // p_cell join-key path)
-    val qdf = queries.map(q => (q.qid, q.lon, q.lat)).toDF("qid", "qlon", "qlat")
-    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    }.toMap
     def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .groupBy(_.getLong(0))
       .view.mapValues(_.sortBy(_.getInt(3)).map(_.getLong(1)).toSeq).toMap
-    assert(asMap(Knn.knnJoinTable(pts, qdf, k)) == got,
-      "knnJoinTable diverged from knn")
+    assert(asMap(Knn.knn(pts, queries, k)) == brute, "knn")
+
+    // the query set as a table, on the plain frame and on a stored
+    // p_cell-partitioned table (the derived p_cell join-key path); no
+    // block stays pinned after the call
+    val qdf = queries.map(q => (q.qid, q.lon, q.lat)).toDF("qid", "qlon", "qlat")
+    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    assert(asMap(Knn.knnJoinTable(pts, qdf, k)) == brute, "knnJoinTable")
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- pinnedBefore
     assert(leaked.isEmpty, s"knnJoinTable pinned: $leaked")
     val storeDir = Files.createTempDirectory("graft_knnjt_").toString
@@ -401,7 +390,7 @@ class ImageTableSpec extends SparkFunSuite {
       .repartition(col("p_cell"))
       .write.mode("overwrite").partitionBy("p_cell").parquet(storeDir)
     assert(asMap(Knn.knnJoinTable(spark.read.parquet(storeDir), qdf, k, pRes = 3))
-      == got, "knnJoinTable over the stored p_cell table diverged")
+      == brute, "knnJoinTable over the stored p_cell table")
   }
 
   test("knnJoinTable runs a fixed number of Spark jobs") {
@@ -414,21 +403,15 @@ class ImageTableSpec extends SparkFunSuite {
     assert(WriteProbe.jobCount(spark)(Knn.knnJoinTable(pts, qdf, k = 10)) == 15)
   }
 
-  test("knnJoinTable equals knn on a randomized 40-query cloud (seeded)") {
+  test("knn over driver-side queries runs a fixed number of Spark jobs") {
+    // the q_knn gate's shape: three driver queries, k = 10, a frame of
+    // (id, lon, lat, cell) without p_cell
+    val queries = Seq(Knn.Query(1, 50.005, 25.005), Knn.Query(2, 150.005, 70.005),
+      Knn.Query(3, 10.005, 75.005))
     val pts = table.select(col("image_id"), col("lon"), col("lat"), col("cell"))
       .withColumn("id", expr("cast(substring(image_id, 5) as long)"))
-    val rnd = new scala.util.Random(7)
-    val queries = (1 to 40).map(i =>
-      Knn.Query(i.toLong, rnd.nextDouble() * 170 + 1, rnd.nextDouble() * 80 + 1))
-    val k = 5
-    def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .groupBy(_.getLong(0))
-      .view.mapValues(_.sortBy(_.getInt(3)).map(_.getLong(1)).toSeq).toMap
-    val viaSeq = asMap(Knn.knn(pts, queries, k))
-    val qdf = queries.map(q => (q.qid, q.lon, q.lat)).toDF("qid", "qlon", "qlat")
-    val viaTable = asMap(Knn.knnJoinTable(pts, qdf, k))
-    assert(viaTable == viaSeq)
-    assert(viaTable.size == 40 && viaTable.values.forall(_.size == k))
+    pts.count()
+    assert(WriteProbe.jobCount(spark)(Knn.knn(pts, queries, k = 10)) == 15)
   }
 
   test("coarseCellCol is bit-identical to CellIndex.coarseCellOfGrid") {

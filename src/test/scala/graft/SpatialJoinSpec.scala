@@ -55,6 +55,21 @@ class SpatialJoinSpec extends SparkFunSuite {
     assert(expected.exists { case (ai, bi) => ai == 1L && bi == 10L })
   }
 
+  test("distanceJoin finds pairs across the equator, from either side") {
+    // ybin 0 lies just north of the equator and 16383 just south, so the
+    // two points sit in neighbouring rows whose bins are 16383 apart
+    val north = Seq((1L, 10.0, 0.001))
+    val south = Seq((2L, 10.0, -0.001))
+    def pairs(a: Seq[(Long, Double, Double)], b: Seq[(Long, Double, Double)]) =
+      SpatialJoin.distanceJoin(a.toDF("a_id", "lon", "lat"),
+        b.toDF("b_id", "lon", "lat")
+          .withColumn("cell", graft.functions.geo.grid_cell(col("lon"), col("lat"))),
+        3000.0).collect().map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"))).toSet
+    assert(CellIndex.distMeters(10.0, 0.001, 10.0, -0.001) < 3000.0)
+    assert(pairs(north, south) == Set((1L, 2L)))
+    assert(pairs(south, north) == Set((2L, 1L)))
+  }
+
   test("rectJoin: exact pair set + overlap areas vs a brute-force oracle, " +
        "each pair emitted once, across cell sizes") {
     val rnd = new scala.util.Random(42)
